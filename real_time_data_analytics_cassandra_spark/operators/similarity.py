@@ -32,6 +32,11 @@ from real_time_data_analytics_cassandra_spark.operators.topk import (
     bounded_topk_per_key,
 )
 
+# Lloyd iterations of every driver-side k-means here.  _ivfpq_train's
+# coarse centers must equal kmeans_centroids' output bit for bit, so
+# both read this one default.
+KMEANS_MAX_ITER = 10
+
 
 def brute_force_topk(
     corpus: DataFrame,
@@ -347,7 +352,7 @@ def kmeans_centroids(
     vec_col: str = "embedding",
     n_cells: int | None = None,
     seed: int = 42,
-    max_iter: int = 10,
+    max_iter: int = KMEANS_MAX_ITER,
     train_cap: int = 4096,
 ) -> DataFrame:
     """Coarse IVF centroids trained driver-side on a BOUNDED sample —
@@ -431,7 +436,7 @@ def _train_sample(
     return np.stack(sample["v"].to_numpy())
 
 
-def _lloyd(pts, k: int, rs, max_iter: int = 10):
+def _lloyd(pts, k: int, rs, max_iter: int = KMEANS_MAX_ITER):
     """Seeded kmeans++ + Lloyd over a small in-memory numpy matrix —
     shared by the coarse-quantizer and PQ-codebook trainers (both
     train on bounded driver-side samples; see kmeans_centroids for
@@ -465,7 +470,7 @@ def pq_train_codebooks(
     n_codes: int = 16,
     seed: int = 42,
     train_cap: int = 4096,
-    max_iter: int = 10,
+    max_iter: int = KMEANS_MAX_ITER,
 ):
     """Product-quantization codebooks: split the (unit-normalized)
     vector into ``m`` contiguous subspaces and train an ``n_codes``-
@@ -751,7 +756,7 @@ def _ivfpq_train(
     import numpy as np
 
     centers, _probe_n, _pts = _kmeans_train(
-        corpus, id_col, vec_col, n_cells, seed, 10, train_cap
+        corpus, id_col, vec_col, n_cells, seed, KMEANS_MAX_ITER, train_cap
     )
     cell_ids = np.arange(len(centers), dtype=np.int64)
     # float32 round-trip kept: kmeans_centroids publishes centroids as
@@ -779,7 +784,12 @@ def _ivfpq_train(
     rs = np.random.RandomState(seed)
     books = np.stack(
         [
-            _lloyd(residuals[:, s * d_sub : (s + 1) * d_sub].copy(), n_codes, rs, 10)
+            _lloyd(
+                residuals[:, s * d_sub : (s + 1) * d_sub].copy(),
+                n_codes,
+                rs,
+                KMEANS_MAX_ITER,
+            )
             for s in range(m)
         ]
     )

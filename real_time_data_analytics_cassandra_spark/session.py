@@ -75,9 +75,10 @@ def get_spark(
     )
     # cluster-mode path for the same pin: executorEnv reaches the
     # Python workers on real executors (local mode is covered by the
-    # module-level os.environ defaults above)
-    for k in _WORKER_THREAD_PIN:
-        builder = builder.config(f"spark.executorEnv.{k}", os.environ[k])
+    # module-level os.environ defaults above; a var deleted since import
+    # falls back to its pin)
+    for k, pin in _WORKER_THREAD_PIN.items():
+        builder = builder.config(f"spark.executorEnv.{k}", os.environ.get(k, pin))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

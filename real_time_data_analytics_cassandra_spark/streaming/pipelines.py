@@ -377,35 +377,93 @@ def signup_purchase_interval_join(
     )
 
 
-def multicast_foreach_batch(events: DataFrame, out_dir: str, checkpoint_dir: str):
-    """Fan-out multicast (SURVEY.md ST7): one micro-batch feeds the
-    derived views, written atomically per batch — the exactly-once
-    replacement for the reference's per-event multi-table writes
-    (cassandra_subscriber.py:121-180).
+def cache_micro_batch(batch: DataFrame) -> DataFrame:
+    """Persist a micro-batch for the multicast's three writes, as ONE
+    partition when its estimated size (the optimized plan's
+    ``sizeInBytes``) fits in one
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` — the size AQE
+    would coalesce the deltas' shuffles down to anyway.  A one-partition
+    child already satisfies the window's and the groupBy's required
+    distribution, so neither plans an Exchange.  A bigger batch (a
+    backlog drained after downtime) keeps its partitioning and plan."""
+    spark = batch.sparkSession
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    if batch._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() <= advisory:
+        batch = batch.coalesce(1)
+    return batch.persist()
 
-    Returns the started StreamingQuery (caller awaits termination).
-    """
-    from real_time_data_analytics_cassandra_spark.operators.latest import latest_per_key
+
+def multicast_deltas(batch: DataFrame) -> dict[str, DataFrame]:
+    """The per-batch delta views, keyed by output directory name:
+    the latest row per user (readers union + re-argmax, or a MERGE
+    target applies it as an upsert) and the bucket counts (readers sum
+    by bucket)."""
     from real_time_data_analytics_cassandra_spark.operators.counts import (
         multi_granularity_counts,
     )
+    from real_time_data_analytics_cassandra_spark.operators.latest import latest_per_key
+
+    return {
+        "latest_delta": latest_per_key(batch, ["user_id"], "ts", ["event_id"]),
+        "bucket_count_delta": multi_granularity_counts(batch, "ts"),
+    }
+
+
+def multicast_foreach_batch(events: DataFrame, out_dir: str, checkpoint_dir: str):
+    """Fan-out multicast (SURVEY.md ST7): each micro-batch is appended
+    to the raw ``event_log`` (the system of record all views derive
+    from) and to the two :func:`multicast_deltas` — the replacement
+    for the reference's per-event multi-table writes
+    (cassandra_subscriber.py:121-180).
+
+    The three appends are separate writes, not one transaction.  The
+    checkpoint commits a batch only after all three succeed, so a
+    batch that fails is re-run and appends again the views it had
+    already written.
+
+    The batch is cached by :func:`cache_micro_batch`, so the source is
+    scanned once and ``numInputRows`` counts each row once; a batch
+    that fits one advisory partition runs as 3 single-task jobs and no
+    shuffle.  Once the ``event_log`` write has filled the cache, the
+    two deltas are written concurrently on a per-batch pool.  Each task
+    is wrapped in ``inheritable_thread_target``: a plain thread's JVM
+    side lacks the stream thread's local properties (query id, batch
+    id, SQL execution id, job tags), so its jobs would not belong to
+    the micro-batch.  Both writes finish before the cache is dropped,
+    and the first error is re-raised so a failed batch is never
+    committed.
+
+    Returns the started StreamingQuery (caller awaits termination).
+    """
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    def append(df: DataFrame, path: str) -> None:
+        df.write.mode("append").parquet(path)
 
     def write_views(batch: DataFrame, batch_id: int) -> None:
-        batch.persist()
+        cached = cache_micro_batch(batch)
         try:
-            # raw event log (the system of record all views derive from)
-            batch.write.mode("append").parquet(f"{out_dir}/event_log")
-            # per-batch latest-per-key delta; readers union + re-argmax,
-            # or a MERGE target (Delta/Iceberg) applies it as an upsert
-            latest_per_key(batch, ["user_id"], "ts", ["event_id"]).write.mode(
-                "append"
-            ).parquet(f"{out_dir}/latest_delta")
-            # per-batch bucket count deltas; readers sum by bucket
-            multi_granularity_counts(batch, "ts").write.mode("append").parquet(
-                f"{out_dir}/bucket_count_delta"
-            )
+            append(cached, f"{out_dir}/event_log")
+            deltas = multicast_deltas(cached)
+            with ThreadPoolExecutor(len(deltas)) as pool:
+                # one wrapper per task: each clones the local properties
+                # for itself, so the two SQL executions do not share one
+                futures = [
+                    pool.submit(
+                        inheritable_thread_target(cached.sparkSession)(append),
+                        df,
+                        f"{out_dir}/{name}",
+                    )
+                    for name, df in deltas.items()
+                ]
+            for fut in futures:
+                fut.result()
         finally:
-            batch.unpersist()
+            cached.unpersist()
 
     return (
         events.writeStream.foreachBatch(write_views)

@@ -31,6 +31,7 @@ def _rows(df):
 @pytest.mark.parametrize("name", QUERIES)
 def test_result_is_partitioning_invariant(spark, name, monkeypatch):
     base = _rows(q.queries()[name](spark, SF_SMOKE))
+    pinned = spark.conf.get("spark.sql.shuffle.partitions")
     # ensure_query_confs re-pins shuffle partitions from this env var
     # on EVERY query call, so the variation must go through it — a
     # bare conf.set would be silently overridden (and the test
@@ -41,5 +42,5 @@ def test_result_is_partitioning_invariant(spark, name, monkeypatch):
     finally:
         monkeypatch.undo()
         q.ensure_query_confs(spark)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
     assert again == base
+    assert spark.conf.get("spark.sql.shuffle.partitions") == pinned

@@ -13,7 +13,10 @@ import pytest
 from real_time_data_analytics_cassandra_spark.catalog import table
 from real_time_data_analytics_cassandra_spark.operators.latest import latest_per_key
 from real_time_data_analytics_cassandra_spark.operators.sessions import sessionize
-from real_time_data_analytics_cassandra_spark.sources.streams import bounded_event_stream
+from real_time_data_analytics_cassandra_spark.sources.streams import (
+    bounded_event_stream,
+    sharded_table_stream,
+)
 from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
     hourly_type_counts,
     latest_upsert_stream,
@@ -329,21 +332,89 @@ def test_multicast_restart_is_exactly_once(spark):
 
 
 def test_multicast_foreach_batch_writes_all_views(spark):
-    stream = bounded_event_stream(spark, SF_SMOKE)
-    with tempfile.TemporaryDirectory() as out, tempfile.TemporaryDirectory() as ckpt:
-        query = multicast_foreach_batch(stream, out, ckpt)
+    """Over several micro-batches the views are exact: the event log is
+    the events multiset, the latest row per user re-taken over the
+    deltas is the batch latest_per_key, and the bucket deltas sum to
+    the batch counts.  Checked on both sides of the one-partition rule
+    (cache_micro_batch): at the default advisory size every batch is
+    cached as one partition, at 1 byte none is."""
+    from pyspark.sql import functions as F
+
+    from real_time_data_analytics_cassandra_spark.operators.counts import (
+        multi_granularity_counts,
+    )
+
+    events = table(spark, SF_SMOKE, "events")
+    n_events = events.count()
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    saved = spark.conf.get(key)
+    for advisory in (saved, "1b"):
+        spark.conf.set(key, advisory)
+        try:
+            stream = sharded_table_stream(spark, SF_SMOKE, "events", time_cols=("ts",))
+            with tempfile.TemporaryDirectory() as out, tempfile.TemporaryDirectory() as ckpt:
+                query = multicast_foreach_batch(stream, out, ckpt)
+                query.awaitTermination()
+                progress = query.recentProgress
+                assert len(progress) > 1
+                assert sum(p.numInputRows for p in progress) == n_events
+
+                log = spark.read.parquet(f"{out}/event_log")
+                assert _rows(log.select(*events.columns)) == _rows(events)
+
+                deltas = spark.read.parquet(f"{out}/latest_delta")
+                latest = latest_per_key(deltas, ["user_id"], "ts", ["event_id"])
+                want = latest_per_key(events, ["user_id"], "ts", ["event_id"])
+                assert _rows(latest.select(*events.columns)) == _rows(want)
+
+                buckets = (
+                    spark.read.parquet(f"{out}/bucket_count_delta")
+                    .groupBy("time_bucket")
+                    .agg(F.sum("product_count").alias("product_count"))
+                )
+                assert _rows(buckets) == _rows(multi_granularity_counts(events, "ts"))
+        finally:
+            spark.conf.set(key, saved)
+
+
+def test_multicast_small_batch_plans_no_exchange(spark):
+    """A micro-batch that fits one advisory partition is cached as one
+    partition, so neither delta plans an Exchange; the source is still
+    scanned once, so the multicast's numInputRows is the rows landed."""
+    from real_time_data_analytics_cassandra_spark.plans.checks import operator_count
+    from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
+        cache_micro_batch,
+        multicast_deltas,
+    )
+
+    exchanges = []
+
+    def plan_deltas(batch, batch_id):
+        cached = cache_micro_batch(batch)
+        try:
+            exchanges.extend(
+                operator_count(df, "Exchange") for df in multicast_deltas(cached).values()
+            )
+        finally:
+            cached.unpersist()
+
+    with tempfile.TemporaryDirectory() as base:
+        src = f"{base}/landing"
+        events = table(spark, SF_SMOKE, "events")
+        events.write.parquet(src)
+        stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+        (
+            stream.writeStream.foreachBatch(plan_deltas)
+            .option("checkpointLocation", f"{base}/plan_ckpt")
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        assert exchanges == [0, 0]
+
+        query = multicast_foreach_batch(stream, f"{base}/out", f"{base}/ckpt")
         query.awaitTermination()
-
-        event_log = spark.read.parquet(f"{out}/event_log")
-        assert event_log.count() == table(spark, SF_SMOKE, "events").count()
-
-        latest = spark.read.parquet(f"{out}/latest_delta")
-        # per-batch deltas: at most one row per user per micro-batch
-        users = table(spark, SF_SMOKE, "events").select("user_id").distinct().count()
-        assert latest.count() >= users
-
-        buckets = spark.read.parquet(f"{out}/bucket_count_delta")
-        assert buckets.filter(buckets.time_bucket.startswith("daily:")).count() > 0
+        assert query.lastProgress.numInputRows == events.count()
 
 
 def _has_protobuf() -> bool:
