@@ -102,7 +102,6 @@ class AnalyticsApi:
         if period not in VALID_PERIODS:
             raise ValueError(f"period must be one of {VALID_PERIODS}")
         counts = q.new_count_multi_granularity(self.spark, self.sf_dir)
-        events = table(self.spark, self.sf_dir, "events")
         # "current" bucket of the requested granularity, from max(ts)
         latest = (
             counts.filter(F.col("time_bucket").startswith(f"{period}:"))
@@ -191,8 +190,6 @@ def create_flask_app(spark: SparkSession, sf_dir: str):
     # timestamps serialize exactly like the parity endpoints.
     @app.route("/api/v1/queries")
     def list_queries():
-        from real_time_data_analytics_cassandra_spark import queries as q
-
         names = sorted(q.queries())
         oracles = set(q.oracle_sql())
         side = q.side_effectful_queries()
@@ -209,8 +206,6 @@ def create_flask_app(spark: SparkSession, sf_dir: str):
 
     @app.route("/api/v1/query/<name>")
     def run_query(name: str):
-        from real_time_data_analytics_cassandra_spark import queries as q
-
         registry = q.queries()
         if name not in registry:
             return jsonify({"error": f"unknown query {name!r}"}), 404

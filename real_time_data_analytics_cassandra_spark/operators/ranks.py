@@ -59,9 +59,7 @@ def global_rank(
     pure lazy plan when the result is consumed exactly once.
     """
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    n = num_partitions or df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"
-    )
+    n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     ranged = df.repartitionByRange(int(n), *cols).withColumn(
         "__pid", F.spark_partition_id()
     )
@@ -129,9 +127,7 @@ def global_cumsum(
     the frame.  With unique keys, results are partitioning-invariant
     and engine-portable."""
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    n = num_partitions or df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"
-    )
+    n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     ranged = df.repartitionByRange(int(n), *cols).withColumn(
         "__pid", F.spark_partition_id()
     )

@@ -23,6 +23,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from real_time_data_analytics_cassandra_spark.catalog import table
+from real_time_data_analytics_cassandra_spark.fixture_cache import (
+    build_once,
+    fixture_path,
+)
 from real_time_data_analytics_cassandra_spark.functions.buckets import hour_bucket
 from real_time_data_analytics_cassandra_spark.functions.numeric import (
     ONE,
@@ -328,9 +332,6 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigint losslessly, and the per-generation audit proves which
     NULLs are schema holes vs data.  Full oracle: the generation
     split is deterministic (doc_id parity)."""
-    import os
-    import tempfile
-
     from pyspark.sql.types import (
         LongType,
         StringType,
@@ -343,17 +344,9 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_query_confs(spark)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    d = os.path.join(
-        tempfile.gettempdir(),
-        "rtdac_evo_docs_"
-        + sf_dir.strip("/").replace("/", "_")
-        + f"_{int(st.st_mtime)}_{st.st_size}",
-    )
-    marker = os.path.join(d, "_staged")
     docs = table(spark, sf_dir, "documents")
-    if not os.path.exists(marker):
+
+    def _build(d: str) -> None:
         (
             docs.filter(F.col("doc_id") % 2 == 0)
             .select(F.col("doc_id").cast("int").alias("doc_id"), "text", "source")
@@ -366,8 +359,8 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("append")
             .parquet(d)
         )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    d = build_once(fixture_path("evo_docs", 1, sf_dir, ["documents"]), _build)
     target = StructType(
         [
             StructField("doc_id", LongType()),
@@ -1764,31 +1757,20 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def build_cluster_index_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per sf_dir, marker-guarded, mtime-keyed like the
-    bm25/amqp fixtures) the snapshot-versioned cluster index: even-doc
+    """Build (once per input, fixture_cache.build_once) the
+    snapshot-versioned cluster index: even-doc
     pairs as the initial build, the remaining pairs (odd-odd and
     even-odd — including the bridges that MERGE existing components)
     as one append batch.  Kept separate from the gated query so
     bench.py can pre-build it — build + append are the write-once
     half; the measured path is the index read."""
-    import os
-    import tempfile
-
     from real_time_data_analytics_cassandra_spark.operators import (
         graph as graph_op,
     )
 
     ensure_query_confs(spark)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    idx_dir = os.path.join(
-        tempfile.gettempdir(),
-        "rtdac_cluster_idx_"
-        + sf_dir.strip("/").replace("/", "_")
-        + f"_{int(st.st_mtime)}_{st.st_size}",
-    )
-    marker = os.path.join(idx_dir, "_built")
-    if not os.path.exists(marker):
+
+    def _build(idx_dir: str) -> None:
         docs = table(spark, sf_dir, "documents")
         pairs = dedup_op.ngram_jaccard_pairs(
             docs, "doc_id", "text", n=3, threshold=0.5
@@ -1796,10 +1778,10 @@ def build_cluster_index_fixture(spark: SparkSession, sf_dir: str) -> str:
         both_even = (F.col("id_a") % 2 == 0) & (F.col("id_b") % 2 == 0)
         graph_op.cluster_index_build(spark, pairs.filter(both_even), idx_dir)
         graph_op.cluster_index_append(spark, idx_dir, pairs.filter(~both_even))
-        os.makedirs(idx_dir, exist_ok=True)
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return idx_dir
+
+    return build_once(
+        fixture_path("cluster_idx", 1, sf_dir, ["documents"]), _build
+    )
 
 
 def incremental_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2047,30 +2029,19 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def build_text_index_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per sf_dir, marker-guarded, mtime-keyed like the
-    amqp dump fixture) the persisted inverted BM25 index
+    """Build (once per input, fixture_cache.build_once) the persisted
+    inverted BM25 index
     (operators/index.py) for the documents table and return its path.
     Kept separate from the gated query so bench.py can pre-build it —
     the index build is the write-once half; the measured path is the
     partition-pruned search."""
-    import os
-    import tempfile
-
     ensure_query_confs(spark)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    stamp = f"{int(st.st_mtime)}_{st.st_size}"
-    idx_dir = os.path.join(
-        tempfile.gettempdir(),
-        "rtdac_bm25_idx_" + sf_dir.strip("/").replace("/", "_") + "_" + stamp,
+    return build_once(
+        fixture_path("bm25_idx", 1, sf_dir, ["documents"]),
+        lambda idx_dir: index_op.build_text_index(
+            table(spark, sf_dir, "documents"), idx_dir, "doc_id", "text"
+        ),
     )
-    marker = os.path.join(idx_dir, "_complete")
-    if not os.path.exists(marker):
-        docs = table(spark, sf_dir, "documents")
-        index_op.build_text_index(docs, idx_dir, "doc_id", "text")
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return idx_dir
 
 
 def bm25_search_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2389,24 +2360,12 @@ def incremental_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     to probing an index whose codes were encoded in one pass with the
     same model (tests/test_crossval.py); approximate by construction
     -> no SQL oracle (recall floors ride the ivfpq crossval)."""
-    import os
-    import tempfile
-
     ensure_query_confs(spark)
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    idx_dir = os.path.join(
-        tempfile.gettempdir(),
-        "rtdac_ann_inc_idx_"
-        + sf_dir.strip("/").replace("/", "_")
-        + f"_{int(st.st_mtime)}_{st.st_size}",
-    )
-    marker = os.path.join(idx_dir, "_built")
     emb = table(spark, sf_dir, "embeddings")
-    if not os.path.exists(marker):
-        sim_op.ann_index_build(emb.filter(F.col("vec_id") % 2 == 0), idx_dir)
-        with open(marker, "w") as fh:
-            fh.write("ok")
+    idx_dir = build_once(
+        fixture_path("ann_inc_idx", 1, sf_dir, ["embeddings"]),
+        lambda d: sim_op.ann_index_build(emb.filter(F.col("vec_id") % 2 == 0), d),
+    )
     sim_op.ann_index_append(emb.filter(F.col("vec_id") % 2 == 1), idx_dir)
     out = sim_op.ann_index_probe(
         emb, emb.filter(F.col("vec_id") < 10), idx_dir, k=5, nprobe=8
@@ -2737,8 +2696,8 @@ def incremental_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(corpus) index, never a rescan; every qualifying signature pair
     is discovered exactly once, when its second member first
     arrives.  The 4-batch stream fold is the WRITE-ONCE half
-    (build_image_pair_index_fixture, marker-guarded and mtime-keyed
-    like the bm25/cluster indexes); the query's timed section is the
+    (build_image_pair_index_fixture, a build-once fixture like the
+    bm25/cluster indexes); the query's timed section is the
     maintained table's read — the incremental_bm25_search bench
     convention."""
     ensure_query_confs(spark)
@@ -2749,65 +2708,49 @@ def incremental_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def build_image_pair_index_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per sf_dir, marker-guarded, mtime-keyed like the
-    bm25/amqp/cluster fixtures) the stream-maintained image near-pair
+    """Build (once per input, fixture_cache.build_once) the
+    stream-maintained image near-pair
     state: the documents replay arrives as 4 micro-batches, each
     folded through incremental_signature_pairs_fold (band-index
     probes + cluster merge).  Kept separate from the gated query so
     bench.py can pre-build it — the fold is the write-once half; the
     measured path is the maintained table's read."""
-    import os
-    import tempfile
-
     from real_time_data_analytics_cassandra_spark.sources.streams import (
         sharded_table_stream,
     )
 
     ensure_query_confs(spark)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    idx = os.path.join(
-        tempfile.gettempdir(),
-        "rtdac_imgpair_idx_"
-        + sf_dir.strip("/").replace("/", "_")
-        + f"_{int(st.st_mtime)}_{st.st_size}",
-    )
-    marker = os.path.join(idx, "_built")
-    if os.path.exists(marker):
-        return idx
-    cluster_path = f"{idx}/clusters"
-    band_path = f"{idx}/bands"
-    pair_path = f"{idx}/pairs"
-    ckpt = f"{idx}/ckpt"
-    stream = sharded_table_stream(spark, sf_dir, "documents", n_shards=4)
 
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        sig = mm_op.image_ahash_signatures(
-            mm_op.attach_png_payload(batch, "doc_id", "text")
-        )
-        mm_op.incremental_signature_pairs_fold(
-            sig,
-            cluster_path,
-            band_path,
-            pair_path,
-            batch_id,
-            n_bands=4,
-            max_hamming=3,
+    def _build(idx: str) -> None:
+        stream = sharded_table_stream(spark, sf_dir, "documents", n_shards=4)
+
+        def _fold(batch: DataFrame, batch_id: int) -> None:
+            if batch.isEmpty():
+                return
+            sig = mm_op.image_ahash_signatures(
+                mm_op.attach_png_payload(batch, "doc_id", "text")
+            )
+            mm_op.incremental_signature_pairs_fold(
+                sig,
+                f"{idx}/clusters",
+                f"{idx}/bands",
+                f"{idx}/pairs",
+                batch_id,
+                n_bands=4,
+                max_hamming=3,
+            )
+
+        (
+            stream.writeStream.foreachBatch(_fold)
+            .option("checkpointLocation", f"{idx}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return build_once(
+        fixture_path("imgpair_idx", 1, sf_dir, ["documents"]), _build
     )
-    q_.awaitTermination()
-    os.makedirs(idx, exist_ok=True)
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return idx
 
 
 def domain_crawl_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3047,54 +2990,42 @@ def build_audio_pair_index_fixture(spark: SparkSession, sf_dir: str) -> str:
     """build_image_pair_index_fixture's audio twin: 4 replay batches,
     RIFF decode -> energy fingerprints, folded through the shared
     band-index/pair/cluster maintenance at 8x8-bit bands."""
-    import os
-    import tempfile
-
     from real_time_data_analytics_cassandra_spark.sources.streams import (
         sharded_table_stream,
     )
 
     ensure_query_confs(spark)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    idx = os.path.join(
-        tempfile.gettempdir(),
-        "rtdac_audpair_idx_"
-        + sf_dir.strip("/").replace("/", "_")
-        + f"_{int(st.st_mtime)}_{st.st_size}",
-    )
-    marker = os.path.join(idx, "_built")
-    if os.path.exists(marker):
-        return idx
-    stream = sharded_table_stream(spark, sf_dir, "documents", n_shards=4)
 
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        sig = mm_op.audio_energy_fingerprints(
-            mm_op.attach_wav_payload(batch, "doc_id", "text")
-        )
-        mm_op.incremental_signature_pairs_fold(
-            sig,
-            f"{idx}/clusters",
-            f"{idx}/bands",
-            f"{idx}/pairs",
-            batch_id,
-            n_bands=8,
-            max_hamming=7,
+    def _build(idx: str) -> None:
+        stream = sharded_table_stream(spark, sf_dir, "documents", n_shards=4)
+
+        def _fold(batch: DataFrame, batch_id: int) -> None:
+            if batch.isEmpty():
+                return
+            sig = mm_op.audio_energy_fingerprints(
+                mm_op.attach_wav_payload(batch, "doc_id", "text")
+            )
+            mm_op.incremental_signature_pairs_fold(
+                sig,
+                f"{idx}/clusters",
+                f"{idx}/bands",
+                f"{idx}/pairs",
+                batch_id,
+                n_bands=8,
+                max_hamming=7,
+            )
+
+        (
+            stream.writeStream.foreachBatch(_fold)
+            .option("checkpointLocation", f"{idx}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", f"{idx}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    return build_once(
+        fixture_path("audpair_idx", 1, sf_dir, ["documents"]), _build
     )
-    q_.awaitTermination()
-    os.makedirs(idx, exist_ok=True)
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return idx
 
 
 def audio_fingerprint_near_dup(
@@ -7425,8 +7356,8 @@ def session_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def build_amqp_dump_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per sf_dir, marker-guarded) the sharded JSON-lines
-    bus archive that stands in for a recorded RabbitMQ dump
+    """Build (once per input, fixture_cache.build_once) the sharded
+    JSON-lines bus archive that stands in for a recorded RabbitMQ dump
     (reference cassandra_subscriber.py:237-287) and return its path.
 
     The dump is written DISTRIBUTED (executor-side JSON writer over 8
@@ -7435,22 +7366,9 @@ def build_amqp_dump_fixture(spark: SparkSession, sf_dir: str) -> str:
     Kept SEPARATE from the gated query so harnesses (bench.py) can
     pre-build it: the fixture is test scaffolding, not part of the
     measured read path."""
-    import os
-    import tempfile
-
     ensure_query_confs(spark)
-    # key the cache on the source file's identity (mtime+size), not
-    # just its path — a regenerated testdata drop must invalidate the
-    # dump or the replay would be gated against fresher parquet
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    stamp = f"{int(st.st_mtime)}_{st.st_size}"
-    dump_dir = os.path.join(
-        tempfile.gettempdir(),
-        "rtdac_amqp_dump_" + sf_dir.strip("/").replace("/", "_") + "_" + stamp,
-    )
-    marker = os.path.join(dump_dir, "_complete")
-    if not os.path.exists(marker):
+
+    def _build(dump_dir: str) -> None:
         envelope = table(spark, sf_dir, "events").select(
             F.concat(F.lit("msg-"), F.col("event_id").cast("string")).alias(
                 "message_id"
@@ -7462,8 +7380,8 @@ def build_amqp_dump_fixture(spark: SparkSession, sf_dir: str) -> str:
             ).alias("body"),
         )
         envelope.repartition(8).write.mode("overwrite").json(dump_dir)
-        open(marker, "w").close()
-    return dump_dir
+
+    return build_once(fixture_path("amqp_dump", 1, sf_dir, ["events"]), _build)
 
 
 def amqp_replay_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8949,20 +8867,11 @@ def incremental_exact_substr(spark: SparkSession, sf_dir: str) -> DataFrame:
     id-ordered, the accumulated output equals the one-shot keep-first
     operator bit-for-bit, so this query SHARES the
     exact_substr_keep_first_dedup oracle; the incremental machinery
-    is what's being gated.  The index lives in a tmp dir keyed on the
-    corpus file's identity; re-invocations replay idempotently."""
-    import os
-    import tempfile
-
+    is what's being gated.  The index lives in a fixture directory
+    keyed on the corpus file's identity; re-invocations replay
+    idempotently."""
     ensure_query_confs(spark)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    idx_dir = os.path.join(
-        tempfile.gettempdir(),
-        "rtdac_xsub_idx_v1_"
-        + sf_dir.strip("/").replace("/", "_")
-        + f"_{int(st.st_mtime)}_{st.st_size}",
-    )
+    idx_dir = fixture_path("xsub_idx", 1, sf_dir, ["documents"])
     docs = table(spark, sf_dir, "documents")
     mid = docs.agg(
         ((F.min("doc_id") + F.max("doc_id")) / 2).cast("long")
@@ -8992,13 +8901,10 @@ _BPE_K = 12
 
 
 def _bpe_merges_for(spark: SparkSession, sf_dir: str) -> list:
-    """Train-once-per-corpus memo for the BPE queries (keyed on the
-    corpus file identity, like the on-disk fixtures): the learned
-    merge list is k driver-side tuples — bounded state."""
-    import os
-
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = f"{sf_dir}_{int(st.st_mtime)}_{st.st_size}"
+    """Train-once-per-corpus memo for the BPE queries (keyed like the
+    on-disk fixtures): the learned merge list is k driver-side
+    tuples — bounded state."""
+    key = fixture_path("bpe_merges", 1, sf_dir, ["documents"])
     if key not in _BPE_MEMO:
         from real_time_data_analytics_cassandra_spark.operators import bpe as bpe_op
 
@@ -9521,8 +9427,8 @@ def pipeline_retention_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def build_copurchase_pairs_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per sf_dir, marker-guarded, mtime-keyed like
-    the bm25/amqp/cluster fixtures) the CO-PURCHASE PAIR COUNTS:
+    """Materialize (once per input, fixture_cache.build_once) the
+    CO-PURCHASE PAIR COUNTS:
     (u, v, n_orders) with u < v, one row per unordered part pair that
     shares at least one order.  The four part-graph queries (affinity,
     PageRank, triangles, components) all start from this identical
@@ -9531,29 +9437,12 @@ def build_copurchase_pairs_fixture(spark: SparkSession, sf_dir: str) -> str:
     and rebuilding it inside every query re-pays the same
     |lineitem|-scan + self-join four times.  Oracles still derive the
     pair set from lineitem directly — the fixture is bit-identical by
-    construction (exact integer counts over a distinct projection).
-
-    The build is ATOMIC: pairs are written into a session-private
-    staging directory and ``os.rename``d into the keyed path, so a
-    concurrent session either sees the complete fixture or builds its
-    own staging copy — never a half-written directory (the rename is
-    atomic on one filesystem; a loser of the rename race just deletes
-    its staging copy)."""
+    construction (exact integer counts over a distinct projection)."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     ensure_query_confs(spark)
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    st = os.stat(src)
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        "rtdac_copurchase_"
-        + sf_dir.strip("/").replace("/", "_")
-        + f"_{int(st.st_mtime)}_{st.st_size}",
-    )
-    if not os.path.isdir(os.path.join(out_dir, "pairs")):
+
+    def _build(out_dir: str) -> None:
         li = table(spark, sf_dir, "lineitem")
         op = li.select("l_orderkey", "l_partkey").distinct()
         pairs = (
@@ -9568,23 +9457,11 @@ def build_copurchase_pairs_fixture(spark: SparkSession, sf_dir: str) -> str:
             .groupBy("u", "v")
             .agg(F.count(F.lit(1)).cast("long").alias("n_orders"))
         )
-        stage = out_dir + ".stage-" + uuid.uuid4().hex
-        pairs.write.mode("overwrite").parquet(os.path.join(stage, "pairs"))
-        try:
-            os.rename(stage, out_dir)
-        except OSError:
-            # A rename failure USUALLY means another session won the
-            # race with a complete fixture — but it can also mean a
-            # stale/partial out_dir from a crashed run is squatting on
-            # the path.  Only discard our staging copy once the
-            # supposed winner's pairs/ directory actually exists;
-            # otherwise evict the squatter and promote our copy.
-            if os.path.isdir(os.path.join(out_dir, "pairs")):
-                shutil.rmtree(stage, ignore_errors=True)
-            else:
-                shutil.rmtree(out_dir, ignore_errors=True)
-                os.rename(stage, out_dir)
-    return out_dir
+        pairs.write.mode("overwrite").parquet(os.path.join(out_dir, "pairs"))
+
+    return build_once(
+        fixture_path("copurchase", 1, sf_dir, ["lineitem"]), _build
+    )
 
 
 def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11275,6 +11152,18 @@ def streaming_observed_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _drop_orphaned_checkpoint(ckpt: str, state: str) -> None:
+    """A stream checkpoint that survived without the state it
+    maintains (``state`` was cleaned up) would resume, deliver
+    nothing, and leave the query reading a missing table — drop it so
+    the replay rebuilds from scratch."""
+    import os
+    import shutil
+
+    if os.path.exists(ckpt) and not os.path.exists(state):
+        shutil.rmtree(ckpt)
+
+
 def streaming_image_signature_clusters(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -11298,8 +11187,6 @@ def streaming_image_signature_clusters(
     partitions the batch's signatures land in (sig_hi & 3) —
     O(batch) ingest against an O(corpus) table, the same envelope as
     the incremental BM25/span indexes."""
-    import tempfile
-
     from real_time_data_analytics_cassandra_spark.sinks.merge import (
         merge_min_add,
     )
@@ -11308,28 +11195,14 @@ def streaming_image_signature_clusters(
     )
 
     ensure_query_confs(spark)
-    import os
-
-    # checkpoint + table persist keyed on the corpus identity (the
+    # checkpoint + table persist in one fixture directory (the
     # streaming_incremental_index convention): re-invocations resume
     # the stream, find no new files — a landing directory's steady
     # state — and read the maintained table; the fold itself is
     # proven by the first build and the stream==batch gate
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "rtdac_imgsig_stream_"
-        + sf_dir.strip("/").replace("/", "_")
-        + f"_{int(st.st_mtime)}_{st.st_size}",
-    )
+    base = fixture_path("imgsig_stream", 1, sf_dir, ["documents"])
     path, ckpt = f"{base}/clusters", f"{base}/ckpt"
-    # orphaned-checkpoint guard: a surviving checkpoint without its
-    # table would resume to nothing and read a missing table
-    if os.path.exists(ckpt) and not os.path.exists(path):
-        import shutil
-
-        shutil.rmtree(ckpt)
+    _drop_orphaned_checkpoint(ckpt, path)
     stream = sharded_table_stream(spark, sf_dir, "documents", n_shards=4)
 
     def _fold(batch: DataFrame, batch_id: int) -> None:
@@ -11379,29 +11252,19 @@ def snapshot_docs_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot CDC through the versioned-table sink (sinks/
     snapshots.py): the documents corpus is committed as snapshot v1
     (the id-lower half) then v2 (append of the rest) into a
-    marker-guarded tmp table, and the query returns
+    build-once fixture table, and the query returns
     ``snapshot_diff(v1, v2)`` — exactly the inserted upper half, read
     back through version manifests rather than directory listings.
     Gates the whole snapshot machinery (atomic commit, manifest-
     resolved reads, CDC join) behind a full SQL oracle.  The split
     predicate is pure integer arithmetic (doc_id*2 vs min+max) so
     both engines cut identically."""
-    import os
-    import tempfile
-
     from real_time_data_analytics_cassandra_spark.sinks import snapshots as snap_op
 
     ensure_query_confs(spark)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tbl = os.path.join(
-        tempfile.gettempdir(),
-        "rtdac_snap_docs_"
-        + sf_dir.strip("/").replace("/", "_")
-        + f"_{int(st.st_mtime)}_{st.st_size}",
-    )
     docs = table(spark, sf_dir, "documents")
-    if not snap_op.snapshot_versions(tbl):
+
+    def _build(tbl: str) -> None:
         s = docs.agg((F.min("doc_id") + F.max("doc_id")).cast("long")).collect()[0][0]
         snap_op.write_snapshot(
             docs.filter(F.col("doc_id") * 2 <= s), tbl, mode="append"
@@ -11409,6 +11272,8 @@ def snapshot_docs_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
         snap_op.write_snapshot(
             docs.filter(F.col("doc_id") * 2 > s), tbl, mode="append"
         )
+
+    tbl = build_once(fixture_path("snap_docs", 1, sf_dir, ["documents"]), _build)
     out = snap_op.snapshot_diff(spark, tbl, 1, 2, ["doc_id"])
     return out.orderBy("doc_id")
 
@@ -11423,28 +11288,16 @@ def incremental_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery (marker-guarded batch-stamped appends, bucket-sliced
     dfreq rederivation, exact stats recompute) is what's being gated.
     Replay idempotency and crash-repair are proven in
-    tests/test_index.py, not re-run in the benched body.  Index in a
-    tmp dir keyed on the corpus file identity."""
-    import os
-    import tempfile
-
+    tests/test_index.py, not re-run in the benched body.  The even
+    half is a build-once fixture keyed on the corpus file identity."""
     ensure_query_confs(spark)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    idx_dir = os.path.join(
-        tempfile.gettempdir(),
-        "rtdac_bm25_inc_idx_"
-        + sf_dir.strip("/").replace("/", "_")
-        + f"_{int(st.st_mtime)}_{st.st_size}",
-    )
-    marker = os.path.join(idx_dir, "_built")
     docs = table(spark, sf_dir, "documents")
-    if not os.path.exists(marker):
-        index_op.build_text_index(
-            docs.filter(F.col("doc_id") % 2 == 0), idx_dir, "doc_id", "text"
-        )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+    idx_dir = build_once(
+        fixture_path("bm25_inc_idx", 1, sf_dir, ["documents"]),
+        lambda d: index_op.build_text_index(
+            docs.filter(F.col("doc_id") % 2 == 0), d, "doc_id", "text"
+        ),
+    )
     # ONE append per invocation: effective the first time, a no-op on
     # replay (anti-join idempotency — proven once in
     # tests/test_index.py rather than re-proven per benched run)
@@ -11463,21 +11316,11 @@ def incremental_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep_first_segment_dedup bit-for-bit, so this query SHARES the
     span_dedup_keep_first oracle: the incremental machinery (bucket-
     pruned index reads, replay-stamped dynamic overwrites) is what's
-    being gated.  The index lives in a tmp dir keyed on the corpus
-    file's identity; re-invocations replay idempotently (batch ids
-    stamp the index rows)."""
-    import os
-    import tempfile
-
+    being gated.  The index lives in a fixture directory keyed on the
+    corpus file's identity; re-invocations replay idempotently (batch
+    ids stamp the index rows)."""
     ensure_query_confs(spark)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    idx_dir = os.path.join(
-        tempfile.gettempdir(),
-        "rtdac_span_idx_v2_"
-        + sf_dir.strip("/").replace("/", "_")
-        + f"_{int(st.st_mtime)}_{st.st_size}",
-    )
+    idx_dir = fixture_path("span_idx", 2, sf_dir, ["documents"])
     docs = table(spark, sf_dir, "documents")
     mid = docs.agg(
         ((F.min("doc_id") + F.max("doc_id")) / 2).cast("long")
@@ -11552,8 +11395,6 @@ def streaming_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     landed — instead of re-proving the replay path inside the timed
     body (replay idempotency and crash rollback are proven once, in
     tests/test_index.py and the shared-oracle parity runs)."""
-    import tempfile
-
     from real_time_data_analytics_cassandra_spark.sources.streams import (
         sharded_table_stream,
     )
@@ -11562,30 +11403,9 @@ def streaming_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_query_confs(spark)
-    import os
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    stamp = (
-        sf_dir.strip("/").replace("/", "_")
-        + f"_{int(st.st_mtime)}_{st.st_size}"
-    )
-    idx_dir = os.path.join(
-        tempfile.gettempdir(), "rtdac_bm25_stream_idx_" + stamp
-    )
-    ckpt = os.path.join(
-        tempfile.gettempdir(), "rtdac_ckpt_stream_idx_" + stamp
-    )
-    # orphaned checkpoint guard: if the index was cleaned up but its
-    # checkpoint survived, the resumed stream would deliver nothing
-    # and the search would read a missing index — drop the checkpoint
-    # so the replay rebuilds from scratch
-    if os.path.exists(ckpt) and not os.path.exists(
-        os.path.join(idx_dir, "docstats")
-    ):
-        import shutil
-
-        shutil.rmtree(ckpt)
+    base = fixture_path("bm25_stream_idx", 1, sf_dir, ["documents"])
+    idx_dir, ckpt = f"{base}/idx", f"{base}/ckpt"
+    _drop_orphaned_checkpoint(ckpt, f"{idx_dir}/docstats")
     stream = sharded_table_stream(spark, sf_dir, "documents", n_shards=4)
     q = index_append_foreach_batch(stream, idx_dir, ckpt)
     q.awaitTermination()
@@ -12004,6 +11824,24 @@ _BIGRAM_LM_CTES = """toks AS (
                 FROM scored
                 GROUP BY doc_id
             )"""
+
+
+def prebuild_fixtures(spark: SparkSession, sf_dir: str) -> None:
+    """Build every write-once fixture a benched query reads, so the
+    one-time build lands outside the timed sections: the amqp dump
+    (a recorded bus archive), the persisted BM25 and cluster indexes,
+    the co-purchase pair counts the four part-graph queries share,
+    the stream-maintained image/audio near-pair indexes, and the
+    persisted stream state of the image cluster table (the timed
+    section then measures the resumed stream's steady state)."""
+    build_amqp_dump_fixture(spark, sf_dir)
+    build_text_index_fixture(spark, sf_dir)
+    build_cluster_index_fixture(spark, sf_dir)
+    build_copurchase_pairs_fixture(spark, sf_dir)
+    build_image_pair_index_fixture(spark, sf_dir)
+    build_audio_pair_index_fixture(spark, sf_dir)
+    clusters = streaming_image_signature_clusters(spark, sf_dir)
+    clusters.write.format("noop").mode("overwrite").save()
 
 
 # ---------------------------------------------------------------------------

@@ -39,13 +39,19 @@ for _k, _v in _WORKER_THREAD_PIN.items():
     os.environ.setdefault(_k, _v)
 
 
+def _cpus() -> str:
+    """Cores this process may use: ``$SPARK_GRAFT_CPUS``, else the
+    host's CPU count."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+
+
 def get_spark(
     app_name: str = "real-time-data-analytics-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _cpus()
     master = master or os.environ.get("SPARK_MASTER") or f"local[{cpus}]"
     shuffle = str(shuffle_partitions or os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
     builder = (
@@ -104,9 +110,7 @@ def ensure_query_confs(spark: SparkSession) -> SparkSession:
     # coalesces those for batch plans but is DISABLED for stateful
     # streaming, where 200 near-empty state-store tasks are pure
     # overhead at test scale — pin to the core count
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_CPUS", "32")
-    )
+    spark.conf.set("spark.sql.shuffle.partitions", _cpus())
     # BLAS/OMP pin for a FOREIGN session whose JVM predates our module
     # import: sc.environment feeds the envVars of every Python function
     # created afterwards (a distinct env set spawns a fresh worker

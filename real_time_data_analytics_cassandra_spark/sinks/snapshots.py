@@ -59,8 +59,38 @@ def snapshot_versions(path: str) -> list[int]:
 
 
 def _load_manifest(path: str, version: int) -> dict:
+    root = _data_uri(path)
     with open(_manifest_path(path, version)) as fh:
-        return json.load(fh)
+        return _rebase(
+            json.load(fh), lambda f: root + f if f.startswith("data/") else f
+        )
+
+
+def _data_uri(path: str) -> str:
+    """The URI prefix Spark reports this table's data files under."""
+    return "file://" + os.path.abspath(path) + "/"
+
+
+def _rebase(manifest: dict, fn) -> dict:
+    """``manifest`` with ``fn`` applied to every data-file path it
+    records.  On disk, files under the table root are stored relative
+    to it, so a table directory can be renamed (an atomically
+    published fixture is built elsewhere, then moved) and still
+    read."""
+    m = {**manifest, "files": [fn(f) for f in manifest["files"]]}
+    for k in ("file_stats", "file_added_at"):
+        if k in m:
+            m[k] = {fn(f): v for f, v in m[k].items()}
+    if "delete_files" in m:
+        m["delete_files"] = [
+            {**d, "paths": [fn(p) for p in d["paths"]]} for d in m["delete_files"]
+        ]
+    if "bloom" in m:
+        m["bloom"] = {
+            c: {**e, "files": {fn(f): w for f, w in e["files"].items()}}
+            for c, e in m["bloom"].items()
+        }
+    return m
 
 
 def _file_column_stats(files: list, cols: tuple) -> dict:
@@ -1000,8 +1030,15 @@ def _atomic_write_manifest(path: str, version: int, manifest: dict) -> None:
     mdir = os.path.join(path, _MANIFEST_DIR)
     os.makedirs(mdir, exist_ok=True)
     tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex}")
+    root = _data_uri(path)
     with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
+        json.dump(
+            _rebase(
+                manifest,
+                lambda f: f[len(root) :] if f.startswith(root + "data/") else f,
+            ),
+            fh,
+        )
         fh.flush()
         os.fsync(fh.fileno())
     final = _manifest_path(path, version)

@@ -12,28 +12,29 @@ stream/batch equivalence (SURVEY.md §5.2).
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_data_analytics_cassandra_spark.catalog import normalize_time_cols
+from real_time_data_analytics_cassandra_spark.fixture_cache import (
+    build_once,
+    fixture_path,
+)
 from real_time_data_analytics_cassandra_spark.session import ensure_query_confs
 
 
-def _stream_dir(parquet_file: str) -> str:
+def _stream_dir(sf_dir: str, name: str) -> str:
     """FileStreamSource requires a *directory*; the testdata tables are
     single files.  Stage a stable per-file symlink directory (the
     production analog is simply a real landing directory that files
     arrive into)."""
-    digest = hashlib.sha256(parquet_file.encode()).hexdigest()[:12]
-    d = os.path.join(tempfile.gettempdir(), "rtdac_stream", digest)
+    d = fixture_path(f"stream_{name}", 1, sf_dir, [name])
     os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, os.path.basename(parquet_file))
+    link = os.path.join(d, f"{name}.parquet")
     if not os.path.islink(link):
-        os.symlink(parquet_file, link)
+        os.symlink(os.path.abspath(os.path.join(sf_dir, f"{name}.parquet")), link)
     return d
 
 
@@ -94,7 +95,7 @@ def bounded_table_stream(
     ensure_query_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
     schema = spark.read.parquet(path).schema
-    df = spark.readStream.schema(schema).parquet(_stream_dir(path))
+    df = spark.readStream.schema(schema).parquet(_stream_dir(sf_dir, name))
     return normalize_time_cols(df, time_cols) if time_cols else df
 
 
@@ -121,21 +122,19 @@ def sharded_table_stream(
     this feeds, only that several batches occur."""
     ensure_query_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
-    st = os.stat(path)
-    digest = hashlib.sha256(
-        f"{path}:{int(st.st_mtime)}:{st.st_size}:{n_shards}".encode()
-    ).hexdigest()[:12]
-    d = os.path.join(tempfile.gettempdir(), "rtdac_stream_sharded", digest)
-    marker = os.path.join(d, "_staged")
-    if not os.path.exists(marker):
+
+    def _build(d: str) -> None:
         src = spark.read.parquet(path)
         (
             src.repartition(n_shards, F.col(src.columns[0]))
             .write.mode("overwrite")
             .parquet(d)
         )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    d = build_once(
+        fixture_path(f"stream_sharded_{name}_{n_shards}", 1, sf_dir, [name]),
+        _build,
+    )
     schema = spark.read.parquet(path).schema
     df = (
         spark.readStream.schema(schema)

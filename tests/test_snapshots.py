@@ -747,3 +747,25 @@ def test_scan_snapshot_type_mismatched_bound_keeps_files(spark, tmp_path):
     assert len(out.inputFiles()) == len(
         snap.read_snapshot(spark, path).inputFiles()
     )
+
+
+def test_renamed_table_reads_the_same(spark, tmp_path):
+    """Manifests store data files relative to the table root, so a
+    table written in one directory and renamed — how an atomically
+    published fixture lands — keeps its rows, time travel, tombstones
+    and Bloom pruning."""
+    built, moved = str(tmp_path / "stage"), str(tmp_path / "t")
+    df = spark.range(0, 2000).select(F.col("id"), (F.col("id") % 7).alias("v"))
+    v1 = snap.write_snapshot(df.repartition(8, "v"), built)
+    keys = spark.createDataFrame([(3,), (7,)], "id long")
+    snap.delete_from_snapshot(spark, keys, built, "id")
+    snap.add_bloom_index(spark, built, "id")
+    want = _ids(snap.read_snapshot(spark, built))
+    os.rename(built, moved)
+    assert _ids(snap.read_snapshot(spark, moved)) == want
+    assert _ids(snap.read_snapshot(spark, moved, version=v1)) == list(range(2000))
+    hit = snap.lookup_snapshot(spark, moved, "id", 1234)
+    assert [r["id"] for r in hit.collect()] == [1234]
+    assert len(hit.inputFiles()) < len(snap.read_snapshot(spark, moved).inputFiles())
+    snap.write_snapshot(spark.createDataFrame([(3, 0)], "id long, v long"), moved)
+    assert 3 in _ids(snap.read_snapshot(spark, moved))

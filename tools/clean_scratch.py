@@ -1,28 +1,37 @@
 #!/usr/bin/env python
-"""Remove per-run SCRATCH directories under /tmp without touching the
-mtime-keyed FIXTURE caches.
+"""Remove per-run SCRATCH directories under the temp dir without
+touching the FIXTURE cache.
 
 Why this exists: a round-6 investigation found bench totals inflating
 ~15% over a day of reruns; deleting ~1.6k accumulated scratch dirs
 (streaming checkpoints, state stores, one-shot sink targets) restored
 them (278 s -> 238 s at sf0.1, median per-query ratio back to ~1.07 of
 the fresh-machine run).  Scratch is written by ``tempfile.mkdtemp`` and
-never reused across invocations; fixtures (bm25/amqp/cluster/ANN
-indexes and the snapshot/evolution corpora) are deterministic
-``rtdac_<name>_<sfdir>_<mtime>_<size>`` names that bench.py deliberately
-reuses so their one-time build stays outside timed sections — deleting
-those silently moves the build INTO the next run's timings (observed:
-streaming_incremental_index +15 s).
+never reused across invocations.  Fixtures (indexes, bus dumps,
+snapshot and pair tables, stream staging, the derived sf1 dataset) all
+live under ONE root, ``rtdac_fixtures/`` (see
+real_time_data_analytics_cassandra_spark/fixture_cache.py), which
+bench.py deliberately reuses so their one-time build stays outside
+timed sections — deleting it silently moves the build INTO the next
+run's timings (observed: streaming_incremental_index +15 s).  Inside
+that root only crash-leaked ``*.stage-*`` build directories are
+removed.  No scratch prefix matches the root or ``rtdac_pb_shim``
+(the test suite's protobuf import shim); unknown ``rtdac_*`` names,
+old-layout fixture directories included, are kept conservatively.
 
 Run before bench.py (step 7 of the README end-of-round checklist).
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import tempfile
 from pathlib import Path
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from real_time_data_analytics_cassandra_spark.fixture_cache import ROOT  # noqa: E402
 
 # mkdtemp(prefix=...) call sites — per-run scratch, safe to remove when
 # no query is running.  Keep in sync with:
@@ -47,56 +56,19 @@ SCRATCH_PREFIXES = (
     "rtdac_streaming_kmv_",
 )
 
-# deterministic fixture caches — NEVER remove here (bench pre-builds
-# them; queries reuse them keyed on the corpus file identity)
-FIXTURE_PREFIXES = (
-    "rtdac_amqp_dump_",
-    "rtdac_ann_inc_idx_",
-    "rtdac_bm25_idx_",
-    "rtdac_bm25_inc_idx_",
-    "rtdac_bm25_stream_idx_",
-    "rtdac_ckpt_stream_idx_",  # the streamed index's REUSED checkpoint
-    "rtdac_cluster_idx_",
-    "rtdac_copurchase_",
-    "rtdac_sf1_",
-    "rtdac_evo_docs_",
-    "rtdac_imgpair_idx_",
-    "rtdac_imgsig_stream_",
-    "rtdac_audpair_idx_",
-    "rtdac_pb_shim",
-    "rtdac_snap_docs_",
-    "rtdac_span_idx_v2_",
-    "rtdac_xsub_idx_v1_",
-)
-
-# fixtures addressed by EXACT directory name (digest subdirs inside) —
-# a prefix match would shadow the rtdac_streaming_* scratch families
-FIXTURE_EXACT = ("rtdac_stream", "rtdac_stream_sharded")
-
 
 def main() -> None:
     tmp = Path(tempfile.gettempdir())
-    removed = kept = 0
+    doomed = list((tmp / ROOT).glob("*.stage-*"))
+    kept = 0
     for d in tmp.glob("rtdac_*"):
-        name = d.name
-        # crash-leaked atomic-build staging copies (renamed into the
-        # fixture path on success) are scratch regardless of prefix
-        if ".stage-" in name:
-            shutil.rmtree(d, ignore_errors=True)
-            removed += 1
-            continue
-        # fixtures win over scratch on any prefix overlap
-        if name in FIXTURE_EXACT or any(
-            name.startswith(p) for p in FIXTURE_PREFIXES
-        ):
-            kept += 1
-            continue
-        if any(name.startswith(p) for p in SCRATCH_PREFIXES):
-            shutil.rmtree(d, ignore_errors=True)
-            removed += 1
+        if d.name.startswith(SCRATCH_PREFIXES):
+            doomed.append(d)
         else:
-            kept += 1  # unknown pattern: be conservative
-    print(f"removed {removed} scratch dirs, kept {kept}", file=sys.stderr)
+            kept += 1  # the fixture root, the shim, or unknown: keep
+    for d in doomed:
+        shutil.rmtree(d, ignore_errors=True)
+    print(f"removed {len(doomed)} scratch dirs, kept {kept}", file=sys.stderr)
 
 
 if __name__ == "__main__":

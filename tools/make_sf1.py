@@ -27,8 +27,9 @@ just size) would change:
   positions — norms and within-copy geometry identical, cross-copy
   vectors decorrelated.
 
-Output: /tmp/rtdac_sf1_<mtime>_<size>/<table>.parquet (mtime-keyed,
-marker-guarded fixture cache like the bm25/copurchase fixtures;
+Output: <fixture dir>/<table>.parquet, a build-once fixture keyed on
+every source table's mtime and size
+(real_time_data_analytics_cassandra_spark/fixture_cache.py;
 tools/clean_scratch.py preserves it).  This dataset exists for
 SCALING measurements only — correctness oracles always run on the
 driver-provided testdata.
@@ -39,12 +40,18 @@ from __future__ import annotations
 import hashlib
 import os
 import re
-import tempfile
+import sys
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from real_time_data_analytics_cassandra_spark.fixture_cache import (  # noqa: E402
+    build_once,
+    fixture_path,
+)
 
 SRC = "/root/testdata/sf0.1"
 COPIES = 10
@@ -85,15 +92,8 @@ def _rehash_text(text: str, copy: int, cache: dict) -> str:
     return _WORD.sub(sub, text)
 
 
-def ensure_sf1() -> str:
-    st = os.stat(os.path.join(SRC, "lineitem.parquet"))
-    out = os.path.join(
-        tempfile.gettempdir(), f"rtdac_sf1_{int(st.st_mtime)}_{st.st_size}"
-    )
-    marker = os.path.join(out, "_complete")
-    if os.path.exists(marker):
-        return out
-    os.makedirs(out, exist_ok=True)
+def _build(out: str) -> None:
+    os.makedirs(out)
     for t in DIMENSIONS:
         pq.write_table(
             pq.read_table(os.path.join(SRC, f"{t}.parquet")),
@@ -133,9 +133,12 @@ def ensure_sf1() -> str:
         pq.write_table(
             pa.concat_tables(parts), os.path.join(out, f"{t}.parquet")
         )
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return out
+
+
+def ensure_sf1() -> str:
+    return build_once(
+        fixture_path("sf1", 1, SRC, DIMENSIONS + list(KEY_COLS)), _build
+    )
 
 
 if __name__ == "__main__":

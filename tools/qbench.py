@@ -60,13 +60,7 @@ def main() -> None:
     # same session warmups as bench.py so first-query costs don't
     # pollute the first named query
     force(registry["latest_info_point_lookup"](spark, sf_dir))
-    q.build_amqp_dump_fixture(spark, sf_dir)
-    q.build_text_index_fixture(spark, sf_dir)
-    q.build_cluster_index_fixture(spark, sf_dir)
-    q.build_copurchase_pairs_fixture(spark, sf_dir)
-    q.build_image_pair_index_fixture(spark, sf_dir)
-    q.build_audio_pair_index_fixture(spark, sf_dir)
-    force(q.streaming_image_signature_clusters(spark, sf_dir))
+    q.prebuild_fixtures(spark, sf_dir)
     force(q.amqp_replay_type_counts(spark, "/root/testdata/sf0.001"))
     force(q.multimodal_decode_meta(spark, "/root/testdata/sf0.001"))
     force(q.geo_hourly_counts(spark, "/root/testdata/sf0.001"))
