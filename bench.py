@@ -345,12 +345,14 @@ EXPECTED_DRIFT = {
         "(shares the cached shingle pass — see minhash_lsh's entry)"
     ),
     "minhash_lsh": (
-        "r13 measurement fix, not a plan change: bench.py now clears "
-        "the SQL cache between its interleaved rounds (r12 verdict "
-        "item 3), so the shared shingle pass this query .cache()s is "
-        "rebuilt cold in every round — r12's rounds 2-3 read round "
-        "1's still-cached relation and the old median partly measured "
-        "cache-hit time.  Code path unchanged since r12's shared-pass "
+        "r13 measurement fix, not a plan change: bench.py clears the "
+        "SQL cache before every timed query (r12 verdict item 3), so "
+        "the shared shingle pass this query .cache()s is rebuilt cold "
+        "in every sample — r12's rounds 2-3 read round 1's "
+        "still-cached relation, and while r13 cleared once per round "
+        "the later of this query and cross_source_dup_matrix read "
+        "the other's pass, so those medians partly measured cache-hit "
+        "time.  Code path unchanged since r12's shared-pass "
         "optimization — see OPTIMIZATION_r13.md 'Measurement fixes'"
     ),
     "cross_source_dup_matrix": (
@@ -372,17 +374,10 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else None
-
-    spark = get_spark(app_name="rtdac-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    registry = q.queries()
-
+def warm_session(spark, sf_dir: str) -> None:
+    """Pay the one-time session costs before anything is timed."""
     # JVM/codegen warmup on an off-benchmark query
-    force(registry["latest_info_point_lookup"](spark, sf_dir))
+    force(q.latest_info_point_lookup(spark, sf_dir))
     # Pre-build the write-once fixtures (bus dump, indexes, pair
     # tables, persisted stream state) so no timed section pays a build.
     q.prebuild_fixtures(spark, sf_dir)
@@ -402,6 +397,30 @@ def main() -> None:
     # scans stay cold — only session machinery warms).
     force(q.geo_hourly_counts(spark, "/root/testdata/sf0.001"))
 
+
+def time_query(spark, registry, name: str, sf_dir: str) -> float:
+    """Seconds to force one cold run of registry[name].  The SQL cache
+    is cleared first: Spark's CacheManager matches canonicalized plans,
+    so a .cache() populated by an earlier sample — of this query or of
+    another sharing the pass, as minhash_lsh and cross_source_dup_matrix
+    share one shingle pass — would serve this one warm and the timing
+    would be cache-hit time, not the query."""
+    spark.catalog.clearCache()
+    t0 = time.monotonic()
+    force(registry[name](spark, sf_dir))
+    return time.monotonic() - t0
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else None
+
+    spark = get_spark(app_name="rtdac-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    registry = q.queries()
+    warm_session(spark, sf_dir)
+
     # Median-of-N per query (default 3): this host's wall clock
     # oscillates ±30% between identical-code runs, so a single sample
     # is noise — medians are the stable signal.  Rounds are
@@ -413,17 +432,9 @@ def main() -> None:
     samples: dict[str, list[float]] = {n: [] for n in BENCH_QUERIES}
     per_run_totals: list[float] = []
     for r in range(n_runs):
-        # Cold plans per round (r12 verdict): Spark's CacheManager
-        # matches canonicalized plans, so an intra-query .cache()
-        # populated in round 1 would serve rounds 2-3 warm and the
-        # median would reflect cache-hit time, not the query.  One
-        # clear per round keeps every sample a from-parquet compute.
-        spark.catalog.clearCache()
         run_total = 0.0
         for name in BENCH_QUERIES:
-            t0 = time.monotonic()
-            force(registry[name](spark, sf_dir))
-            dt = round(time.monotonic() - t0, 3)
+            dt = round(time_query(spark, registry, name, sf_dir), 3)
             samples[name].append(dt)
             run_total += dt
             print(f"  [{r + 1}/{n_runs}] {name}: {dt:.3f}s", file=sys.stderr)

@@ -1,71 +1,74 @@
 """Local mirror of the driver's correctness gate: every queries()
 entry with an oracle_sql() entry must match DuckDB on the same
-parquet, compared the same way (sort columns by name, sort rows,
-value equality).  Runs at sf0.001 for speed; the driver re-runs at
-sf0.01.
+parquet, compared the same way (tools/oracle_check.py: sort columns
+by name, sort rows, exact value equality).  Runs at sf0.001 for
+speed; the driver re-runs at sf0.01.
 """
 
 from __future__ import annotations
 
-import math
-
-import duckdb
+import numpy as np
 import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
 from tests.conftest import SF_ORACLE
+from tools.oracle_check import duck, first_mismatch
 
 QUERIES = entry_mod.queries()
 ORACLES = entry_mod.oracle_sql()
 
 
-def _duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    return con
-
-
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = df[c].astype("datetime64[us]").astype(str)
-        elif df[c].dtype == object:
-            df[c] = df[c].astype(str)
-    return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
-
-
-def _values_equal(a, b) -> bool:
-    if isinstance(a, float) and isinstance(b, float):
-        if math.isnan(a) and math.isnan(b):
-            return True
-        return a == b  # we engineered exact equality; no tolerance
-    return a == b
-
-
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(spark, name):
     sdf = QUERIES[name](spark, SF_ORACLE).toPandas()
-    con = _duck(SF_ORACLE)
+    con = duck(SF_ORACLE)
     odf = con.sql(ORACLES[name]).df()
     con.close()
+    bad = first_mismatch(sdf, odf)
+    assert bad is None, f"{name}: {bad}"
 
-    assert sorted(sdf.columns) == sorted(odf.columns), (
-        f"{name}: column mismatch {sorted(sdf.columns)} vs {sorted(odf.columns)}"
-    )
-    assert len(sdf) == len(odf), f"{name}: row count {len(sdf)} vs {len(odf)}"
 
-    s_n, o_n = _normalize(sdf), _normalize(odf)
-    for col in s_n.columns:
-        sv, ov = list(s_n[col]), list(o_n[col])
-        mism = [
-            (i, x, y) for i, (x, y) in enumerate(zip(sv, ov)) if not _values_equal(x, y)
-        ]
-        assert not mism, f"{name}.{col}: first mismatches {mism[:5]}"
+_TS = pd.Timestamp("2024-03-10 02:30:00.123456")
+_NAN = float("nan")
+
+
+@pytest.mark.parametrize(
+    "a, b, reported",
+    [
+        pytest.param(
+            {"k": [1, 2], "s": ["x", "y"]},
+            {"s": ["y", "x"], "k": [2, 1]},
+            None,
+            id="row-and-column-order-ignored",
+        ),
+        pytest.param(
+            {"v": [1.0]},
+            {"v": [float(np.nextafter(1.0, 2.0))]},
+            "v[0]",
+            id="one-ulp-float-reported",
+        ),
+        pytest.param({"v": [_NAN, 1.0]}, {"v": [1.0, _NAN]}, None, id="nan-equals-nan"),
+        pytest.param({"v": [_NAN]}, {"v": [0.0]}, "v[0]", id="nan-vs-zero-reported"),
+        pytest.param(
+            {"t": pd.Series([_TS]).astype("datetime64[ns]")},
+            {"t": pd.Series([_TS]).astype("datetime64[us]")},
+            None,
+            id="ns-and-us-timestamps-equal",
+        ),
+        pytest.param({"a": [1]}, {"b": [1]}, "columns", id="column-set-reported"),
+        pytest.param({"a": [1, 1]}, {"a": [1]}, "rows", id="row-count-reported"),
+    ],
+)
+def test_first_mismatch_protocol(a, b, reported):
+    """The driver's exact compare protocol (tools/oracle_check.py),
+    Spark-free: order-insensitive, exact to the last ulp, NaN == NaN,
+    timestamp unit-insensitive, and shape checked before values."""
+    bad = first_mismatch(pd.DataFrame(a), pd.DataFrame(b))
+    if reported is None:
+        assert bad is None, bad
+    else:
+        assert bad is not None and bad.startswith(reported), bad
 
 
 @pytest.mark.slow
@@ -99,10 +102,8 @@ def test_multimodal_features_match_direct_numpy(spark):
     rows) must equal a direct numpy histogram of the same utf-8
     payloads — independent of the DuckDB oracle, which recomputes it
     character-wise in SQL."""
-    import numpy as np
-
     rows = QUERIES["multimodal_features"](spark, SF_ORACLE).collect()
-    con = _duck(SF_ORACLE)
+    con = duck(SF_ORACLE)
     texts = dict(con.sql("SELECT doc_id, text FROM documents").fetchall())
     con.close()
     assert len(rows) == len(texts) * 16
@@ -156,11 +157,8 @@ def test_blocked_all_pairs_matches_naive(spark):
     emb = table(spark, SF_ORACLE, "embeddings")
     naive = sim_op.cosine_near_dup_pairs(emb, threshold=0.35).toPandas()
     blocked = sim_op.cosine_all_pairs_blocked(emb, threshold=0.35).toPandas()
-    n = _normalize(naive)
-    b = _normalize(blocked)
-    assert len(n) == len(b)
-    for col in n.columns:
-        assert list(n[col]) == list(b[col]), col
+    bad = first_mismatch(naive, blocked)
+    assert bad is None, bad
 
 
 def test_entry_smoke(spark):
@@ -173,14 +171,12 @@ def test_audio_windows_match_direct_numpy(spark):
     """The Arrow windowed-RMS stage must equal a direct numpy model
     of the same utf-8 payloads (cross-check for the no-oracle
     windowed query)."""
-    import numpy as np
-
     from real_time_data_analytics_cassandra_spark.operators.multimodal import (
         AUDIO_WINDOW,
     )
 
     rows = QUERIES["audio_window_features"](spark, SF_ORACLE).collect()
-    con = _duck(SF_ORACLE)
+    con = duck(SF_ORACLE)
     texts = dict(con.sql("SELECT doc_id, text FROM documents").fetchall())
     con.close()
     got = {(r.doc_id, r.window_idx): (r.rms, r.zero_crossings) for r in rows}
@@ -205,7 +201,7 @@ def test_rolling_fingerprint_matches_python_model(spark):
     hash computed in pure Python (char-level codepoint fold — the
     engine-portable hash the DuckDB oracle reproduces too)."""
     rows = QUERIES["doc_rolling_fingerprint"](spark, SF_ORACLE).collect()
-    con = _duck(SF_ORACLE)
+    con = duck(SF_ORACLE)
     texts = dict(con.sql("SELECT doc_id, text FROM documents").fetchall())
     con.close()
     assert len(rows) == len(texts)

@@ -1,26 +1,29 @@
 #!/usr/bin/env python
-"""Driver-scale oracle parity sweep: run EVERY registry query against
-its DuckDB oracle at the driver's verification scale factor (sf0.01 —
-the in-repo pytest gate runs at sf0.001 for speed) under a HOSTILE
-driver-emulating session (non-UTC timezone, no pre-set confs), and
-commit the result as PARITY_sf0.01.json.
+"""Driver-emulating oracle parity sweep: run registry queries against
+their DuckDB oracles under a HOSTILE driver-like session (non-UTC
+timezone, 200 shuffle partitions, no pre-set confs), after the
+`entry(spark)` smoke the driver runs first.
 
-Why this exists: the external driver samples only ~50 queries per
-round, so a registry of 180+ means some oracle-backed queries go
-rounds without a driver check (and upgrades like the portable
-minhash/simhash oracles can sit unverified at driver scale).  This
-sweep is the committed evidence that all of them match at sf0.01 —
-regenerate once per round with `python tools/parity_sweep.py`.
+    python tools/parity_sweep.py [--sf DIR] [name ...]
 
-Comparison protocol mirrors the driver (and
-tests/test_oracle_parity.py): sort columns by name, sort rows, exact
-value equality (NaN==NaN), no float tolerance.
+With no names it sweeps the whole registry and writes
+PARITY_sf<X>.json — the committed evidence that every oracle-backed
+query matches at the driver's scale factor (sf0.01, the default; the
+in-repo pytest gate runs at sf0.001).  With names it checks only those
+and writes nothing, so a subset run never overwrites the full-sweep
+evidence.  Prints one OK/ROWSONLY/FAIL/ERROR line per query and exits
+non-zero on any failure.
+
+Why the full sweep exists: the external driver samples only ~50
+queries per round, so without it some oracle-backed queries would go
+rounds without a driver-scale check.  Compare protocol:
+tools/oracle_check.py.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
-import math
 import os
 import sys
 import time
@@ -28,124 +31,85 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SF = os.environ.get("SPARK_GRAFT_SF_DIR_PARITY", "/root/testdata/sf0.01")
-OUT = os.path.join(REPO, f"PARITY_sf{SF.rsplit('sf', 1)[-1]}.json")
-
-
-def _normalize(df):
-    import pandas as pd
-
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = df[c].astype("datetime64[us]").astype(str)
-        elif df[c].dtype == object:
-            df[c] = df[c].astype(str)
-    return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(
-        drop=True
-    )
-
-
-def _eq(a, b):
-    if isinstance(a, float) and isinstance(b, float):
-        if math.isnan(a) and math.isnan(b):
-            return True
-        return a == b
-    return a == b
+from tools.oracle_check import duck, first_mismatch, hostile_session  # noqa: E402
 
 
 def main() -> None:
-    import duckdb
-    from pyspark.sql import SparkSession
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--sf", default="/root/testdata/sf0.01", help="testdata dir")
+    ap.add_argument("names", nargs="*", help="queries to check (default: all)")
+    args = ap.parse_args()
+    sf = args.sf
 
-    # hostile on purpose: the engine must self-configure (UTC pin,
-    # parquet timestamp confs) via ensure_query_confs, exactly as it
-    # must under the external driver's session
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.session.timeZone", "America/New_York")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
+    spark = hostile_session()
     import __spark_entry__ as m
 
-    Q, O = m.queries(), m.oracle_sql()
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+    n = m.entry(spark).count()
+    print(f"SMOKE entry rows: {n}", flush=True)
+    if n == 0:
+        sys.exit("entry(spark) returned no rows")
 
+    Q, O = m.queries(), m.oracle_sql()
+    con = duck(sf)
     results: dict[str, dict] = {}
     t_start = time.monotonic()
-    for name in sorted(Q):
+    for name in args.names or sorted(Q):
         row: dict = {}
         try:
-            sdf = Q[name](spark, SF).toPandas()
+            sdf = Q[name](spark, sf).toPandas()
             row["spark_rows"] = int(len(sdf))
             if name not in O:
                 row["status"] = "rows_only_no_oracle"
-                results[name] = row
-                print(f"  ROWSONLY {name}: {len(sdf)}", file=sys.stderr)
-                continue
-            odf = con.sql(O[name]).df()
-            row["oracle_rows"] = int(len(odf))
-            row["schema_match"] = sorted(sdf.columns) == sorted(odf.columns)
-            row["rows_match"] = len(sdf) == len(odf)
-            if not (row["schema_match"] and row["rows_match"]):
-                row["status"] = "mismatch"
-                results[name] = row
-                print(f"  FAIL {name}: shape", file=sys.stderr)
-                continue
-            s_n, o_n = _normalize(sdf), _normalize(odf)
-            bad = None
-            for col in s_n.columns:
-                for i, (x, y) in enumerate(zip(list(s_n[col]), list(o_n[col]))):
-                    if not _eq(x, y):
-                        bad = [col, i, repr(x), repr(y)]
-                        break
-                if bad:
-                    break
-            row["values_match"] = bad is None
-            row["status"] = "match" if bad is None else "mismatch"
-            if bad:
-                row["first_mismatch"] = bad
-                print(f"  FAIL {name}: {bad}", file=sys.stderr)
+                print(f"ROWSONLY {name}: {len(sdf)}", flush=True)
             else:
-                print(f"  OK {name}: {len(sdf)}", file=sys.stderr)
+                odf = con.sql(O[name]).df()
+                row["oracle_rows"] = int(len(odf))
+                row["schema_match"] = sorted(sdf.columns) == sorted(odf.columns)
+                row["rows_match"] = len(sdf) == len(odf)
+                bad = first_mismatch(sdf, odf)
+                if row["schema_match"] and row["rows_match"]:
+                    row["values_match"] = bad is None
+                row["status"] = "match" if bad is None else "mismatch"
+                if bad:
+                    row["first_mismatch"] = bad
+                    print(f"FAIL {name}: {bad[:300]}", flush=True)
+                else:
+                    print(f"OK {name}: {len(sdf)}", flush=True)
         except Exception as e:  # noqa: BLE001 - sweep must finish
             row["status"] = "error"
             row["error"] = f"{type(e).__name__}: {e}"[:400]
-            print(f"  ERROR {name}: {row['error'][:150]}", file=sys.stderr)
+            print(f"ERROR {name}: {row['error'][:150]}", flush=True)
         results[name] = row
 
-    n_match = sum(1 for r in results.values() if r.get("status") == "match")
+    n_match = sum(1 for r in results.values() if r["status"] == "match")
     n_rows_only = sum(
-        1 for r in results.values() if r.get("status") == "rows_only_no_oracle"
+        1 for r in results.values() if r["status"] == "rows_only_no_oracle"
     )
     n_bad = len(results) - n_match - n_rows_only
-    payload = {
-        "sf_dir": SF,
-        "protocol": "driver (sorted columns/rows, exact value equality)",
-        "total_queries": len(results),
-        "oracle_backed": len(results) - n_rows_only,
-        "matched": n_match,
-        "rows_only": n_rows_only,
-        "failed": n_bad,
-        "wall_clock_sec": round(time.monotonic() - t_start, 1),
-        "results": results,
-    }
-    with open(OUT, "w") as fh:
-        json.dump(payload, fh, indent=1, sort_keys=True)
-        fh.write("\n")
-    print(
-        f"wrote {OUT}: {n_match}/{len(results) - n_rows_only} oracle-backed "
-        f"matched, {n_rows_only} rows-only, {n_bad} failed"
+    summary = (
+        f"{n_match}/{len(results) - n_rows_only} oracle-backed matched, "
+        f"{n_rows_only} rows-only, {n_bad} failed"
     )
+    if args.names:
+        print(summary)
+    else:
+        out = os.path.join(REPO, f"PARITY_sf{sf.rsplit('sf', 1)[-1]}.json")
+        payload = {
+            "sf_dir": sf,
+            "protocol": "driver (sorted columns/rows, exact value equality)",
+            "total_queries": len(results),
+            "oracle_backed": len(results) - n_rows_only,
+            "matched": n_match,
+            "rows_only": n_rows_only,
+            "failed": n_bad,
+            "wall_clock_sec": round(time.monotonic() - t_start, 1),
+            "results": results,
+        }
+        with open(out, "w") as fh:
+            json.dump(payload, fh, indent=1, sort_keys=True)
+            fh.write("\n")
+        print(f"wrote {out}: {summary}")
+    con.close()
     spark.stop()
     if n_bad:
         sys.exit(1)

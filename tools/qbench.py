@@ -1,14 +1,13 @@
 #!/usr/bin/env python
 """Per-query micro-bench: time NAMED registry queries with the noop
-sink in one warmed session (same warmups as bench.py), print
+sink in one warmed session (bench.warm_session), print
 per-query samples + median, and optionally dump the formatted plan
 to plans/<dir>/<name>_<tag>.txt.
 
-Every sample starts from a cleared cache (r13): bench.py clears
-between rounds for the same reason — an intra-query .cache()
-populated by sample 1 would serve samples 2..n warm and the median
-would flatter exactly the shared-pass optimizations this tool is
-meant to judge.
+Every sample starts from a cleared cache (bench.time_query, as in
+bench.py): an intra-query .cache() populated by sample 1 would serve
+samples 2..n warm and the median would flatter exactly the
+shared-pass optimizations this tool is meant to judge.
 
 Usage:
     python tools/qbench.py [--n 5] [--sf /root/testdata/sf0.1] \
@@ -21,16 +20,12 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import time_query, warm_session  # noqa: E402
 from real_time_data_analytics_cassandra_spark import queries as q  # noqa: E402
 from real_time_data_analytics_cassandra_spark.session import get_spark  # noqa: E402
-
-
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
@@ -57,13 +52,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     registry = q.queries()
 
-    # same session warmups as bench.py so first-query costs don't
-    # pollute the first named query
-    force(registry["latest_info_point_lookup"](spark, sf_dir))
-    q.prebuild_fixtures(spark, sf_dir)
-    force(q.amqp_replay_type_counts(spark, "/root/testdata/sf0.001"))
-    force(q.multimodal_decode_meta(spark, "/root/testdata/sf0.001"))
-    force(q.geo_hourly_counts(spark, "/root/testdata/sf0.001"))
+    warm_session(spark, sf_dir)
 
     plans_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -83,12 +72,9 @@ def main() -> None:
                 os.path.join(plans_dir, f"{name}_{plans_tag}.txt"), "w"
             ) as f:
                 f.write(plan)
-        times = []
-        for _ in range(n):
-            spark.catalog.clearCache()
-            t0 = time.monotonic()
-            force(registry[name](spark, sf_dir))
-            times.append(round(time.monotonic() - t0, 3))
+        times = [
+            round(time_query(spark, registry, name, sf_dir), 3) for _ in range(n)
+        ]
         out[name] = {
             "samples": times,
             "median": round(statistics.median(times), 3),

@@ -24,6 +24,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import force  # noqa: E402
 from real_time_data_analytics_cassandra_spark import queries as q  # noqa: E402
 from real_time_data_analytics_cassandra_spark.session import get_spark  # noqa: E402
 
@@ -150,10 +151,6 @@ OUT = os.path.join(
 )
 
 
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
 def main() -> None:
     spark = get_spark(app_name="rtdac-scaling")
     spark.sparkContext.setLogLevel("ERROR")
@@ -194,7 +191,7 @@ def main() -> None:
     with open(OUT, "w") as fh:
         fh.write(
             "# SCALING — measured runtime vs scale factor\n\n"
-            "Median of {n} warmed runs per point on local[32]; slope = "
+            "Median of {n} warmed runs per point on {master}; slope = "
             "log10(t(sf0.1)/t(sf0.01)) — data grows 10x between those "
             "points, so slope 1.0 = linear scaling, <1 = fixed costs "
             "still amortizing, >1.3 would flag super-linear work "
@@ -208,7 +205,9 @@ def main() -> None:
             "Regenerate: `python tools/scaling_report.py`.\n\n"
             "| family | query | sf0.001 s | sf0.01 s | sf0.1 s | "
             "slope | sf1 s | slope 0.1→1 |\n"
-            "|---|---|---|---|---|---|---|---|\n".format(n=N)
+            "|---|---|---|---|---|---|---|---|\n".format(
+                n=N, master=spark.sparkContext.master
+            )
         )
         for family, name, times, slope, slope1 in rows:
             flag = " ⚠" if slope > 1.3 else ""

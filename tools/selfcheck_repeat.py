@@ -1,6 +1,8 @@
 #!/usr/bin/env python
 """Repeat-invocation self-consistency sweep: run EVERY registry query
-TWICE in one session at sf0.001 and require bit-identical results.
+TWICE in one session and require bit-identical results.
+
+    python tools/selfcheck_repeat.py [--sf DIR]   # default sf0.001
 
 What this catches that the oracle parity sweep cannot:
 
@@ -14,15 +16,14 @@ What this catches that the oracle parity sweep cannot:
   across back-to-back runs even though a single run can hash-match a
   similarly-nondeterministic oracle by luck.
 
-Comparison: sort columns by name, sort rows, exact value equality
-(NaN==NaN) — same protocol as tools/parity_sweep.py.  Writes
-SELFCHECK_sf0.001.json; exits nonzero on any inconsistency.
+Comparison: the driver protocol of tools/oracle_check.py.  Writes
+SELFCHECK_sf<X>.json; exits nonzero on any inconsistency.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
-import math
 import os
 import sys
 import time
@@ -30,57 +31,16 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SF = os.environ.get("SPARK_GRAFT_SF_DIR_SELFCHECK", "/root/testdata/sf0.001")
-OUT = os.path.join(REPO, f"SELFCHECK_sf{SF.rsplit('sf', 1)[-1]}.json")
-
-
-def _normalize(df):
-    import pandas as pd
-
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = df[c].astype("datetime64[us]").astype(str)
-        elif df[c].dtype == object:
-            df[c] = df[c].astype(str)
-    return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(
-        drop=True
-    )
-
-
-def _eq(a, b):
-    if isinstance(a, float) and isinstance(b, float):
-        if math.isnan(a) and math.isnan(b):
-            return True
-        return a == b
-    return a == b
-
-
-def _first_diff(a, b):
-    if sorted(a.columns) != sorted(b.columns):
-        return ["schema", sorted(a.columns), sorted(b.columns)]
-    if len(a) != len(b):
-        return ["rowcount", len(a), len(b)]
-    a_n, b_n = _normalize(a), _normalize(b)
-    for col in a_n.columns:
-        for i, (x, y) in enumerate(zip(list(a_n[col]), list(b_n[col]))):
-            if not _eq(x, y):
-                return [col, i, repr(x), repr(y)]
-    return None
+from tools.oracle_check import first_mismatch, hostile_session  # noqa: E402
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--sf", default="/root/testdata/sf0.001", help="testdata dir")
+    sf = ap.parse_args().sf
+    out = os.path.join(REPO, f"SELFCHECK_sf{sf.rsplit('sf', 1)[-1]}.json")
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.session.timeZone", "America/New_York")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
+    spark = hostile_session()
     import __spark_entry__ as m
 
     Q = m.queries()
@@ -89,10 +49,10 @@ def main() -> None:
     for name in sorted(Q):
         row: dict = {}
         try:
-            first = Q[name](spark, SF).toPandas()
-            second = Q[name](spark, SF).toPandas()
+            first = Q[name](spark, sf).toPandas()
+            second = Q[name](spark, sf).toPandas()
             row["rows"] = int(len(first))
-            diff = _first_diff(first, second)
+            diff = first_mismatch(first, second)
             row["status"] = "consistent" if diff is None else "inconsistent"
             if diff is not None:
                 row["first_diff"] = diff
@@ -108,7 +68,7 @@ def main() -> None:
     n_ok = sum(1 for r in results.values() if r.get("status") == "consistent")
     n_bad = len(results) - n_ok
     payload = {
-        "sf_dir": SF,
+        "sf_dir": sf,
         "protocol": (
             "two invocations per query in one session; sorted columns/rows, "
             "exact value equality"
@@ -119,10 +79,10 @@ def main() -> None:
         "wall_clock_sec": round(time.monotonic() - t_start, 1),
         "results": results,
     }
-    with open(OUT, "w") as fh:
+    with open(out, "w") as fh:
         json.dump(payload, fh, indent=1, sort_keys=True)
         fh.write("\n")
-    print(f"wrote {OUT}: {n_ok}/{len(results)} consistent, {n_bad} failed")
+    print(f"wrote {out}: {n_ok}/{len(results)} consistent, {n_bad} failed")
     spark.stop()
     if n_bad:
         sys.exit(1)
