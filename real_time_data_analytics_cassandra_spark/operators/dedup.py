@@ -30,6 +30,7 @@ from real_time_data_analytics_cassandra_spark.functions.textfns import (
     tokens,
     word_ngrams,
 )
+from real_time_data_analytics_cassandra_spark.session import conf_override
 
 # Mersenne-ish prime > 2^32 for the universal-hash permutations.
 _MINHASH_P = 4294967311
@@ -670,11 +671,7 @@ def exact_substr_index_batch(
             index_path
         )
     else:
-        from real_time_data_analytics_cassandra_spark.sinks.merge import _conf
-
-        with _conf(
-            spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        ):
+        with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
             new_index_rows.write.mode("overwrite").partitionBy(
                 "bucket"
             ).parquet(index_path)
@@ -1000,11 +997,7 @@ def span_index_dedup_batch(
             index_path
         )
     else:
-        from real_time_data_analytics_cassandra_spark.sinks.merge import _conf
-
-        with _conf(
-            spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        ):
+        with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
             new_index_rows.write.mode("overwrite").partitionBy(
                 "bucket"
             ).parquet(index_path)

@@ -43,6 +43,7 @@ from real_time_data_analytics_cassandra_spark.operators.sampling import (
 )
 from real_time_data_analytics_cassandra_spark.operators.text import bm25_rank
 from real_time_data_analytics_cassandra_spark.functions.textfns import tokens
+from real_time_data_analytics_cassandra_spark.session import conf_override
 
 N_BUCKETS = 64
 
@@ -168,8 +169,6 @@ def _refresh_derived(spark, path: str, buckets: list[int], n_buckets: int):
     directory (possibly already containing the crashed batch's
     counts) and a retried append would merge on top of it, doubling
     dfreq."""
-    from real_time_data_analytics_cassandra_spark.sinks.merge import _conf
-
     if buckets:
         fs, _ = _fs(spark, f"{path}/termstats")
         for bkt in buckets:
@@ -183,9 +182,7 @@ def _refresh_derived(spark, path: str, buckets: list[int], n_buckets: int):
             .agg(F.count(F.lit(1)).cast("bigint").alias("dfreq"))
             .localCheckpoint(eager=True)
         )
-        with _conf(
-            spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        ):
+        with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
             (
                 derived.repartition("bucket")
                 .write.mode("overwrite")
@@ -353,8 +350,6 @@ def append_text_index(
     # the affected postings buckets (vocab slice vs postings slice);
     # the repair path re-derives from postings instead, which is why
     # a crash between the postings write and this overwrite is safe
-    from real_time_data_analytics_cassandra_spark.sinks.merge import _conf
-
     new_counts = postings.groupBy("term", "bucket").agg(
         F.count(F.lit(1)).cast("bigint").alias("dfreq")
     )
@@ -369,7 +364,7 @@ def append_text_index(
         .agg(F.sum("dfreq").cast("bigint").alias("dfreq"))
         .localCheckpoint(eager=True)
     )
-    with _conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
+    with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
         (
             merged.repartition("bucket")
             .write.mode("overwrite")

@@ -13,6 +13,8 @@ import re
 
 from pyspark.sql import DataFrame
 
+from real_time_data_analytics_cassandra_spark.session import conf_override
+
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
@@ -43,16 +45,11 @@ def wholestage_codegen_count(df: DataFrame) -> int:
     for inspection (the conf is restored afterwards; inspection only,
     execution still runs with AQE).
     """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with conf_override(df.sparkSession, "spark.sql.adaptive.enabled", "false"):
         # note: queryExecution memoizes the physical plan on first
         # access, so call this before other explain helpers on the
         # same DataFrame
         text = explain_str(df, "codegen")
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
     m = re.search(r"Found (\d+) WholeStageCodegen subtrees", text)
     return int(m.group(1)) if m else 0
 
@@ -75,13 +72,8 @@ def scan_count(df: DataFrame, table_name: str) -> int:
     defers exchange reuse to runtime (the pre-execution adaptive plan
     still shows both subtrees), so planning is inspected with AQE off
     — same restore discipline as wholestage_codegen_count."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with conf_override(df.sparkSession, "spark.sql.adaptive.enabled", "false"):
         text = explain_str(df)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
     # one chunk per '(n) Scan parquet' details block (anchored at line
     # start — the first block can share a split chunk with the tree)
     chunks = re.findall(

@@ -85,7 +85,10 @@ from real_time_data_analytics_cassandra_spark.operators import (
 from real_time_data_analytics_cassandra_spark.operators import (
     topk as topk_op,
 )
-from real_time_data_analytics_cassandra_spark.session import ensure_query_confs
+from real_time_data_analytics_cassandra_spark.session import (
+    conf_override,
+    ensure_query_confs,
+)
 
 # ---------------------------------------------------------------------------
 # shared pieces
@@ -2718,6 +2721,9 @@ def build_image_pair_index_fixture(spark: SparkSession, sf_dir: str) -> str:
     from real_time_data_analytics_cassandra_spark.sources.streams import (
         sharded_table_stream,
     )
+    from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
+        start_available_now,
+    )
 
     ensure_query_confs(spark)
 
@@ -2740,13 +2746,7 @@ def build_image_pair_index_fixture(spark: SparkSession, sf_dir: str) -> str:
                 max_hamming=3,
             )
 
-        (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", f"{idx}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+        start_available_now(stream, _fold, f"{idx}/ckpt").awaitTermination()
 
     return build_once(
         fixture_path("imgpair_idx", 1, sf_dir, ["documents"]), _build
@@ -2849,28 +2849,19 @@ def streaming_domain_crawl_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: state is one row per distinct (domain, text-hash,
     page) — the crawl frontier's own cardinality; the readout is two
     hash aggregates and a join, same as batch."""
-    import tempfile
 
-    from real_time_data_analytics_cassandra_spark.sources.streams import (
-        bounded_table_stream,
-    )
-    from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
-        run_available_now,
-    )
+    def build(docs: DataFrame) -> DataFrame:
+        base = url_op.canonicalize_urls(
+            url_op.synthetic_crawl_urls(
+                docs.select("doc_id", "source", "lang", "text")
+            )
+        ).select("domain", F.md5(F.col("text")).alias("h"), "canon_url")
+        return base.groupBy("domain", "h", "canon_url").agg(
+            F.count(F.lit(1)).cast("long").alias("c")
+        )
 
-    ensure_query_confs(spark)
-    docs = bounded_table_stream(spark, sf_dir, "documents").select(
-        "doc_id", "source", "lang", "text"
-    )
-    base = url_op.canonicalize_urls(
-        url_op.synthetic_crawl_urls(docs)
-    ).select("domain", F.md5(F.col("text")).alias("h"), "canon_url")
-    per_q = base.groupBy("domain", "h", "canon_url").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    ckpt = tempfile.mkdtemp(prefix="rtdac_ckpt_streaming_domstats_")
-    per = run_available_now(
-        per_q, "streaming_domain_crawl_stats_q", ckpt, output_mode="complete"
+    per = _run_streaming(
+        spark, sf_dir, build, "streaming_domain_crawl_stats_q", table="documents"
     )
     # the readout consumes the memory-sink table TWICE (hash rollup +
     # page rollup); cutting the lineage avoids the memory relation's
@@ -2993,6 +2984,9 @@ def build_audio_pair_index_fixture(spark: SparkSession, sf_dir: str) -> str:
     from real_time_data_analytics_cassandra_spark.sources.streams import (
         sharded_table_stream,
     )
+    from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
+        start_available_now,
+    )
 
     ensure_query_confs(spark)
 
@@ -3015,13 +3009,7 @@ def build_audio_pair_index_fixture(spark: SparkSession, sf_dir: str) -> str:
                 max_hamming=7,
             )
 
-        (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", f"{idx}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+        start_available_now(stream, _fold, f"{idx}/ckpt").awaitTermination()
 
     return build_once(
         fixture_path("audpair_idx", 1, sf_dir, ["documents"]), _build
@@ -3720,7 +3708,7 @@ def streaming_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_query_confs(spark)
-    tmp = tempfile.mkdtemp(prefix="rtdac_firstseen_")
+    tmp = tempfile.mkdtemp(prefix="rtdac_ckpt_streaming_new_vs_returning_")
     path, ckpt = f"{tmp}/firsts", f"{tmp}/ckpt"
     stream = bounded_event_stream(spark, sf_dir).select(
         "user_id",
@@ -4790,19 +4778,32 @@ def per_type_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _run_streaming(
-    spark: SparkSession, sf_dir: str, build, name: str, **run_kwargs
+    spark: SparkSession,
+    sf_dir: str,
+    build,
+    name: str,
+    table: str = "events",
+    **run_kwargs,
 ) -> DataFrame:
+    """Drain ``build(stream)`` over the bounded replay of ``table`` into
+    the memory sink ``name`` (:func:`run_available_now`); ``events``
+    arrives with a normalized ``ts``."""
     import tempfile
 
     from real_time_data_analytics_cassandra_spark.sources.streams import (
         bounded_event_stream,
+        bounded_table_stream,
     )
     from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
         run_available_now,
     )
 
     ensure_query_confs(spark)
-    stream = bounded_event_stream(spark, sf_dir)
+    stream = (
+        bounded_event_stream(spark, sf_dir)
+        if table == "events"
+        else bounded_table_stream(spark, sf_dir, table)
+    )
     ckpt = tempfile.mkdtemp(prefix=f"rtdac_ckpt_{name}_")
     return run_available_now(build(stream), name, ckpt, **run_kwargs)
 
@@ -4840,23 +4841,15 @@ def streaming_latest_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState general case is its tested twin);
     update-mode re-emits are collapsed with the batch argmax so the
     result is the final state — same oracle as latest_info_per_user."""
-    import tempfile
-
-    from real_time_data_analytics_cassandra_spark.sources.streams import (
-        bounded_event_stream,
-    )
     from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
         latest_upsert_stream_jvm,
-        run_available_now,
     )
 
-    ensure_query_confs(spark)
-    stream = bounded_event_stream(spark, sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="rtdac_ckpt_upsert_")
-    emitted = run_available_now(
-        latest_upsert_stream_jvm(stream),
+    emitted = _run_streaming(
+        spark,
+        sf_dir,
+        latest_upsert_stream_jvm,
         "streaming_latest_upsert_q",
-        ckpt,
         output_mode="update",
     )
     return latest_op.latest_per_key(emitted, ["user_id"], "ts", ["event_id"]).select(
@@ -4887,26 +4880,19 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sight.  (Bounded replay runs unwatermarked = accept-late-forever,
     matching the reference's semantics ST3; production passes a
     watermark sized to the bus's redelivery horizon.)"""
-    import tempfile
-
     from real_time_data_analytics_cassandra_spark.sources.streams import (
         bounded_event_stream,
     )
     from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
         dedup_events,
-        run_available_now,
     )
 
-    ensure_query_confs(spark)
-    doubled = bounded_event_stream(spark, sf_dir).unionByName(
-        bounded_event_stream(spark, sf_dir)
-    )
-    ckpt = tempfile.mkdtemp(prefix="rtdac_ckpt_dedup_")
-    return run_available_now(
-        dedup_events(doubled, watermark=None),
-        "streaming_dedup_q",
-        ckpt,
-        output_mode="append",
+    def build(stream: DataFrame) -> DataFrame:
+        doubled = stream.unionByName(bounded_event_stream(spark, sf_dir))
+        return dedup_events(doubled, watermark=None)
+
+    return _run_streaming(
+        spark, sf_dir, build, "streaming_dedup_q", output_mode="append"
     )
 
 
@@ -4916,23 +4902,15 @@ def streaming_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFram
     signup_purchase_interval_join) — watermark-bounded join state on
     both sides.  Append mode; gated against the batch range-join
     oracle."""
-    import tempfile
-
-    from real_time_data_analytics_cassandra_spark.sources.streams import (
-        bounded_event_stream,
-    )
     from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
-        run_available_now,
         signup_purchase_interval_join,
     )
 
-    ensure_query_confs(spark)
-    stream = bounded_event_stream(spark, sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="rtdac_ckpt_ssjoin_")
-    return run_available_now(
-        signup_purchase_interval_join(stream),
+    return _run_streaming(
+        spark,
+        sf_dir,
+        signup_purchase_interval_join,
         "streaming_purchase_attribution_q",
-        ckpt,
         output_mode="append",
     )
 
@@ -5773,37 +5751,24 @@ def streaming_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit, the same claim as streaming_ols_trend for trends.
     This is the production drift monitor: arms accumulate in
     streaming state, the sup-norm is evaluated on demand."""
-    import tempfile
-
     from real_time_data_analytics_cassandra_spark.operators.sampling import (
         hash_bucket,
     )
     from real_time_data_analytics_cassandra_spark.functions.numeric import money
-    from real_time_data_analytics_cassandra_spark.sources.streams import (
-        bounded_table_stream,
-    )
-    from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
-        run_available_now,
-    )
 
-    ensure_query_confs(spark)
-    ev_stream = (
-        bounded_table_stream(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select(
+    def build(stream: DataFrame) -> DataFrame:
+        ev_stream = stream.filter(F.col("event_type") == "purchase").select(
             hash_bucket("user_id", 2).alias("arm"),
             money(F.col("value")).alias("v"),
         )
+        return ev_stream.groupBy("v").agg(
+            F.sum((F.col("arm") == 0).cast("long")).alias("ca"),
+            F.sum((F.col("arm") == 1).cast("long")).alias("cb"),
+        )
+
+    return _ks_from_value_counts(
+        _run_streaming(spark, sf_dir, build, "streaming_ks_drift_q")
     )
-    per_v_q = ev_stream.groupBy("v").agg(
-        F.sum((F.col("arm") == 0).cast("long")).alias("ca"),
-        F.sum((F.col("arm") == 1).cast("long")).alias("cb"),
-    )
-    ckpt = tempfile.mkdtemp(prefix="rtdac_ckpt_streaming_ks_")
-    per_v = run_available_now(
-        per_v_q, "streaming_ks_drift_q", ckpt, output_mode="complete"
-    )
-    return _ks_from_value_counts(per_v)
 
 
 def mannwhitney_purchase_values(
@@ -5997,9 +5962,12 @@ def streaming_benford_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from real_time_data_analytics_cassandra_spark.sources.streams import (
         bounded_event_stream,
     )
+    from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
+        start_available_now,
+    )
 
     ensure_query_confs(spark)
-    tmp = tempfile.mkdtemp(prefix="rtdac_streaming_benford_")
+    tmp = tempfile.mkdtemp(prefix="rtdac_ckpt_streaming_benford_drift_")
     path, ckpt = f"{tmp}/counters", f"{tmp}/ckpt"
 
     def fold(batch: DataFrame, batch_id: int) -> None:
@@ -6031,14 +5999,9 @@ def streaming_benford_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_id=batch_id,
         )
 
-    (
-        bounded_event_stream(spark, sf_dir)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_available_now(
+        bounded_event_stream(spark, sf_dir), fold, ckpt
+    ).awaitTermination()
     counts = spark.read.parquet(path).groupBy("event_type", "digit").agg(
         F.sum("n").cast("long").alias("n_obs")
     )
@@ -6267,32 +6230,23 @@ def streaming_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     integral drift score).  This is the production monitor shape:
     crawl shards accumulate into streaming state, the dashboard PSI
     is evaluated on demand."""
-    import tempfile
 
-    from real_time_data_analytics_cassandra_spark.sources.streams import (
-        bounded_table_stream,
-    )
-    from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
-        run_available_now,
-    )
-
-    ensure_query_confs(spark)
-    docs = bounded_table_stream(spark, sf_dir, "documents").select(
-        "source", F.length("text").cast("long").alias("len")
-    )
-    per_q = (
-        docs.select(
-            "source",
-            F.expr(_log2_ladder("len")).cast("long").alias("bucket"),
+    def build(docs: DataFrame) -> DataFrame:
+        return (
+            docs.select("source", F.length("text").cast("long").alias("len"))
+            .select(
+                "source",
+                F.expr(_log2_ladder("len")).cast("long").alias("bucket"),
+            )
+            .groupBy("source", "bucket")
+            .agg(F.count(F.lit(1)).cast("long").alias("c"))
         )
-        .groupBy("source", "bucket")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+
+    return _psi_from_bucket_counts(
+        _run_streaming(
+            spark, sf_dir, build, "streaming_psi_drift_q", table="documents"
+        )
     )
-    ckpt = tempfile.mkdtemp(prefix="rtdac_ckpt_streaming_psi_")
-    per = run_available_now(
-        per_q, "streaming_psi_drift_q", ckpt, output_mode="complete"
-    )
-    return _psi_from_bucket_counts(per)
 
 
 def value_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6773,9 +6727,12 @@ def streaming_hourly_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from real_time_data_analytics_cassandra_spark.sources.streams import (
         bounded_event_stream,
     )
+    from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
+        start_available_now,
+    )
 
     ensure_query_confs(spark)
-    tmp = tempfile.mkdtemp(prefix="rtdac_streaming_cusum_")
+    tmp = tempfile.mkdtemp(prefix="rtdac_ckpt_streaming_hourly_cusum_")
     path, ckpt = f"{tmp}/counters", f"{tmp}/ckpt"
 
     def fold(batch: DataFrame, batch_id: int) -> None:
@@ -6810,14 +6767,9 @@ def streaming_hourly_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_id=batch_id,
         )
 
-    (
-        bounded_event_stream(spark, sf_dir)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_available_now(
+        bounded_event_stream(spark, sf_dir), fold, ckpt
+    ).awaitTermination()
     counters = spark.read.parquet(path)
     hourly = (
         counters.groupBy("event_type", "h")
@@ -11068,11 +11020,11 @@ def streaming_observed_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from real_time_data_analytics_cassandra_spark.sources.streams import (
         sharded_table_stream,
     )
+    from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
+        STATE_PARTITIONS,
+    )
 
     ensure_query_confs(spark)
-    ring_key = "spark.sql.streaming.numRecentProgressUpdates"
-    saved_ring = spark.conf.get(ring_key, None)
-    spark.conf.set(ring_key, "10000")
     stream = sharded_table_stream(
         spark, sf_dir, "events", n_shards=4, time_cols=("ts",)
     )
@@ -11097,10 +11049,14 @@ def streaming_observed_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the real work the metrics ride on: the counter-table aggregation
     agg = observed.groupBy("event_type", "h").count()
     ckpt = tempfile.mkdtemp(prefix="rtdac_ckpt_streaming_observed_")
-    conf_key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "8")
-    try:
+    # both confs bind at query start and are restored afterwards: a
+    # progress ring left at 10000 session-wide would make every later
+    # streaming query retain 10k progress entries on the driver
+    with conf_override(
+        spark, "spark.sql.streaming.numRecentProgressUpdates", "10000"
+    ), conf_override(
+        spark, "spark.sql.shuffle.partitions", str(STATE_PARTITIONS)
+    ):
         sq = (
             agg.writeStream.format("noop")
             .outputMode("complete")
@@ -11110,15 +11066,6 @@ def streaming_observed_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sq.awaitTermination()
         progresses = sq.recentProgress
-    finally:
-        spark.conf.set(conf_key, saved)
-        # restore the progress ring size too (r11 ADVICE): leaving it
-        # at 10000 session-wide would make every later streaming
-        # query retain 10k progress entries on the driver
-        if saved_ring is None:
-            spark.conf.unset(ring_key)
-        else:
-            spark.conf.set(ring_key, saved_ring)
     # coverage guard: the retained entries must span every executed
     # batch id — if the ring buffer ever dropped one, fail loudly
     # instead of silently undercounting
@@ -11193,6 +11140,9 @@ def streaming_image_signature_clusters(
     from real_time_data_analytics_cassandra_spark.sources.streams import (
         sharded_table_stream,
     )
+    from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
+        start_available_now,
+    )
 
     ensure_query_confs(spark)
     # checkpoint + table persist in one fixture directory (the
@@ -11229,13 +11179,7 @@ def streaming_image_signature_clusters(
             batch_id=batch_id,
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    start_available_now(stream, _fold, ckpt).awaitTermination()
     return (
         spark.read.parquet(path)
         .select(
@@ -11424,25 +11368,18 @@ def streaming_cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle — bit-for-bit, which streaming sketches normally cannot
     claim.  Counters are sums, so update-mode increments merge
     exactly at any micro-batch boundary."""
-    import tempfile
-
     from real_time_data_analytics_cassandra_spark.catalog import spread
     from real_time_data_analytics_cassandra_spark.functions.textfns import tokens
     from real_time_data_analytics_cassandra_spark.operators import sketches
-    from real_time_data_analytics_cassandra_spark.sources.streams import (
-        bounded_table_stream,
-    )
-    from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
-        run_available_now,
-    )
 
-    ensure_query_confs(spark)
-    doc_stream = bounded_table_stream(spark, sf_dir, "documents")
-    tok_stream = doc_stream.select(F.explode(tokens(F.col("text"))).alias("term"))
-    sketch_q = sketches.cms_sketch(tok_stream, "term", width=2048, depth=4)
-    ckpt = tempfile.mkdtemp(prefix="rtdac_ckpt_streaming_cms_")
-    sketch = run_available_now(
-        sketch_q, "streaming_cms_token_counts_q", ckpt, output_mode="complete"
+    def build(doc_stream: DataFrame) -> DataFrame:
+        tok_stream = doc_stream.select(
+            F.explode(tokens(F.col("text"))).alias("term")
+        )
+        return sketches.cms_sketch(tok_stream, "term", width=2048, depth=4)
+
+    sketch = _run_streaming(
+        spark, sf_dir, build, "streaming_cms_token_counts_q", table="documents"
     )
     tok_batch = spread(table(spark, sf_dir, "documents")).select(
         F.explode(tokens(F.col("text"))).alias("term")
@@ -11474,14 +11411,14 @@ def streaming_kmv_distinct_per_type(
         kmv_foreach_batch,
     )
     from real_time_data_analytics_cassandra_spark.sources.streams import (
-        bounded_table_stream,
+        bounded_event_stream,
     )
 
     ensure_query_confs(spark)
     k = 256
-    tmp = tempfile.mkdtemp(prefix="rtdac_streaming_kmv_")
+    tmp = tempfile.mkdtemp(prefix="rtdac_ckpt_streaming_kmv_distinct_per_type_")
     path, ckpt = f"{tmp}/sketch", f"{tmp}/ckpt"
-    stream = bounded_table_stream(spark, sf_dir, "events").select(
+    stream = bounded_event_stream(spark, sf_dir).select(
         "event_type", "user_id"
     )
     kmv_foreach_batch(stream, path, ["event_type"], "user_id", ckpt, k=k)\
@@ -11516,25 +11453,15 @@ def streaming_hdr_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming sketch shares the batch query's full DuckDB oracle
     bit-for-bit — same claim as streaming_cms_token_counts, for
     quantiles."""
-    import tempfile
 
-    from real_time_data_analytics_cassandra_spark.sources.streams import (
-        bounded_table_stream,
-    )
-    from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
-        run_available_now,
-    )
+    def build(stream: DataFrame) -> DataFrame:
+        ev_stream = stream.select(
+            "event_type",
+            F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").alias("cents"),
+        ).filter(F.col("cents") >= 0)
+        return sketches_op.hdr_sketch(ev_stream, ["event_type"], "cents", p=5)
 
-    ensure_query_confs(spark)
-    ev_stream = bounded_table_stream(spark, sf_dir, "events").select(
-        "event_type",
-        F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").alias("cents"),
-    ).filter(F.col("cents") >= 0)
-    sketch_q = sketches_op.hdr_sketch(ev_stream, ["event_type"], "cents", p=5)
-    ckpt = tempfile.mkdtemp(prefix="rtdac_ckpt_streaming_hdr_")
-    sketch = run_available_now(
-        sketch_q, "streaming_hdr_percentiles_q", ckpt, output_mode="complete"
-    )
+    sketch = _run_streaming(spark, sf_dir, build, "streaming_hdr_percentiles_q")
     q = sketches_op.hdr_quantiles(sketch, ["event_type"], [0.5, 0.9, 0.99])
     return q.select(
         "event_type",
@@ -11555,28 +11482,19 @@ def streaming_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     query uses — so this streaming query shares the batch query's
     full DuckDB oracle bit-for-bit, the same claim as
     streaming_hdr_percentiles for quantiles."""
-    import tempfile
 
-    from real_time_data_analytics_cassandra_spark.sources.streams import (
-        bounded_table_stream,
-    )
-    from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
-        run_available_now,
-    )
+    def build(stream: DataFrame) -> DataFrame:
+        ev_stream = stream.select(
+            "event_type",
+            F.expr("unix_micros(ts) div 1000000 div 3600").alias("h"),
+        )
+        return ev_stream.groupBy("event_type", "h").agg(
+            F.count(F.lit(1)).alias("y")
+        )
 
-    ensure_query_confs(spark)
-    ev_stream = bounded_table_stream(spark, sf_dir, "events").select(
-        "event_type",
-        F.expr("unix_micros(ts) div 1000000 div 3600").alias("h"),
+    return _ols_fit_micro(
+        _run_streaming(spark, sf_dir, build, "streaming_ols_trend_q")
     )
-    hourly_q = ev_stream.groupBy("event_type", "h").agg(
-        F.count(F.lit(1)).alias("y")
-    )
-    ckpt = tempfile.mkdtemp(prefix="rtdac_ckpt_streaming_ols_")
-    hourly = run_available_now(
-        hourly_q, "streaming_ols_trend_q", ckpt, output_mode="complete"
-    )
-    return _ols_fit_micro(hourly)
 
 
 def incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -11,6 +11,7 @@ identical to the DuckDB oracle regardless of host timezone.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -118,3 +119,18 @@ def ensure_query_confs(spark: SparkSession) -> SparkSession:
     for k, v in _WORKER_THREAD_PIN.items():
         spark.sparkContext.environment.setdefault(k, v)
     return spark
+
+
+@contextmanager
+def conf_override(spark: SparkSession, key: str, value: str):
+    """Set one runtime conf for the ``with`` body, then restore the
+    session's previous value (or unset it if it had none)."""
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)

@@ -35,12 +35,13 @@ the key (hash bucket) or from an immutable attribute.
 from __future__ import annotations
 
 from collections.abc import Sequence
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.latest import latest_per_key
+from ..session import conf_override
+from ..streaming.pipelines import start_available_now
 
 
 def _target_exists(spark: SparkSession, path: str) -> bool:
@@ -50,19 +51,6 @@ def _target_exists(spark: SparkSession, path: str) -> bool:
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return bool(fs.exists(hpath))
-
-
-@contextmanager
-def _conf(spark: SparkSession, key: str, value: str):
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
 
 
 # Above this many touched partitions per batch, the pruned read
@@ -155,7 +143,7 @@ def merge_upsert(
     # path we are about to overwrite (Spark forbids read+overwrite of
     # the same source); it materializes ONLY the touched partitions.
     merged = merged.localCheckpoint(eager=True)
-    with _conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
+    with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
         merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
 
 
@@ -241,7 +229,7 @@ def merge_add(
     if batch_id is not None:
         merged = merged.withColumn(BATCH_ID_COL, F.lit(batch_id))
     merged = merged.localCheckpoint(eager=True)
-    with _conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
+    with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
         merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
 
 
@@ -275,12 +263,7 @@ def counter_foreach_batch(
             batch_id=batch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(stream, _fold, checkpoint)
 
 
 def merge_upsert_foreach_batch(
@@ -302,12 +285,7 @@ def merge_upsert_foreach_batch(
             batch.sparkSession, batch, path, keys, ts, partition_col, tiebreak
         )
 
-    return (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(stream, _merge, checkpoint)
 
 
 def merge_topn(
@@ -364,12 +342,7 @@ def topn_foreach_batch(
     def _fold(batch: DataFrame, _batch_id: int) -> None:
         merge_topn(batch.sparkSession, batch, path, order_col, n, id_cols)
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(stream, _fold, checkpoint)
 
 
 def merge_topk_per_group(
@@ -430,12 +403,7 @@ def topk_per_group_foreach_batch(
             batch.sparkSession, batch, path, group_cols, order_col, k, id_cols
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(stream, _fold, checkpoint)
 
 
 def merge_sketches(
@@ -474,7 +442,7 @@ def merge_sketches(
         .agg(F.hll_union_agg("sketch").alias("sketch"))
     )
     combined = combined.localCheckpoint(eager=True)
-    with _conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
+    with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
         combined.write.mode("overwrite").partitionBy(partition_col).parquet(path)
 
 
@@ -499,12 +467,7 @@ def sketch_foreach_batch(
             batch.sparkSession, batch, path, keys, id_col, partition_col
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(stream, _fold, checkpoint)
 
 
 def merge_kmv(
@@ -556,7 +519,7 @@ def merge_kmv(
         .drop("__rn")
         .localCheckpoint(eager=True)
     )
-    with _conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
+    with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
         folded.write.mode("overwrite").partitionBy(part).parquet(path)
 
 
@@ -576,12 +539,7 @@ def kmv_foreach_batch(
     def _fold(batch: DataFrame, batch_id: int) -> None:
         merge_kmv(batch.sparkSession, batch, path, keys, id_col, k)
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(stream, _fold, checkpoint)
 
 
 def merge_min(
@@ -617,7 +575,7 @@ def merge_min(
         .agg(F.min(val_col).alias(val_col))
     )
     combined = combined.localCheckpoint(eager=True)
-    with _conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
+    with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
         combined.write.mode("overwrite").partitionBy(partition_col).parquet(path)
 
 
@@ -639,12 +597,7 @@ def min_foreach_batch(
             batch.sparkSession, batch, path, key_cols, val_col, partition_col
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(stream, _fold, checkpoint)
 
 
 def merge_min_add(
@@ -701,5 +654,5 @@ def merge_min_add(
         .withColumn(BATCH_ID_COL, F.lit(batch_id))
         .localCheckpoint(eager=True)
     )
-    with _conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
+    with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
         merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)

@@ -39,6 +39,10 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
+    start_available_now,
+)
+
 _MANIFEST_DIR = "_manifests"
 
 
@@ -361,12 +365,7 @@ def mor_upsert_foreach_batch(
             batch.sparkSession, batch, path, key_col, stats_cols=stats_cols
         )
 
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(stream, step, checkpoint)
 
 
 def scan_snapshot(
@@ -783,12 +782,7 @@ def snapshot_foreach_batch(
             return
         write_snapshot(batch, path, mode="append", stats_cols=stats_cols)
 
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(stream, step, checkpoint)
 
 
 def compact_snapshot(
@@ -932,12 +926,7 @@ def audited_snapshot_foreach_batch(
                 .parquet(quarantine)
             )
 
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(stream, step, checkpoint)
 
 
 def _commit_files(

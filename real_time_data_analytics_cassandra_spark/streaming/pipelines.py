@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from real_time_data_analytics_cassandra_spark.functions.buckets import hour_bucket
+from real_time_data_analytics_cassandra_spark.session import conf_override
 
 DEFAULT_WATERMARK = "1 hour"
 
@@ -49,12 +50,20 @@ def hourly_type_counts(events: DataFrame, watermark: str | None = DEFAULT_WATERM
     )
 
 
+# Stateful-operator parallelism of a bounded replay (the shuffle-
+# partition conf binds at query start).  State-store commit cost is per
+# partition per micro-batch (~0.25 s each for HDFS-backed stores), so a
+# bounded replay wants few, fat state partitions; a production stream
+# sizes this to sustained throughput instead (it cannot be changed
+# without a new checkpoint).
+STATE_PARTITIONS = 8
+
+
 def run_available_now(
     result: DataFrame,
     query_name: str,
     checkpoint_dir: str,
     output_mode: str = "complete",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Execute a (bounded) streaming DataFrame to completion with the
     availableNow trigger into a memory sink; return the result table.
@@ -65,33 +74,33 @@ def run_available_now(
     fault-tolerant sink (parquet/Kafka) with the same checkpoint
     mechanics.
 
-    ``state_partitions`` sizes the stateful-operator parallelism for
-    THIS query (the shuffle-partition conf binds at query start and
-    is restored afterwards).  State-store commit cost is per
-    partition per micro-batch — ~0.25 s each for HDFS-backed stores —
-    so a bounded replay wants few, fat state partitions, while a
-    production stream sizes this to sustained throughput instead
-    (it cannot be changed without a new checkpoint).  Pass None to
-    inherit the session conf unchanged.
+    The query runs with :data:`STATE_PARTITIONS` shuffle partitions;
+    the session conf is restored afterwards.
     """
     spark = result.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(conf_key)
-    if state_partitions is not None:
-        spark.conf.set(conf_key, str(state_partitions))
-    try:
-        q = (
+    with conf_override(spark, "spark.sql.shuffle.partitions", str(STATE_PARTITIONS)):
+        (
             result.writeStream.format("memory")
             .queryName(query_name)
             .outputMode(output_mode)
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(conf_key, saved)
     return spark.table(query_name)
+
+
+def start_available_now(stream: DataFrame, fold, checkpoint: str):
+    """Start ``stream`` under the availableNow trigger with ``fold(batch,
+    batch_id)`` as its foreachBatch sink; return the started
+    StreamingQuery (the caller awaits termination)."""
+    return (
+        stream.writeStream.foreachBatch(fold)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def session_window_counts(
@@ -465,12 +474,7 @@ def multicast_foreach_batch(events: DataFrame, out_dir: str, checkpoint_dir: str
         finally:
             cached.unpersist()
 
-    return (
-        events.writeStream.foreachBatch(write_views)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(events, write_views, checkpoint_dir)
 
 
 def user_stats_stream_tws(events: DataFrame) -> DataFrame:
@@ -591,12 +595,7 @@ def span_dedup_foreach_batch(
         )
         out.write.mode("append").parquet(out_path)
 
-    return (
-        docs.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(docs, step, checkpoint)
 
 
 def index_append_foreach_batch(
@@ -624,9 +623,4 @@ def index_append_foreach_batch(
     def step(batch: DataFrame, batch_id: int) -> None:
         append_text_index(batch, index_path, id_col, text_col)
 
-    return (
-        docs.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(docs, step, checkpoint)

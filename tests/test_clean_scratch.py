@@ -10,6 +10,7 @@ from __future__ import annotations
 import importlib.util
 import os
 import pathlib
+import re
 import tempfile
 
 import pytest
@@ -159,3 +160,25 @@ def test_triage_keeps_fixtures_drops_scratch_and_stage(tmp_path, monkeypatch):
     assert {p.name for p in tmp_path.iterdir()} == set(kept)
     inside = {p.name for p in (tmp_path / ROOT).iterdir()}
     assert inside == {"payload", *fixtures}
+
+
+def test_scratch_prefixes_match_mkdtemp_sites():
+    """SCRATCH_PREFIXES is the list of per-run scratch names: a
+    mkdtemp prefix it does not cover piles up in the temp dir forever
+    (unknown names are kept), and a listed prefix with no producer is
+    dead weight.  The literal text before any f-string field counts."""
+    cs = _load_clean_scratch()
+    site = re.compile(r"""mkdtemp\(prefix=f?["']([^"'{]*)""")
+    literals = {
+        m.group(1)
+        for top in ("real_time_data_analytics_cassandra_spark", "tests")
+        for f in (REPO / top).rglob("*.py")
+        for m in site.finditer(f.read_text())
+    }
+    assert literals
+    uncovered = {p for p in literals if not p.startswith(cs.SCRATCH_PREFIXES)}
+    assert not uncovered, f"mkdtemp prefixes clean_scratch keeps: {uncovered}"
+    unproduced = {
+        p for p in cs.SCRATCH_PREFIXES if not any(x.startswith(p) for x in literals)
+    }
+    assert not unproduced, f"scratch prefixes with no producer: {unproduced}"

@@ -615,13 +615,11 @@ def test_incremental_image_near_dup_matches_batch(spark):
     assert len(want) > 0, "fixture must actually exercise the pair path"
 
 
-def test_incremental_pairs_zero_pair_corpus_reads_empty(spark):
+def test_incremental_pairs_zero_pair_corpus_reads_empty(spark, tmp_path):
     """A corpus whose signatures generate NO qualifying pairs must
     still read back cleanly (the pair directory holds only partition
     markers; the pinned-schema read returns the typed empty relation)
     and the cluster table must still be complete."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from real_time_data_analytics_cassandra_spark.operators import (
@@ -633,7 +631,7 @@ def test_incremental_pairs_zero_pair_corpus_reads_empty(spark):
         [(1, 0, 0), (2, (1 << 32) - 1, (1 << 32) - 1)],
         "doc_id long, sig_hi long, sig_lo long",
     )
-    tmp = tempfile.mkdtemp(prefix="rtdac_test_zero_pairs_")
+    tmp = str(tmp_path)
     mm.incremental_signature_pairs_fold(
         sig, f"{tmp}/clu", f"{tmp}/bands", f"{tmp}/pairs", batch_id=0
     )
@@ -646,15 +644,13 @@ def test_incremental_pairs_zero_pair_corpus_reads_empty(spark):
 
 
 @pytest.mark.slow
-def test_incremental_pairs_crash_retry_no_self_pairs(spark, monkeypatch):
+def test_incremental_pairs_crash_retry_no_self_pairs(spark, monkeypatch, tmp_path):
     """r11 ADVICE gate: a fold that dies AFTER the band/pair appends
     but BEFORE the cluster merge leaves the retry's signatures
     probing their own failed-attempt band rows.  The retry must not
     fabricate (S, S) self-pairs (the new-x-old inequality filter),
     and after the retry completes the readout must be byte-identical
     to a never-crashed fold of the same batches."""
-    import tempfile
-
     from real_time_data_analytics_cassandra_spark.operators import (
         multimodal as mm,
     )
@@ -668,8 +664,7 @@ def test_incremental_pairs_crash_retry_no_self_pairs(spark, monkeypatch):
             [(2, 5, 1)], "doc_id long, sig_hi long, sig_lo long"
         ),  # hamming 1 from batch 0's signature -> one true pair
     ]
-    crash = tempfile.mkdtemp(prefix="rtdac_test_crash_retry_")
-    clean = tempfile.mkdtemp(prefix="rtdac_test_crash_clean_")
+    crash, clean = str(tmp_path / "crash"), str(tmp_path / "clean")
 
     for root in (crash, clean):
         mm.incremental_signature_pairs_fold(
@@ -762,3 +757,48 @@ def test_streaming_domain_crawl_stats_matches_batch(spark):
     ]
     assert got == want
     assert len(want) > 0
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "streaming_ols_trend",
+        "streaming_ks_drift",
+        "streaming_hdr_percentiles",
+        "streaming_kmv_distinct_per_type",
+    ],
+)
+def test_streaming_events_queries_read_nanosecond_ts(spark, tmp_path, monkeypatch, name):
+    """Some testdata generations store ``events.ts`` as parquet
+    TIMESTAMP(NANOS), which the session reads as a long
+    (catalog.py ``_NANO_TS_COLS``).  A streaming query over events must
+    normalize it as ``catalog.table`` does and return exactly what it
+    returns over the microsecond encoding."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from real_time_data_analytics_cassandra_spark import queries as q
+    from tools.oracle_check import first_mismatch
+
+    # stream staging dirs and checkpoints land under tmp_path, not $TMPDIR
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    nanos = tmp_path / "sf_nanos"
+    nanos.mkdir()
+    for f in os.listdir(SF_SMOKE):
+        if f != "events.parquet":
+            os.symlink(os.path.join(SF_SMOKE, f), nanos / f)
+    events = pq.read_table(os.path.join(SF_SMOKE, "events.parquet"))
+    i = events.schema.get_field_index("ts")
+    events = events.set_column(
+        i, "ts", events.column(i).cast(pa.timestamp("ns"))
+    )
+    pq.write_table(events, nanos / "events.parquet")
+    ts_type = pq.read_schema(nanos / "events.parquet").field("ts").type
+    assert ts_type == pa.timestamp("ns")
+
+    query = q.queries()[name]
+    micros = query(spark, SF_SMOKE).toPandas()
+    assert len(micros) > 0
+    assert first_mismatch(query(spark, str(nanos)).toPandas(), micros) is None

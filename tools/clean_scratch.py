@@ -34,26 +34,21 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from real_time_data_analytics_cassandra_spark.fixture_cache import ROOT  # noqa: E402
 
 # mkdtemp(prefix=...) call sites — per-run scratch, safe to remove when
-# no query is running.  Keep in sync with:
-#   grep -rhoE 'mkdtemp\(prefix="[a-z0-9_]+"' real_time_data_analytics_cassandra_spark tests
+# no query is running.  tests/test_clean_scratch.py checks that every
+# such literal in the package and tests/ starts with one of these, and
+# that each of these still has a producer.
 SCRATCH_PREFIXES = (
     "rtdac_annappend_",
     "rtdac_annfresh_",
     "rtdac_annidx_",
     "rtdac_bloomq_",
-    "rtdac_ckpt_",  # every checkpoint family (dedup/ssjoin/cms/hdr/...)
+    "rtdac_ckpt_",  # every stream checkpoint and fold-into-table scratch
     "rtdac_corrtest_",
-    "rtdac_firstseen_",
-    "rtdac_inc_imgpairs_",
     "rtdac_mor_",
     "rtdac_rangeq_",
     "rtdac_sketch_stream_",
     "rtdac_sketch_tbl_",
     "rtdac_span_stream_",
-    "rtdac_streaming_benford_",
-    "rtdac_streaming_imgsig_",
-    "rtdac_streaming_cusum_",
-    "rtdac_streaming_kmv_",
 )
 
 
