@@ -18,9 +18,7 @@ streaming variants (windowed, watermarked) live in streaming/.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from real_time_data_analytics_cassandra_spark.functions.buckets import (
@@ -37,19 +35,6 @@ _BUCKET_FNS = {
     "hourly": hour_bucket,
     "daily": day_bucket,
 }
-
-
-def bucket_counts(
-    df: DataFrame,
-    ts: str,
-    keys: Sequence[Column | str] = (),
-    granularity: str = "hourly",
-    bucket_col: str = "bucket",
-    count_col: str = "cnt",
-) -> DataFrame:
-    """Grouped count per (time bucket, keys)."""
-    bucket = _BUCKET_FNS[granularity](ts).alias(bucket_col)
-    return df.groupBy(bucket, *keys).agg(F.count(F.lit(1)).alias(count_col))
 
 
 def multi_granularity_counts(

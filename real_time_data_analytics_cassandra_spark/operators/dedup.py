@@ -30,7 +30,11 @@ from real_time_data_analytics_cassandra_spark.functions.textfns import (
     tokens,
     word_ngrams,
 )
-from real_time_data_analytics_cassandra_spark.session import conf_override
+from real_time_data_analytics_cassandra_spark.sinks.merge import (
+    _overwrite_partitions,
+    _pruned_target,
+    _target_exists,
+)
 
 # Mersenne-ish prime > 2^32 for the universal-hash permutations.
 _MINHASH_P = 4294967311
@@ -110,38 +114,6 @@ def _permute(h, i: int):
     a = 2 * i + 1
     b = (i * 2654435761 + 1013904223) % _MINHASH_P
     return (h * F.lit(a) + F.lit(b)) % F.lit(_MINHASH_P)
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 32,
-    n: int = 3,
-) -> DataFrame:
-    """MinHash signature per document as num_hashes columns ``mh_i``.
-
-    One explode + one groupBy: the k permutations are k aggregate
-    expressions over the same shingle hash (map-side partial agg keeps
-    the shuffle at one row per doc per partition).
-    """
-    from real_time_data_analytics_cassandra_spark.catalog import spread
-
-    sh = shingle_sets(spread(df), id_col, text_col, n)
-    # base hash = md5 32-bit prefix: ENGINE-PORTABLE (crc32 previously
-    # used here exists only Spark-side, which forced this whole family
-    # to a rows-only driver check; md5 + hex parse replay identically
-    # in ANSI SQL, so LSH candidates — and therefore the verified
-    # output — are now fully oracle-gated).  h < 2^32, so the affine
-    # permutations (a <= 63) stay far inside BIGINT.
-    hashed = sh.withColumn(
-        "h",
-        F.conv(F.substring(F.md5(F.col("shingle")), 1, 8), 16, 10).cast(
-            "long"
-        ),
-    )
-    aggs = [F.min(_permute(F.col("h"), i)).alias(f"mh_{i}") for i in range(num_hashes)]
-    return hashed.groupBy("id").agg(*aggs)
 
 
 def minhash_lsh_pairs(
@@ -588,14 +560,9 @@ def exact_substr_index_batch(
     index read + one equi-join on the 16-byte hash, a dynamic
     overwrite of touched buckets, and the shared coverage rebuild.
     O(batch + touched index slice), never O(corpus)."""
-    import os
-
     base = _token_rows(batch_docs, id_col, text_col)
     wins = _anchor_rows(base, min_len)
-    # EAGER checkpoint: the fold's expensive pass (anchor window hash
-    # + min-struct aggregate) materializes exactly once — the bucket
-    # probe and the winner anti-join both read this leaf (r12 ran the
-    # pass twice per fold; see span_index_dedup_batch)
+    # EAGER checkpoint: see _first_owner_fold
     batch_first = (
         wins.groupBy("wh")
         .agg(F.min(F.struct(F.col("id"), F.col("p"))).alias("first"))
@@ -615,32 +582,8 @@ def exact_substr_index_batch(
         .localCheckpoint(eager=True)
     )
 
-    exists = os.path.exists(os.path.join(index_path, "_SUCCESS"))
-    if exists:
-        target = spark.read.parquet(index_path)
-        touched = batch_first.select("bucket").distinct()
-        probe = [r[0] for r in touched.limit(n_buckets + 1).collect()]
-        if len(probe) <= n_buckets:
-            pruned = target.filter(F.col("bucket").isin(probe))
-        else:  # pragma: no cover - bounded by construction
-            pruned = target.join(F.broadcast(touched), "bucket", "left_semi")
-        pruned = pruned.withColumn("bucket", F.col("bucket").cast("int"))
-        earlier = pruned.filter(F.col(SPAN_INDEX_BATCH_COL) < batch_id)
-    else:
-        earlier = None
-
-    if earlier is not None:
-        # LAZY: materialized by the new_index_rows eager checkpoint's
-        # union below, before the index overwrite — `out` still never
-        # reads index_path, with no dedicated job barrier per fold
-        # (see span_index_dedup_batch)
-        winners_new = batch_first.join(
-            earlier.select("wh"), "wh", "left_anti"
-        ).localCheckpoint(eager=False)
-    else:
-        winners_new = batch_first
-    new_index_rows = (
-        earlier.unionByName(winners_new) if earlier is not None else winners_new
+    winners_new = _first_owner_fold(
+        spark, batch_first, index_path, "wh", batch_id
     )
 
     # a position survives iff its anchor is NEWLY owned by this batch
@@ -659,23 +602,8 @@ def exact_substr_index_batch(
         .groupBy("id")
         .agg(F.sort_array(F.collect_list("p")).alias("dups"))
     )
-    # lazy: out reads only the batch parquet + the materialized
-    # winner set, never index_path (see span_index_dedup_batch)
-    out = _scrub_covered(base, dup_pos, min_len).localCheckpoint(eager=False)
-
-    new_index_rows = new_index_rows.repartition("bucket").localCheckpoint(
-        eager=True
-    )
-    if earlier is None:
-        new_index_rows.write.mode("overwrite").partitionBy("bucket").parquet(
-            index_path
-        )
-    else:
-        with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-            new_index_rows.write.mode("overwrite").partitionBy(
-                "bucket"
-            ).parquet(index_path)
-    return out
+    # lazy: see _first_owner_fold
+    return _scrub_covered(base, dup_pos, min_len).localCheckpoint(eager=False)
 
 
 def incremental_near_dups(
@@ -850,6 +778,58 @@ def keep_first_segment_dedup(
 SPAN_INDEX_BATCH_COL = "_applied_batch_id"
 
 
+def _first_owner_fold(
+    spark,
+    batch_first: DataFrame,
+    index_path: str,
+    key: str,
+    batch_id: int,
+) -> DataFrame:
+    """Extend the persisted first-owner index at ``index_path`` (rows
+    keyed on ``key``, partitioned by ``bucket``, stamped with
+    SPAN_INDEX_BATCH_COL) with this batch's rows and return the ones
+    the batch owns first (``winners_new``): those whose key no EARLIER
+    batch owns.  Rows stamped with this ``batch_id`` are this batch's
+    own earlier write, so a replay re-derives the same winners and
+    rewrites the same rows.  The shared step of
+    :func:`span_index_dedup_batch` and :func:`exact_substr_index_batch`.
+
+    Eagerness (r13, measured): the caller's ``batch_first`` is an
+    EAGER checkpoint — the fold's one expensive pass (explode, hash,
+    min-struct aggregate) materializes exactly once, and both the
+    bucket probe and the winner anti-join read that leaf (r12 ran the
+    pass twice per fold).  ``winners_new`` is a LAZY checkpoint: the
+    write-back's eager checkpoint of the union computes it, which
+    materializes it as a persisted leaf BEFORE the index overwrite —
+    so the caller's verdict never reads ``index_path``, without a
+    dedicated job barrier per fold.  The verdict itself is a LAZY
+    checkpoint for the same reason: its lineage reads only the batch
+    and the materialized winners, so the overwrite cannot invalidate
+    it, and callers unioning several folds get a cut plan for free.
+
+    One file per touched bucket: without the repartition every shuffle
+    task writes a sliver into every touched bucket dir — O(tasks x
+    buckets) small files per batch, the classic dynamic-overwrite
+    file explosion."""
+    if not _target_exists(spark, f"{index_path}/_SUCCESS"):
+        batch_first.repartition("bucket").write.mode("overwrite").partitionBy(
+            "bucket"
+        ).parquet(index_path)
+        return batch_first
+    earlier = _pruned_target(spark, index_path, batch_first, "bucket").filter(
+        F.col(SPAN_INDEX_BATCH_COL) < batch_id
+    )
+    winners_new = batch_first.join(
+        earlier.select(key), key, "left_anti"
+    ).localCheckpoint(eager=False)
+    _overwrite_partitions(
+        earlier.unionByName(winners_new).repartition("bucket"),
+        index_path,
+        "bucket",
+    )
+    return winners_new
+
+
 def span_index_dedup_batch(
     spark,
     batch_docs: DataFrame,
@@ -894,14 +874,8 @@ def span_index_dedup_batch(
     O(batch + touched index slice), never O(corpus): the re-dedup
     economics of incremental_near_dups, applied to exact span dedup.
     """
-    import os
-
     segs = _segment_rows(batch_docs, id_col, text_col, seg_len)
-    # EAGER checkpoint: the fold's one expensive pass (segment explode
-    # + hash + min-struct aggregate) materializes exactly once — the
-    # bucket probe below and the winner anti-join both read this leaf.
-    # r12 ran the pass twice per fold (once under the probe collect,
-    # again under the winner set's own eager checkpoint).
+    # EAGER checkpoint: see _first_owner_fold
     batch_first = segs.groupBy("seg_hash").agg(
         F.min(F.struct(F.col("id"), F.col("seg_idx"))).alias("first")
     ).select(
@@ -918,35 +892,8 @@ def span_index_dedup_batch(
         SPAN_INDEX_BATCH_COL, F.lit(batch_id).cast("long")
     ).localCheckpoint(eager=True)
 
-    exists = os.path.exists(os.path.join(index_path, "_SUCCESS"))
-    if exists:
-        target = spark.read.parquet(index_path)
-        touched = batch_first.select("bucket").distinct()
-        probe = [r[0] for r in touched.limit(n_buckets + 1).collect()]
-        if len(probe) <= n_buckets:
-            pruned = target.filter(F.col("bucket").isin(probe))
-        else:  # pragma: no cover - bounded by construction
-            pruned = target.join(F.broadcast(touched), "bucket", "left_semi")
-        pruned = pruned.withColumn("bucket", F.col("bucket").cast("int"))
-        earlier = pruned.filter(F.col(SPAN_INDEX_BATCH_COL) < batch_id)
-    else:
-        earlier = None
-
-    if earlier is not None:
-        # LAZY: the new_index_rows eager checkpoint below computes the
-        # union, which materializes this anti-join as a persisted leaf
-        # BEFORE the index overwrite — so `out`'s lineage still never
-        # reads index_path, without a dedicated job barrier per fold
-        # (r12 paid an eager winners checkpoint here; its expensive
-        # input, batch_first, is now the checkpointed leaf above and
-        # the anti-join itself is one bucket-pruned index read).
-        winners_new = batch_first.join(
-            earlier.select("seg_hash"), "seg_hash", "left_anti"
-        ).localCheckpoint(eager=False)
-    else:
-        winners_new = batch_first
-    new_index_rows = (
-        earlier.unionByName(winners_new) if earlier is not None else winners_new
+    winners_new = _first_owner_fold(
+        spark, batch_first, index_path, "seg_hash", batch_id
     )
 
     # verdict: a segment survives iff its hash is NEWLY owned by this
@@ -977,31 +924,8 @@ def span_index_dedup_batch(
         )
         .select("id", "n_segments", "n_removed", "clean_text")
     )
-    # LAZY checkpoint: out's lineage reads only the batch parquet and
-    # the eagerly-materialized winner set — never index_path — so the
-    # index overwrite below cannot invalidate it; cutting the plan
-    # (callers union several folds) without a dedicated job barrier
-    # per fold (r12; the overwrite-safety checkpoint is
-    # new_index_rows below, which DOES read the index and stays eager)
-    out = out.localCheckpoint(eager=False)
-
-    # one file per touched bucket: without this repartition every
-    # shuffle task writes a sliver into every touched bucket dir —
-    # O(tasks x buckets) small files per batch, the classic dynamic-
-    # overwrite file explosion
-    new_index_rows = new_index_rows.repartition("bucket").localCheckpoint(
-        eager=True
-    )
-    if earlier is None:
-        new_index_rows.write.mode("overwrite").partitionBy("bucket").parquet(
-            index_path
-        )
-    else:
-        with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-            new_index_rows.write.mode("overwrite").partitionBy(
-                "bucket"
-            ).parquet(index_path)
-    return out
+    # lazy: see _first_owner_fold
+    return out.localCheckpoint(eager=False)
 
 
 # Float slack for the PPJoin bounds: every bound below is of the form

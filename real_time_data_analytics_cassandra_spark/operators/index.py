@@ -35,6 +35,8 @@ megabytes of postings.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,7 +45,11 @@ from real_time_data_analytics_cassandra_spark.operators.sampling import (
 )
 from real_time_data_analytics_cassandra_spark.operators.text import bm25_rank
 from real_time_data_analytics_cassandra_spark.functions.textfns import tokens
-from real_time_data_analytics_cassandra_spark.session import conf_override
+from real_time_data_analytics_cassandra_spark.sinks.merge import (
+    _fs,
+    _overwrite_partitions,
+    _target_exists,
+)
 
 N_BUCKETS = 64
 
@@ -147,13 +153,37 @@ def bm25_search_index(
     return bm25_rank(m, dl, dfreq, stats, k1=k1, b=b, top_k=top_k)
 
 
-def _fs(spark, path: str):
-    """Hadoop FileSystem for ``path`` via the JVM gateway — storage-
-    agnostic (local, HDFS, object stores with a Hadoop connector),
-    unlike driver-side os/shutil calls."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+def _content_batch(fresh: DataFrame, id_col: str) -> tuple[int, str | None]:
+    """(row count, batch id) of a batch of not-yet-indexed rows; the
+    id is ``b{n}x{hash}``, derived from the batch's CONTENT (count +
+    summed xxhash64 of the ids), so a crashed append and its retry
+    share the marker and ``batch=`` directory names.  None when the
+    batch is empty.  One job yields both numbers (the hash is summed
+    as decimal(38,0): a bigint sum overflows under ANSI)."""
+    sig = fresh.agg(
+        F.count(F.lit(1)).alias("c"),
+        F.sum(
+            F.xxhash64(F.col(id_col).cast("string")).cast("decimal(38,0)")
+        ).alias("h"),
+    ).collect()[0]
+    n = int(sig["c"])
+    if n == 0:
+        return 0, None
+    return n, f"b{n}x{(int(sig['h']) & 0xFFFFFFFFFFFF):012x}"
+
+
+@contextmanager
+def _pending_marker(spark, path: str, batch: str):
+    """Hold the crash marker ``pending/<batch>`` under ``path`` while
+    the body writes: created before, removed after.  The removal is
+    deliberately NOT in a ``finally`` — a body that raises leaves the
+    marker, which is how the next append detects and rolls back the
+    half-applied batch."""
+    fs, marker = _fs(spark, f"{path}/pending/{batch}")
+    fs.mkdirs(marker.getParent())
+    fs.create(marker, True).close()
+    yield
+    fs.delete(marker, False)
 
 
 def _refresh_derived(spark, path: str, buckets: list[int], n_buckets: int):
@@ -180,15 +210,10 @@ def _refresh_derived(spark, path: str, buckets: list[int], n_buckets: int):
             .filter(F.col("bucket").isin(buckets))
             .groupBy("term", "bucket")
             .agg(F.count(F.lit(1)).cast("bigint").alias("dfreq"))
-            .localCheckpoint(eager=True)
         )
-        with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-            (
-                derived.repartition("bucket")
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(f"{path}/termstats")
-            )
+        _overwrite_partitions(
+            derived.repartition("bucket"), f"{path}/termstats", "bucket"
+        )
     all_dl = spark.read.parquet(f"{path}/docstats").localCheckpoint(
         eager=True
     )
@@ -280,8 +305,7 @@ def append_text_index(
     # bootstrap: appending into a not-yet-existing index IS the build
     # (lets a streaming foreachBatch sink create the index on its
     # first micro-batch with no separate initialization step)
-    fs, docstats_path = _fs(spark, f"{path}/docstats")
-    if not fs.exists(docstats_path):
+    if not _target_exists(spark, f"{path}/docstats"):
         meta = build_text_index(df, path, id_col, text_col, n_buckets)
         return {
             "n_new_docs": int(meta["n_docs"]),
@@ -294,15 +318,7 @@ def append_text_index(
     fresh = df.join(
         known, df[id_col] == known.doc_id, "left_anti"
     ).localCheckpoint(eager=True)
-    # one job yields both the batch size and its content fingerprint
-    # (hash summed as decimal(38,0): a bigint sum overflows under ANSI)
-    sig = fresh.agg(
-        F.count(F.lit(1)).alias("c"),
-        F.sum(
-            F.xxhash64(F.col(id_col).cast("string")).cast("decimal(38,0)")
-        ).alias("h"),
-    ).collect()[0]
-    n_new = int(sig["c"])
+    n_new, batch = _content_batch(fresh, id_col)
     if n_new == 0:
         n_docs = spark.read.parquet(f"{path}/stats").collect()[0]["n_docs"]
         return {
@@ -311,10 +327,6 @@ def append_text_index(
             "batch": None,
             "repaired": repaired,
         }
-
-    # deterministic batch id from the batch's content, so a crashed
-    # append and its retry share the marker / directory names
-    batch = f"b{n_new}x{(int(sig['h']) & 0xFFFFFFFFFFFF):012x}"
 
     postings = (
         fresh.select(
@@ -330,60 +342,52 @@ def append_text_index(
     affected = [
         r["bucket"] for r in postings.select("bucket").distinct().collect()
     ]
-    fs, marker = _fs(spark, f"{path}/pending/{batch}")
-    fs.mkdirs(marker.getParent())
-    fs.create(marker, True).close()
-    (
-        postings.repartition("bucket")
-        .write.mode("append")
-        .partitionBy("bucket", "batch")
-        .parquet(f"{path}/postings")
-    )
-    dl = fresh.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(tokens(F.col(text_col))).cast("bigint").alias("dl"),
-        F.lit(batch).alias("batch"),
-    )
-    dl.write.mode("append").partitionBy("batch").parquet(f"{path}/docstats")
-    # happy-path termstats: additive merge of the OLD termstats slice
-    # with the batch's per-term counts — cheaper than re-aggregating
-    # the affected postings buckets (vocab slice vs postings slice);
-    # the repair path re-derives from postings instead, which is why
-    # a crash between the postings write and this overwrite is safe
-    new_counts = postings.groupBy("term", "bucket").agg(
-        F.count(F.lit(1)).cast("bigint").alias("dfreq")
-    )
-    old = (
-        spark.read.parquet(f"{path}/termstats")
-        .filter(F.col("bucket").isin(affected))
-        .select("term", "bucket", "dfreq")
-    )
-    merged = (
-        old.unionByName(new_counts)
-        .groupBy("term", "bucket")
-        .agg(F.sum("dfreq").cast("bigint").alias("dfreq"))
-        .localCheckpoint(eager=True)
-    )
-    with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
+    with _pending_marker(spark, path, batch):
         (
-            merged.repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(f"{path}/termstats")
+            postings.repartition("bucket")
+            .write.mode("append")
+            .partitionBy("bucket", "batch")
+            .parquet(f"{path}/postings")
         )
-    # exact stats recompute: collect the 1-row aggregate once, then
-    # write it as a literal row — no localCheckpoint of docstats, no
-    # read-back of the written table (3 jobs -> 2)
-    srow = (
-        spark.read.parquet(f"{path}/docstats")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"))
-        .collect()[0]
-    )
-    spark.createDataFrame(
-        [(int(srow["n_docs"]), float(srow["avgdl"]))],
-        "n_docs bigint, avgdl double",
-    ).repartition(1).write.mode("overwrite").parquet(f"{path}/stats")
-    fs.delete(marker, False)
+        dl = fresh.select(
+            F.col(id_col).alias("doc_id"),
+            F.size(tokens(F.col(text_col))).cast("bigint").alias("dl"),
+            F.lit(batch).alias("batch"),
+        )
+        dl.write.mode("append").partitionBy("batch").parquet(f"{path}/docstats")
+        # happy-path termstats: additive merge of the OLD termstats slice
+        # with the batch's per-term counts — cheaper than re-aggregating
+        # the affected postings buckets (vocab slice vs postings slice);
+        # the repair path re-derives from postings instead, which is why
+        # a crash between the postings write and this overwrite is safe
+        new_counts = postings.groupBy("term", "bucket").agg(
+            F.count(F.lit(1)).cast("bigint").alias("dfreq")
+        )
+        old = (
+            spark.read.parquet(f"{path}/termstats")
+            .filter(F.col("bucket").isin(affected))
+            .select("term", "bucket", "dfreq")
+        )
+        merged = (
+            old.unionByName(new_counts)
+            .groupBy("term", "bucket")
+            .agg(F.sum("dfreq").cast("bigint").alias("dfreq"))
+        )
+        _overwrite_partitions(
+            merged.repartition("bucket"), f"{path}/termstats", "bucket"
+        )
+        # exact stats recompute: collect the 1-row aggregate once, then
+        # write it as a literal row — no localCheckpoint of docstats, no
+        # read-back of the written table (3 jobs -> 2)
+        srow = (
+            spark.read.parquet(f"{path}/docstats")
+            .agg(F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"))
+            .collect()[0]
+        )
+        spark.createDataFrame(
+            [(int(srow["n_docs"]), float(srow["avgdl"]))],
+            "n_docs bigint, avgdl double",
+        ).repartition(1).write.mode("overwrite").parquet(f"{path}/stats")
     return {
         "n_new_docs": int(n_new),
         "n_docs": int(srow["n_docs"]),

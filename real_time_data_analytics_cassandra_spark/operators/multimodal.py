@@ -1367,20 +1367,14 @@ def incremental_signature_pairs_fold(
     self-pair drop; same crash-window discipline as the index
     appends."""
     from real_time_data_analytics_cassandra_spark.sinks.merge import (
+        _target_exists,
         merge_min_add,
     )
 
     spark = sig_batch.sparkSession
     sig_batch = sig_batch.localCheckpoint(eager=True)
     distinct_sigs = sig_batch.select("sig_hi", "sig_lo").distinct()
-    jvm_fs = spark._jvm.org.apache.hadoop.fs  # noqa: SLF001
-    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-
-    def _exists(p: str) -> bool:
-        hp = jvm_fs.Path(p)
-        return hp.getFileSystem(conf).exists(hp)
-
-    if _exists(cluster_path):
+    if _target_exists(spark, cluster_path):
         known = spark.read.parquet(cluster_path).select("sig_hi", "sig_lo")
         new_sigs = distinct_sigs.join(
             known, ["sig_hi", "sig_lo"], "left_anti"
@@ -1417,7 +1411,7 @@ def incremental_signature_pairs_fold(
         "bucket",
     )
     cands = []
-    if _exists(band_path):
+    if _target_exists(spark, band_path):
         # partition-pruned probe: only the buckets this batch's band
         # values land in are read (<= n_bands * N_BAND_BUCKETS dirs —
         # a BOUNDED driver list, so the collect is sanctioned)

@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 

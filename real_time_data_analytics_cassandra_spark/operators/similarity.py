@@ -1104,7 +1104,11 @@ def ann_index_append(
     append is bit-identical to probing an index whose codes were
     encoded in one pass with the same model (asserted in
     tests/test_crossval.py).  Returns {n_new, batch, repaired}."""
-    from real_time_data_analytics_cassandra_spark.operators.index import _fs
+    from real_time_data_analytics_cassandra_spark.operators.index import (
+        _content_batch,
+        _pending_marker,
+    )
+    from real_time_data_analytics_cassandra_spark.sinks.merge import _fs
 
     spark = batch_df.sparkSession
     # roll back any half-applied batch
@@ -1125,31 +1129,21 @@ def ann_index_append(
     fresh = batch_df.join(
         known, batch_df[id_col] == known.vid, "left_anti"
     ).localCheckpoint(eager=True)
-    sig = fresh.agg(
-        F.count(F.lit(1)).alias("c"),
-        F.sum(
-            F.xxhash64(F.col(id_col).cast("string")).cast("decimal(38,0)")
-        ).alias("h"),
-    ).collect()[0]
-    n_new = int(sig["c"])
+    n_new, batch = _content_batch(fresh, id_col)
     if n_new == 0:
         return {"n_new": 0, "batch": None, "repaired": repaired}
-    batch = f"b{n_new}x{(int(sig['h']) & 0xFFFFFFFFFFFF):012x}"
 
     cent_unit, cell_ids, books = _load_ivfpq_model(spark, path)
     encoded = _ivfpq_encode(
         fresh, id_col, vec_col, cent_unit, cell_ids, books
     ).withColumn("batch", F.lit(batch))
-    fs, marker = _fs(spark, f"{path}/pending/{batch}")
-    fs.mkdirs(marker.getParent())
-    fs.create(marker, True).close()
-    (
-        encoded.repartition("cell")
-        .write.mode("append")
-        .partitionBy("cell", "batch")
-        .parquet(f"{path}/codes")
-    )
-    fs.delete(marker, False)
+    with _pending_marker(spark, path, batch):
+        (
+            encoded.repartition("cell")
+            .write.mode("append")
+            .partitionBy("cell", "batch")
+            .parquet(f"{path}/codes")
+        )
     return {"n_new": n_new, "batch": batch, "repaired": repaired}
 
 

@@ -91,21 +91,6 @@ def heavy_hitters(df: DataFrame, col: str, k: int = 64) -> DataFrame:
     return merged.crossJoin(F.broadcast(err_row))
 
 
-def top_heavy_hitters(
-    df: DataFrame, col: str, k: int = 64, top: int = 20
-) -> DataFrame:
-    """Reporting form: the ``top`` largest estimates with deterministic
-    (est desc, value) ranking — TakeOrdered over the ≤ k·P-row merged
-    summary, never over the data."""
-    w = Window.orderBy(F.desc("est_count"), F.asc("value"))
-    return (
-        heavy_hitters(df, col, k)
-        .orderBy(F.desc("est_count"), F.asc("value"))
-        .limit(top)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-    )
-
-
 def verified_heavy_hitters(
     df: DataFrame, col: str, k: int = 64, top: int = 20
 ) -> DataFrame:
@@ -421,14 +406,6 @@ def kmv_hash(c, salt: str = "kmv"):
         16,
         10,
     ).cast("bigint")
-
-
-def kmv_hash_sql(expr: str, salt: str = "kmv") -> str:
-    """DuckDB expression computing exactly :func:`kmv_hash`."""
-    return (
-        f"CAST('0x' || substr(md5('{salt}' || CAST({expr} AS VARCHAR)), 1, 12)"
-        " AS BIGINT)"
-    )
 
 
 def kmv_sketch(df: DataFrame, col: str, k: int = 256, salt: str = "kmv") -> DataFrame:

@@ -4787,7 +4787,9 @@ def _run_streaming(
 ) -> DataFrame:
     """Drain ``build(stream)`` over the bounded replay of ``table`` into
     the memory sink ``name`` (:func:`run_available_now`); ``events``
-    arrives with a normalized ``ts``."""
+    arrives with a normalized ``ts``.  The memory sink keeps its rows
+    in the driver, so the checkpoint is deleted once the stream has
+    drained."""
     import tempfile
 
     from real_time_data_analytics_cassandra_spark.sources.streams import (
@@ -4804,8 +4806,10 @@ def _run_streaming(
         if table == "events"
         else bounded_table_stream(spark, sf_dir, table)
     )
-    ckpt = tempfile.mkdtemp(prefix=f"rtdac_ckpt_{name}_")
-    return run_available_now(build(stream), name, ckpt, **run_kwargs)
+    with tempfile.TemporaryDirectory(
+        prefix=f"rtdac_ckpt_{name}_", ignore_cleanup_errors=True
+    ) as ckpt:
+        return run_available_now(build(stream), name, ckpt, **run_kwargs)
 
 
 def streaming_hourly_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10526,7 +10530,6 @@ def kmv_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ensure_query_confs(spark)
     from real_time_data_analytics_cassandra_spark.operators.sketches import (
-        KMV_SCALE,
         kmv_estimate,
         kmv_sketch,
     )
@@ -11048,11 +11051,13 @@ def streaming_observed_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the real work the metrics ride on: the counter-table aggregation
     agg = observed.groupBy("event_type", "h").count()
-    ckpt = tempfile.mkdtemp(prefix="rtdac_ckpt_streaming_observed_")
     # both confs bind at query start and are restored afterwards: a
     # progress ring left at 10000 session-wide would make every later
-    # streaming query retain 10k progress entries on the driver
-    with conf_override(
+    # streaming query retain 10k progress entries on the driver; the
+    # checkpoint is deleted once the stream has drained
+    with tempfile.TemporaryDirectory(
+        prefix="rtdac_ckpt_streaming_observed_", ignore_cleanup_errors=True
+    ) as ckpt, conf_override(
         spark, "spark.sql.streaming.numRecentProgressUpdates", "10000"
     ), conf_override(
         spark, "spark.sql.shuffle.partitions", str(STATE_PARTITIONS)

@@ -19,11 +19,32 @@ Spark-first scale story (the part that matters at 100 TB):
    prunes at runtime (dynamic partition pruning) with no driver-side
    materialization — so 99.9% of a 100 TB target is never listed,
    read, or written, and no batch can blow up the driver.
-3. Union + last-write-wins dedup (one shuffle, sized to affected
-   partitions only), then write back with
-   ``partitionOverwriteMode=dynamic`` — Spark replaces exactly the
-   partitions present in the result and leaves every other partition's
-   files untouched (asserted in tests/test_merge.py by file mtimes).
+3. Union + combine (one shuffle, sized to affected partitions only),
+   then write back with ``partitionOverwriteMode=dynamic`` — Spark
+   replaces exactly the partitions present in the result and leaves
+   every other partition's files untouched (asserted in
+   tests/test_merge.py by file mtimes).
+
+This module is the one owner of that rule.  Its shared helpers:
+
+- :func:`_fs` / :func:`_target_exists` — the Hadoop FileSystem of a
+  path and the storage-agnostic existence check (local, ``file://``,
+  HDFS and object stores alike; never driver-local ``os.path``);
+- :func:`_pruned_target` — step 2, the read of the touched partitions;
+- :func:`_overwrite_partitions` — step 3's write-back: an eager
+  ``localCheckpoint`` (so the plan no longer reads the files it is
+  about to replace), then the dynamic partition overwrite;
+- :func:`_fold_grouped` — the grouped fold behind merge_add,
+  merge_sketches, merge_min and merge_min_add (batch group, first
+  write, pruned read, batch-id replay guard, union, regroup,
+  write-back); :func:`_fold_bounded` — the bounded-list fold behind
+  merge_topn and merge_topk_per_group.
+
+The operator indexes update their partitioned tables through the same
+helpers: the span/ExactSubstr first-owner index
+(operators/dedup.py), the BM25 termstats table (operators/index.py),
+the near-dup band index (operators/multimodal.py) and the ANN append
+(operators/similarity.py).
 
 Constraint (same as any partitioned upsert without a global index,
 including Hive ACID's bucketed form): a key's partition value must be
@@ -34,9 +55,9 @@ the key (hash bucket) or from an immutable attribute.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.latest import latest_per_key
@@ -44,12 +65,19 @@ from ..session import conf_override
 from ..streaming.pipelines import start_available_now
 
 
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Hadoop Path) for ``path`` via the JVM
+    gateway — storage-agnostic (local, HDFS, object stores with a
+    Hadoop connector), unlike driver-side os/shutil calls."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def _target_exists(spark: SparkSession, path: str) -> bool:
     """FS-agnostic existence check via Hadoop (works for local, HDFS,
     object stores alike)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _fs(spark, path)
     return bool(fs.exists(hpath))
 
 
@@ -114,6 +142,22 @@ def _pruned_target(
     return pruned
 
 
+def _overwrite_partitions(df: DataFrame, path: str, partition_col: str) -> None:
+    """Write ``df`` back over the partitioned table at ``path``,
+    replacing exactly the ``partition_col`` values present in ``df``.
+
+    The eager localCheckpoint truncates lineage so the plan no longer
+    reads the path being overwritten (Spark forbids read+overwrite of
+    the same source); it materializes ONLY the touched partitions.
+    Callers that want one file per partition pass ``df`` already
+    repartitioned on ``partition_col``."""
+    df = df.localCheckpoint(eager=True)
+    with conf_override(
+        df.sparkSession, "spark.sql.sources.partitionOverwriteMode", "dynamic"
+    ):
+        df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+
+
 def merge_upsert(
     spark: SparkSession,
     source: DataFrame,
@@ -139,15 +183,75 @@ def merge_upsert(
         ts,
         tiebreak,
     )
-    # localCheckpoint truncates lineage so the plan no longer reads the
-    # path we are about to overwrite (Spark forbids read+overwrite of
-    # the same source); it materializes ONLY the touched partitions.
-    merged = merged.localCheckpoint(eager=True)
-    with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+    _overwrite_partitions(merged, path, partition_col)
 
 
 BATCH_ID_COL = "_applied_batch_id"
+
+
+def _fold_grouped(
+    spark: SparkSession,
+    batch: DataFrame,
+    path: str,
+    keys: Sequence[str],
+    partition_col: str,
+    aggs: Sequence[Column],
+    combine: Sequence[Column] | None = None,
+    batch_id: int | None = None,
+    merge_schema: bool = False,
+) -> None:
+    """The grouped read-modify-write every aggregate MERGE shares:
+    group ``batch`` by (``partition_col``, ``keys``) with ``aggs``,
+    write it if the table is new, else read the touched partitions,
+    union and regroup with ``combine`` (default: ``aggs`` — right for
+    sum/min/max, whose re-aggregation is the same aggregate) and
+    write the result back over those partitions.
+
+    A ``batch_id`` turns on the replay guard described at
+    :func:`merge_add`: rows carry it in ``BATCH_ID_COL`` and touched
+    partitions already holding it (or a later id) are left out of the
+    fold."""
+    grouped = batch.groupBy(partition_col, *keys).agg(*aggs)
+    if batch_id is not None:
+        grouped = grouped.withColumn(BATCH_ID_COL, F.lit(batch_id))
+    if not _target_exists(spark, path):
+        grouped.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+        return
+    existing = _pruned_target(
+        spark, path, grouped, partition_col, merge_schema=merge_schema
+    )
+    if batch_id is None and BATCH_ID_COL in existing.columns:
+        raise ValueError(
+            f"target {path!r} carries {BATCH_ID_COL}: folding without a "
+            "batch_id would drop the replay markers from the partitions "
+            "it overwrites — pass the batch_id (or rebuild the target "
+            "without replay protection)"
+        )
+    if batch_id is not None:
+        if BATCH_ID_COL not in existing.columns:
+            existing = existing.withColumn(BATCH_ID_COL, F.lit(-1))
+        # partition values already holding this batch — one row per
+        # touched partition, broadcast into the anti joins, never
+        # collected to the driver
+        replayed = (
+            existing.groupBy(partition_col)
+            .agg(F.max(BATCH_ID_COL).alias("_mx"))
+            .filter(F.col("_mx") >= batch_id)
+            .select(partition_col)
+        )
+        grouped = grouped.join(F.broadcast(replayed), partition_col, "left_anti")
+        existing = existing.join(F.broadcast(replayed), partition_col, "left_anti")
+        if grouped.isEmpty():
+            return
+    merged = (
+        existing.select(*grouped.columns)
+        .unionByName(grouped)
+        .groupBy(partition_col, *keys)
+        .agg(*(aggs if combine is None else combine))
+    )
+    if batch_id is not None:
+        merged = merged.withColumn(BATCH_ID_COL, F.lit(batch_id))
+    _overwrite_partitions(merged, path, partition_col)
 
 
 def merge_add(
@@ -186,51 +290,16 @@ def merge_add(
     pruned read always merges footers — otherwise schema inference
     could sample a markerless file and silently drop every replay
     marker from the read (double-count on replay, no error)."""
-    grouped = deltas.groupBy(partition_col, *keys).agg(
-        F.sum(count_col).alias(count_col)
+    _fold_grouped(
+        spark,
+        deltas,
+        path,
+        keys,
+        partition_col,
+        [F.sum(count_col).alias(count_col)],
+        batch_id=batch_id,
+        merge_schema=True,
     )
-    if batch_id is not None:
-        grouped = grouped.withColumn(BATCH_ID_COL, F.lit(batch_id))
-    if not _target_exists(spark, path):
-        grouped.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-        return
-    existing = _pruned_target(
-        spark, path, grouped, partition_col, merge_schema=True
-    )
-    if batch_id is None and BATCH_ID_COL in existing.columns:
-        raise ValueError(
-            f"target {path!r} carries {BATCH_ID_COL}: folding without a "
-            "batch_id would drop the replay markers from the partitions "
-            "it overwrites — pass the batch_id (or rebuild the target "
-            "without replay protection)"
-        )
-    if batch_id is not None:
-        if BATCH_ID_COL not in existing.columns:
-            existing = existing.withColumn(BATCH_ID_COL, F.lit(-1))
-        # partition values already holding this batch's counts — one
-        # row per touched partition, broadcast into the anti joins,
-        # never collected to the driver
-        replayed = (
-            existing.groupBy(partition_col)
-            .agg(F.max(BATCH_ID_COL).alias("_mx"))
-            .filter(F.col("_mx") >= batch_id)
-            .select(partition_col)
-        )
-        grouped = grouped.join(F.broadcast(replayed), partition_col, "left_anti")
-        existing = existing.join(F.broadcast(replayed), partition_col, "left_anti")
-        if grouped.isEmpty():
-            return
-    merged = (
-        existing.select(*grouped.columns)
-        .unionByName(grouped)
-        .groupBy(partition_col, *keys)
-        .agg(F.sum(count_col).alias(count_col))
-    )
-    if batch_id is not None:
-        merged = merged.withColumn(BATCH_ID_COL, F.lit(batch_id))
-    merged = merged.localCheckpoint(eager=True)
-    with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
 
 
 def counter_foreach_batch(
@@ -288,6 +357,33 @@ def merge_upsert_foreach_batch(
     return start_available_now(stream, _merge, checkpoint)
 
 
+def _fold_bounded(
+    spark: SparkSession,
+    source: DataFrame,
+    path: str,
+    top: Callable[[DataFrame], DataFrame],
+    id_cols: Sequence[str],
+) -> None:
+    """The bounded-list fold both recent-list MERGEs share: collapse
+    the batch to ``top(source)`` first, so the union with the stored
+    list stays within twice the bound; dedup on ``id_cols`` (a
+    replayed merge cannot evict newer rows) and keep ``top`` of the
+    union.  The table is small and unpartitioned, so the write-back is
+    a whole-table overwrite after an eager localCheckpoint (the plan
+    must not read the files it replaces)."""
+    batch_top = top(source)
+    if not _target_exists(spark, path):
+        batch_top.write.mode("overwrite").parquet(path)
+        return
+    merged = (
+        spark.read.parquet(path)
+        .select(*batch_top.columns)
+        .unionByName(batch_top)
+        .dropDuplicates(list(id_cols))
+    )
+    top(merged).localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
+
+
 def merge_topn(
     spark: SparkSession,
     source: DataFrame,
@@ -311,18 +407,13 @@ def merge_topn(
     list cannot evict newer ones)."""
     from ..operators.topk import global_top_n
 
-    batch_top = global_top_n(source, order_col, n, id_cols)
-    if not _target_exists(spark, path):
-        batch_top.write.mode("overwrite").parquet(path)
-        return
-    existing = spark.read.parquet(path)
-    merged = (
-        existing.select(*batch_top.columns)
-        .unionByName(batch_top)
-        .dropDuplicates(list(id_cols))
+    _fold_bounded(
+        spark,
+        source,
+        path,
+        lambda df: global_top_n(df, order_col, n, id_cols),
+        id_cols,
     )
-    result = global_top_n(merged, order_col, n, id_cols).localCheckpoint(eager=True)
-    result.write.mode("overwrite").parquet(path)
 
 
 def topn_foreach_batch(
@@ -368,22 +459,15 @@ def merge_topk_per_group(
     on ``id_cols`` dedup, like :func:`merge_topn`."""
     from ..operators.topk import top_k_per_group
 
-    batch_top = top_k_per_group(source, group_cols, order_col, k, id_cols).drop("rn")
-    if not _target_exists(spark, path):
-        batch_top.write.mode("overwrite").parquet(path)
-        return
-    existing = spark.read.parquet(path)
-    merged = (
-        existing.select(*batch_top.columns)
-        .unionByName(batch_top)
-        .dropDuplicates(list(id_cols))
+    _fold_bounded(
+        spark,
+        source,
+        path,
+        lambda df: top_k_per_group(df, group_cols, order_col, k, id_cols).drop(
+            "rn"
+        ),
+        id_cols,
     )
-    result = (
-        top_k_per_group(merged, group_cols, order_col, k, id_cols)
-        .drop("rn")
-        .localCheckpoint(eager=True)
-    )
-    result.write.mode("overwrite").parquet(path)
 
 
 def topk_per_group_foreach_batch(
@@ -429,21 +513,15 @@ def merge_sketches(
     test replays a batch and asserts byte-stable estimates).  Same
     partition-pruned read-modify-write shape as merge_upsert.
     """
-    grouped = batch.groupBy(partition_col, *keys).agg(
-        F.hll_sketch_agg(id_col).alias("sketch")
+    _fold_grouped(
+        spark,
+        batch,
+        path,
+        keys,
+        partition_col,
+        [F.hll_sketch_agg(id_col).alias("sketch")],
+        combine=[F.hll_union_agg("sketch").alias("sketch")],
     )
-    if not _target_exists(spark, path):
-        grouped.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-        return
-    existing = _pruned_target(spark, path, grouped, partition_col)
-    combined = (
-        existing.unionByName(grouped)
-        .groupBy(partition_col, *keys)
-        .agg(F.hll_union_agg("sketch").alias("sketch"))
-    )
-    combined = combined.localCheckpoint(eager=True)
-    with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-        combined.write.mode("overwrite").partitionBy(partition_col).parquet(path)
 
 
 def sketch_foreach_batch(
@@ -517,10 +595,8 @@ def merge_kmv(
         hashed.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= k)
         .drop("__rn")
-        .localCheckpoint(eager=True)
     )
-    with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-        folded.write.mode("overwrite").partitionBy(part).parquet(path)
+    _overwrite_partitions(folded, path, part)
 
 
 def kmv_foreach_batch(
@@ -562,21 +638,14 @@ def merge_min(
     Same partition-pruned read-modify-write shape as the other
     MERGEs; per batch the rewrite touches only the hive partitions
     the batch's keys land in."""
-    grouped = batch.groupBy(partition_col, *key_cols).agg(
-        F.min(val_col).alias(val_col)
+    _fold_grouped(
+        spark,
+        batch,
+        path,
+        key_cols,
+        partition_col,
+        [F.min(val_col).alias(val_col)],
     )
-    if not _target_exists(spark, path):
-        grouped.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-        return
-    existing = _pruned_target(spark, path, grouped, partition_col)
-    combined = (
-        existing.unionByName(grouped)
-        .groupBy(partition_col, *key_cols)
-        .agg(F.min(val_col).alias(val_col))
-    )
-    combined = combined.localCheckpoint(eager=True)
-    with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-        combined.write.mode("overwrite").partitionBy(partition_col).parquet(path)
 
 
 def min_foreach_batch(
@@ -625,34 +694,12 @@ def merge_min_add(
     here (same semantics as :func:`merge_add`: a partition already
     carrying this batch id skips the whole fold — the min column is
     idempotent anyway, so skipping it too is harmless)."""
-    grouped = batch.groupBy(partition_col, *key_cols).agg(
-        F.min(min_col).alias(min_col),
-        F.sum(add_col).alias(add_col),
-    ).withColumn(BATCH_ID_COL, F.lit(batch_id))
-    if not _target_exists(spark, path):
-        grouped.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-        return
-    existing = _pruned_target(spark, path, grouped, partition_col)
-    replayed = (
-        existing.groupBy(partition_col)
-        .agg(F.max(BATCH_ID_COL).alias("_mx"))
-        .filter(F.col("_mx") >= batch_id)
-        .select(partition_col)
+    _fold_grouped(
+        spark,
+        batch,
+        path,
+        key_cols,
+        partition_col,
+        [F.min(min_col).alias(min_col), F.sum(add_col).alias(add_col)],
+        batch_id=batch_id,
     )
-    grouped = grouped.join(F.broadcast(replayed), partition_col, "left_anti")
-    existing = existing.join(F.broadcast(replayed), partition_col, "left_anti")
-    if grouped.isEmpty():
-        return
-    merged = (
-        existing.select(*grouped.columns)
-        .unionByName(grouped)
-        .groupBy(partition_col, *key_cols)
-        .agg(
-            F.min(min_col).alias(min_col),
-            F.sum(add_col).alias(add_col),
-        )
-        .withColumn(BATCH_ID_COL, F.lit(batch_id))
-        .localCheckpoint(eager=True)
-    )
-    with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)

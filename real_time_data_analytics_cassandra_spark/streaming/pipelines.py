@@ -26,7 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from real_time_data_analytics_cassandra_spark.functions.buckets import hour_bucket
 from real_time_data_analytics_cassandra_spark.session import conf_override
 
 DEFAULT_WATERMARK = "1 hour"

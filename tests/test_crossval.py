@@ -868,7 +868,6 @@ def test_ann_index_append_equals_one_pass_encode(spark):
     from pyspark.sql import functions as F
 
     from real_time_data_analytics_cassandra_spark.catalog import table
-    from real_time_data_analytics_cassandra_spark.operators.index import _fs
     from real_time_data_analytics_cassandra_spark.operators.similarity import (
         _ivfpq_encode,
         _load_ivfpq_model,
@@ -876,6 +875,7 @@ def test_ann_index_append_equals_one_pass_encode(spark):
         ann_index_build,
         ann_index_probe,
     )
+    from real_time_data_analytics_cassandra_spark.sinks.merge import _fs
 
     emb = table(spark, SF_ORACLE, "embeddings")
     old = emb.filter(F.col("vec_id") % 2 == 0)

@@ -13,6 +13,7 @@ from real_time_data_analytics_cassandra_spark.catalog import table
 from real_time_data_analytics_cassandra_spark.operators import index as idx
 from real_time_data_analytics_cassandra_spark.operators import text as text_op
 from real_time_data_analytics_cassandra_spark.plans import explain_str
+from real_time_data_analytics_cassandra_spark.sinks.merge import _fs
 from tests.conftest import SF_SMOKE
 
 TERMS = ("stream", "merge", "window")
@@ -171,7 +172,7 @@ def test_crashed_append_is_rolled_back_and_retried(
     partial.write.mode("append").partitionBy("bucket", "batch").parquet(
         f"{inc_path}/postings"
     )
-    fs, marker = idx._fs(spark, f"{inc_path}/pending/bDEADBEEF")
+    fs, marker = _fs(spark, f"{inc_path}/pending/bDEADBEEF")
     fs.mkdirs(marker.getParent())
     fs.create(marker, True).close()
 
@@ -267,7 +268,7 @@ def test_repair_clears_stale_termstats_of_emptied_bucket(
     # forge the crash: the committed state with the marker re-created
     # is byte-identical to a crash between the stats write and the
     # marker delete
-    fs, marker = idx._fs(spark, f"{path}/pending/{batch}")
+    fs, marker = _fs(spark, f"{path}/pending/{batch}")
     fs.mkdirs(marker.getParent())
     fs.create(marker, True).close()
 

@@ -162,19 +162,20 @@ def test_span_index_dedup_incremental_equals_batch(spark, tmp_path):
         r["id"]: tuple(r)
         for r in keep_first_segment_dedup(df, "doc_id", "text", 8).collect()
     }
-    idx = str(tmp_path / "span_idx")
-    got = {}
-    # id-ordered arrival in three batches -> must equal one-shot batch
-    for b, lo, hi in ((0, 1, 2), (1, 3, 4), (2, 5, 6)):
-        part = df.filter(
-            (F.col("doc_id") >= lo) & (F.col("doc_id") <= hi)
-        )
-        out = span_index_dedup_batch(
-            spark, part, idx, "doc_id", "text", 8, batch_id=b
-        )
-        for r in out.collect():
-            got[r["id"]] = tuple(r)
-    assert got == expect
+    # the index path is storage-agnostic: a file:// URI folds the same
+    for idx in (str(tmp_path / "span_idx"), (tmp_path / "span_uri").as_uri()):
+        got = {}
+        # id-ordered arrival in three batches -> must equal one-shot batch
+        for b, lo, hi in ((0, 1, 2), (1, 3, 4), (2, 5, 6)):
+            part = df.filter(
+                (F.col("doc_id") >= lo) & (F.col("doc_id") <= hi)
+            )
+            out = span_index_dedup_batch(
+                spark, part, idx, "doc_id", "text", 8, batch_id=b
+            )
+            for r in out.collect():
+                got[r["id"]] = tuple(r)
+        assert got == expect, idx
 
 
 def test_span_index_dedup_outputs_survive_later_fold_overwrites(
@@ -425,21 +426,22 @@ def test_exact_substr_index_incremental_equals_batch(spark, tmp_path):
             df, "doc_id", "text", min_len=16
         ).collect()
     }
-    idx = str(tmp_path / "xsub_idx")
-    got = {}
-    for b, lo, hi in ((0, 1, 2), (1, 3, 4), (2, 5, 5)):
-        part = df.filter(
-            (F.col("doc_id") >= lo) & (F.col("doc_id") <= hi)
-        )
-        out = exact_substr_index_batch(
-            spark, part, idx, "doc_id", "text", 16, batch_id=b
-        )
-        for r in out.collect():
-            got[r["id"]] = tuple(r)
-    assert got == expect
-    by_id = {t[0]: t for t in got.values()}
-    assert by_id[3][2] == 25, "cross-batch repeat must be scrubbed"
-    assert by_id[4][2] == 20, "cross-batch exact dup must be scrubbed"
+    # the index path is storage-agnostic: a file:// URI folds the same
+    for idx in (str(tmp_path / "xsub_idx"), (tmp_path / "xsub_uri").as_uri()):
+        got = {}
+        for b, lo, hi in ((0, 1, 2), (1, 3, 4), (2, 5, 5)):
+            part = df.filter(
+                (F.col("doc_id") >= lo) & (F.col("doc_id") <= hi)
+            )
+            out = exact_substr_index_batch(
+                spark, part, idx, "doc_id", "text", 16, batch_id=b
+            )
+            for r in out.collect():
+                got[r["id"]] = tuple(r)
+        assert got == expect, idx
+        by_id = {t[0]: t for t in got.values()}
+        assert by_id[3][2] == 25, "cross-batch repeat must be scrubbed"
+        assert by_id[4][2] == 20, "cross-batch exact dup must be scrubbed"
 
 
 def test_exact_substr_index_replay_is_idempotent(spark, tmp_path):

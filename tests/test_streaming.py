@@ -802,3 +802,21 @@ def test_streaming_events_queries_read_nanosecond_ts(spark, tmp_path, monkeypatc
     micros = query(spark, SF_SMOKE).toPandas()
     assert len(micros) > 0
     assert first_mismatch(query(spark, str(nanos)).toPandas(), micros) is None
+
+
+def test_memory_sink_queries_delete_their_checkpoint(spark, tmp_path, monkeypatch):
+    """A memory-sink streaming query keeps its rows in the driver, so
+    it deletes its ``rtdac_ckpt_`` checkpoint once the stream has
+    drained — and the rows it returns still match the oracle."""
+    from real_time_data_analytics_cassandra_spark import queries as q
+    from tools.oracle_check import duck, first_mismatch
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    con = duck(SF_SMOKE)
+    registry, oracle = q.queries(), q.oracle_sql()
+    for name in ("streaming_hourly_type_counts", "streaming_observed_quality"):
+        got = registry[name](spark, SF_SMOKE).toPandas()
+        assert len(got) > 0, name
+        assert first_mismatch(got, con.sql(oracle[name]).df()) is None, name
+    left = [p.name for p in tmp_path.iterdir() if p.name.startswith("rtdac_ckpt_")]
+    assert left == []
