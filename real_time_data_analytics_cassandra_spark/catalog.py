@@ -30,12 +30,6 @@ TABLES = (
     "embeddings",
 )
 
-# Small dimensions it is always correct to broadcast (reference holds
-# them as in-process dicts: cassandra_subscriber.py:21-53 GEOGRAPHY_MAP,
-# realtime_api.py:59-63 PRODUCT_SUBCATEGORIES_MAP).
-BROADCAST_DIMS = ("region", "nation")
-
-
 # columns that SOME testdata generations store as parquet
 # TIMESTAMP(NANOS), which Spark's reader rejects; read via
 # spark.sql.legacy.parquet.nanosAsLong and convert with integer

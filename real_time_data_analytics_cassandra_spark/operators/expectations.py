@@ -22,8 +22,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_REPORT_SCHEMA = ("check", "n_rows", "n_violations", "passed")
-
 
 def row_checks(df: DataFrame, checks: dict[str, Column]) -> DataFrame:
     """Evaluate named boolean row predicates in ONE aggregate pass:

@@ -20,6 +20,15 @@ Payloads in any other container (JPEG/MP3) raise NotImplementedError —
 that boundary now means "codec genuinely absent", not "no decoder
 exists".  Everything Spark-side — schema handling, Arrow batching,
 partition parallelism, the UDF signature — is real and tested.
+
+Two media decisions are made once here.  :func:`attach_payload`
+builds every container: it looks ``fmt`` up in one table of container
+builders and emits one ``(doc_id, payload)`` schema, and the builders
+share one plane geometry (``_plane``: ceil to whole rows, at least one
+row, zero-padded — the rule the DuckDB oracles mirror).  Every 64-bit
+perceptual signature (image aHash/dHash, audio energy/spectral) runs
+through the one signature stage ``_signature_stage``: real decode,
+layout check, the hash's per-payload math, MSB-first ``_pack64``.
 """
 
 from __future__ import annotations
@@ -200,6 +209,15 @@ REAL_DECODE_SCHEMA = StructType(
         StructField("byte_len", LongType()),
     ]
 )
+
+
+def _plane(data: bytes, row_bytes: int) -> tuple[bytes, int]:
+    """The container plane geometry: ``data`` cut into rows of
+    ``row_bytes``, ceil to whole rows, at least one row (empty input
+    becomes one blank row), final row zero-padded.  Returns (plane,
+    height)."""
+    height = max(1, -(-len(data) // row_bytes))
+    return data + b"\x00" * (row_bytes * height - len(data)), height
 
 
 def _wav_container(data: bytes, sample_rate: int = WAV_SAMPLE_RATE) -> bytes:
@@ -434,8 +452,7 @@ def _png_container(data: bytes, width: int = PNG_WIDTH) -> bytes:
     concatenation — any PNG viewer opens the output."""
     import struct
 
-    height = max(1, -(-len(data) // width))
-    plane = data + b"\x00" * (width * height - len(data))
+    plane, height = _plane(data, width)
     ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
     return _png_assemble(ihdr, _png_filter_plane(plane, width, height))
 
@@ -452,8 +469,7 @@ def _png_container_gray16(data: bytes, width: int = PNG_WIDTH) -> bytes:
     import struct
 
     row_bytes = width * 2
-    height = max(1, -(-len(data) // row_bytes))
-    plane = data + b"\x00" * (row_bytes * height - len(data))
+    plane, height = _plane(data, row_bytes)
     ihdr = struct.pack(">IIBBBBB", width, height, 16, 0, 0, 0, 0)
     return _png_assemble(
         ihdr, _png_filter_plane(plane, row_bytes, height, bpp=2)
@@ -472,8 +488,7 @@ def _png_container_rgba(data: bytes, width: int = PNG_WIDTH) -> bytes:
     import struct
 
     row_bytes = width * 4
-    height = max(1, -(-len(data) // row_bytes))
-    plane = data + b"\x00" * (row_bytes * height - len(data))
+    plane, height = _plane(data, row_bytes)
     ihdr = struct.pack(">IIBBBBB", width, height, 8, 6, 0, 0, 0)
     return _png_assemble(
         ihdr, _png_filter_plane(plane, row_bytes, height, bpp=4)
@@ -493,8 +508,7 @@ def _png_container_palette(data: bytes, width: int = PNG_WIDTH) -> bytes:
     import struct
 
     row_bytes = width // 2  # 2 pixels per packed byte at depth 4
-    height = max(1, -(-len(data) // row_bytes))
-    plane = data + b"\x00" * (row_bytes * height - len(data))
+    plane, height = _plane(data, row_bytes)
     ihdr = struct.pack(">IIBBBBB", width, height, 4, 3, 0, 0, 0)
     plte = bytes(v for i in range(16) for v in (i * 17,) * 3)
     return _png_assemble(
@@ -718,38 +732,6 @@ def decode_payload(payload: bytes) -> tuple[dict, np.ndarray]:
     )
 
 
-def attach_wav_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Wrap each document's utf-8 bytes in a GENUINE RIFF/WAVE
-    container (8-bit mono PCM) — the deterministic stand-in for
-    reading real audio blobs from object storage, except the container
-    format is real and must survive a real header parse."""
-    from real_time_data_analytics_cassandra_spark.catalog import spread
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for batch in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": batch["doc_id"].astype("int64"),
-                    "payload": batch["text"].map(
-                        lambda t: _wav_container(t.encode("utf-8"))
-                    ),
-                }
-            )
-
-    src = spread(df).select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    )
-    return src.mapInPandas(
-        run,
-        schema=StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
-
-
 PPM_WIDTH = 32
 
 
@@ -758,42 +740,9 @@ def _ppm_container(data: bytes, width: int = PPM_WIDTH) -> bytes:
     a ``width``-wide image (zero-padded final row; empty input becomes
     one black row) — includes a comment line so decoders must handle
     the spec's comment syntax."""
-    height = max(1, -(-len(data) // (width * 3)))
-    plane = data + b"\x00" * (width * height * 3 - len(data))
+    plane, height = _plane(data, width * 3)
     header = f"P6\n# rtdac fixture\n{width} {height}\n255\n".encode()
     return header + plane
-
-
-def attach_ppm_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Wrap each document's utf-8 bytes in a GENUINE binary PPM (P6)
-    container — the uncompressed-image sibling of attach_png_payload;
-    the decode side must run a real header token scan (with comment
-    handling) to find the plane."""
-    from real_time_data_analytics_cassandra_spark.catalog import spread
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for batch in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": batch["doc_id"].astype("int64"),
-                    "payload": batch["text"].map(
-                        lambda t: _ppm_container(t.encode("utf-8"))
-                    ),
-                }
-            )
-
-    src = spread(df).select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    )
-    return src.mapInPandas(
-        run,
-        schema=StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
 
 
 def _png_container_adam7(data: bytes, width: int = PNG_WIDTH) -> bytes:
@@ -807,8 +756,7 @@ def _png_container_adam7(data: bytes, width: int = PNG_WIDTH) -> bytes:
     import struct
     import zlib
 
-    height = max(1, -(-len(data) // width))
-    plane = data + b"\x00" * (width * height - len(data))
+    plane, height = _plane(data, width)
     stream = bytearray()
     for x0, y0, xs, ys in _ADAM7_PASSES:
         for y in range(y0, height, ys):
@@ -824,13 +772,49 @@ def _png_container_adam7(data: bytes, width: int = PNG_WIDTH) -> bytes:
     )
 
 
-def attach_png_adam7_payload(
-    df: DataFrame, id_col: str, text_col: str
+# fmt -> container builder: the one place a payload format is chosen
+_CONTAINERS = {
+    "wav": _wav_container,
+    "ppm": _ppm_container,
+    "png": _png_container,
+    "png_adam7": _png_container_adam7,
+    "png_palette": _png_container_palette,
+    "png_gray16": _png_container_gray16,
+    "png_rgba": _png_container_rgba,
+}
+
+PAYLOAD_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("payload", BinaryType()),
+    ]
+)
+
+
+def attach_payload(
+    df: DataFrame, id_col: str, text_col: str, fmt: str
 ) -> DataFrame:
-    """Wrap each document's utf-8 bytes in a GENUINE Adam7-interlaced
-    PNG (:func:`_png_container_adam7`) — the interlaced twin of
-    :func:`attach_png_payload`."""
+    """Wrap each document's utf-8 bytes in a GENUINE media container
+    — the deterministic stand-in for reading real audio/image blobs
+    from object storage, except the container is spec-valid and only
+    a real decoder reads it back.  ``fmt`` picks the builder:
+
+    - ``wav``: RIFF/WAVE 8-bit mono PCM (:func:`_wav_container`);
+    - ``ppm``: binary P6 with a comment line (:func:`_ppm_container`);
+    - ``png``: 8-bit grayscale, cycling scanline filters, two IDAT
+      chunks (:func:`_png_container`);
+    - ``png_adam7``: the Adam7-interlaced twin
+      (:func:`_png_container_adam7`);
+    - ``png_palette``: 4-bit palette through a PLTE ramp
+      (:func:`_png_container_palette`);
+    - ``png_gray16``: 16-bit grayscale (:func:`_png_container_gray16`);
+    - ``png_rgba``: 8-bit RGBA (:func:`_png_container_rgba`).
+
+    The input is spread first: every builder is a per-row Python
+    stage, CPU-bound enough to want the parallelism."""
     from real_time_data_analytics_cassandra_spark.catalog import spread
+
+    build = _CONTAINERS[fmt]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
         for batch in batches:
@@ -838,7 +822,7 @@ def attach_png_adam7_payload(
                 {
                     "doc_id": batch["doc_id"].astype("int64"),
                     "payload": batch["text"].map(
-                        lambda t: _png_container_adam7(t.encode("utf-8"))
+                        lambda t: build(t.encode("utf-8"))
                     ),
                 }
             )
@@ -846,151 +830,7 @@ def attach_png_adam7_payload(
     src = spread(df).select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     )
-    return src.mapInPandas(
-        run,
-        schema=StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
-
-
-def attach_png_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Wrap each document's utf-8 bytes in a GENUINE PNG container
-    (8-bit grayscale, cycling scanline filters, two IDAT chunks —
-    :func:`_png_container`): the deterministic stand-in for reading
-    real image blobs from object storage, except the container is a
-    spec-valid PNG that only a real defiltering decoder can read."""
-    from real_time_data_analytics_cassandra_spark.catalog import spread
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for batch in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": batch["doc_id"].astype("int64"),
-                    "payload": batch["text"].map(
-                        lambda t: _png_container(t.encode("utf-8"))
-                    ),
-                }
-            )
-
-    src = spread(df).select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    )
-    return src.mapInPandas(
-        run,
-        schema=StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
-
-
-def attach_png_palette_payload(
-    df: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """Wrap each document's utf-8 bytes in a GENUINE 4-bit PALETTE PNG
-    (:func:`_png_container_palette`) — the sub-8-bit/PLTE sibling of
-    :func:`attach_png_payload`, so the palette-expansion and sub-byte
-    unpacking decode paths are exercised end-to-end by a registry
-    query, not only by test-side encoders."""
-    from real_time_data_analytics_cassandra_spark.catalog import spread
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for batch in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": batch["doc_id"].astype("int64"),
-                    "payload": batch["text"].map(
-                        lambda t: _png_container_palette(t.encode("utf-8"))
-                    ),
-                }
-            )
-
-    src = spread(df).select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    )
-    return src.mapInPandas(
-        run,
-        schema=StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
-
-
-def attach_png_gray16_payload(
-    df: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """Wrap each document's utf-8 bytes in a GENUINE 16-bit grayscale
-    PNG (:func:`_png_container_gray16`) — the high-bit-depth sibling
-    of :func:`attach_png_payload`, driving the decoder's two-byte
-    sample unpacking and bpp=2 defiltering end-to-end."""
-    from real_time_data_analytics_cassandra_spark.catalog import spread
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for batch in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": batch["doc_id"].astype("int64"),
-                    "payload": batch["text"].map(
-                        lambda t: _png_container_gray16(t.encode("utf-8"))
-                    ),
-                }
-            )
-
-    src = spread(df).select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    )
-    return src.mapInPandas(
-        run,
-        schema=StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
-
-
-def attach_png_rgba_payload(
-    df: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """Wrap each document's utf-8 bytes in a GENUINE 8-bit RGBA PNG
-    (:func:`_png_container_rgba`) — the multi-channel sibling of
-    :func:`attach_png_payload`, driving the decoder's 4-channel
-    interleaving and bpp=4 defiltering end-to-end."""
-    from real_time_data_analytics_cassandra_spark.catalog import spread
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for batch in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": batch["doc_id"].astype("int64"),
-                    "payload": batch["text"].map(
-                        lambda t: _png_container_rgba(t.encode("utf-8"))
-                    ),
-                }
-            )
-
-    src = spread(df).select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    )
-    return src.mapInPandas(
-        run,
-        schema=StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
+    return src.mapInPandas(run, schema=PAYLOAD_SCHEMA)
 
 
 def extract_features_arrow(df_with_payload: DataFrame) -> DataFrame:
@@ -1138,6 +978,63 @@ AHASH_SCHEMA = StructType(
 )
 
 
+def _pack64(bits) -> tuple[int, int]:
+    """Pack 64 signature bits MSB-first into two 32-bit halves (sig_hi
+    = bits 0..31, sig_lo = bits 32..63), so every value stays a
+    non-negative BIGINT in any engine."""
+    bits = np.asarray(bits).reshape(64)
+    hi = lo = 0
+    for b in range(32):
+        hi = (hi << 1) | int(bits[b])
+        lo = (lo << 1) | int(bits[32 + b])
+    return hi, lo
+
+
+def _signature_stage(
+    df_with_payload: DataFrame, stage: str, sign, pcm8: bool = False
+) -> DataFrame:
+    """The one Arrow-batched stage behind every 64-bit perceptual
+    signature: each payload is really decoded (:func:`decode_payload`),
+    its layout checked, and ``sign(meta, plane) -> (sig_hi, sig_lo)``
+    applied — one AHASH_SCHEMA row per payload, O(1) state each.
+
+    Layout guards: image stages need a single-channel plane (PPM's 3
+    interleaved channels are rejected); audio stages (``pcm8``) need
+    8-bit mono PCM.  Any other layout raises ValueError naming
+    ``stage`` rather than silently hashing the wrong samples."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
+        for batch in batches:
+            ids, his, los = [], [], []
+            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
+                meta, plane = decode_payload(bytes(payload))
+                ch, bits = meta["n_channels"], meta["bits_per_sample"]
+                if pcm8:
+                    if ch != 1 or bits != 8:
+                        raise ValueError(
+                            f"{stage} needs 8-bit mono PCM, "
+                            f"got {ch}ch/{bits}-bit"
+                        )
+                elif ch != 1:
+                    raise ValueError(
+                        f"{stage} needs a single-channel plane, "
+                        f"got {ch} channels"
+                    )
+                hi, lo = sign(meta, plane)
+                ids.append(int(doc_id))
+                his.append(hi)
+                los.append(lo)
+            yield pd.DataFrame(
+                {
+                    "doc_id": pd.Series(ids, dtype="int64"),
+                    "sig_hi": pd.Series(his, dtype="int64"),
+                    "sig_lo": pd.Series(los, dtype="int64"),
+                }
+            )
+
+    return df_with_payload.mapInPandas(run, schema=AHASH_SCHEMA)
+
+
 def image_ahash_signatures(df_with_payload: DataFrame) -> DataFrame:
     """64-bit AVERAGE HASH (aHash) per image, from the real decoded
     single-channel pixel plane — the classic perceptual signature
@@ -1160,43 +1057,17 @@ def image_ahash_signatures(df_with_payload: DataFrame) -> DataFrame:
     silently hashing interleaved samples.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for batch in batches:
-            ids, his, los = [], [], []
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                meta, px = decode_payload(bytes(payload))
-                if meta["n_channels"] != 1:
-                    raise ValueError(
-                        "image_ahash_signatures needs a single-channel "
-                        f"plane, got {meta['n_channels']} channels"
-                    )
-                w, h = meta["width"], meta["height"]
-                v = px.astype(np.int64)
-                idx = np.arange(v.size, dtype=np.int64)
-                cell = 8 * ((idx // w) * 8 // h) + (idx % w) * 8 // w
-                cell_sum = np.zeros(64, dtype=np.int64)
-                np.add.at(cell_sum, cell, v)
-                cell_npix = np.bincount(cell, minlength=64).astype(np.int64)
-                total = int(v.sum())
-                n = int(v.size)
-                bits = cell_sum * n > total * cell_npix
-                hi = 0
-                lo = 0
-                for b in range(32):
-                    hi = (hi << 1) | int(bits[b])
-                    lo = (lo << 1) | int(bits[32 + b])
-                ids.append(int(doc_id))
-                his.append(hi)
-                los.append(lo)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "sig_hi": pd.Series(his, dtype="int64"),
-                    "sig_lo": pd.Series(los, dtype="int64"),
-                }
-            )
+    def sign(meta: dict, px: np.ndarray) -> tuple[int, int]:
+        w, h = meta["width"], meta["height"]
+        v = px.astype(np.int64)
+        idx = np.arange(v.size, dtype=np.int64)
+        cell = 8 * ((idx // w) * 8 // h) + (idx % w) * 8 // w
+        cell_sum = np.zeros(64, dtype=np.int64)
+        np.add.at(cell_sum, cell, v)
+        cell_npix = np.bincount(cell, minlength=64).astype(np.int64)
+        return _pack64(cell_sum * int(v.size) > int(v.sum()) * cell_npix)
 
-    return df_with_payload.mapInPandas(run, schema=AHASH_SCHEMA)
+    return _signature_stage(df_with_payload, "image_ahash_signatures", sign)
 
 
 def image_ahash_clusters(sig: DataFrame) -> DataFrame:
@@ -1287,14 +1158,6 @@ def signature_near_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming", "n_docs_a", "n_docs_b")
     )
-
-
-def image_ahash_near_pairs(
-    sig: DataFrame, max_hamming: int = 3
-) -> DataFrame:
-    """Image form of :func:`signature_near_pairs`: 4 bands of 16 bits
-    over the aHash signatures (lossless for Hamming <= 3)."""
-    return signature_near_pairs(sig, n_bands=4, max_hamming=max_hamming)
 
 
 def _band_val_exprs(n_bands: int) -> list:
@@ -1595,44 +1458,19 @@ def image_dhash_signatures(df_with_payload: DataFrame) -> DataFrame:
     )
     right_cells = left_cells + 1
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for batch in batches:
-            ids, his, los = [], [], []
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                meta, px = decode_payload(bytes(payload))
-                if meta["n_channels"] != 1:
-                    raise ValueError(
-                        "image_dhash_signatures needs a single-channel "
-                        f"plane, got {meta['n_channels']} channels"
-                    )
-                w, h = meta["width"], meta["height"]
-                v = px.astype(np.int64)
-                idx = np.arange(v.size, dtype=np.int64)
-                cell = 9 * ((idx // w) * 8 // h) + (idx % w) * 9 // w
-                cs = np.zeros(72, dtype=np.int64)
-                np.add.at(cs, cell, v)
-                cn = np.bincount(cell, minlength=72).astype(np.int64)
-                bits = (
-                    cs[left_cells] * cn[right_cells]
-                    > cs[right_cells] * cn[left_cells]
-                )
-                hi = 0
-                lo = 0
-                for b in range(32):
-                    hi = (hi << 1) | int(bits[b])
-                    lo = (lo << 1) | int(bits[32 + b])
-                ids.append(int(doc_id))
-                his.append(hi)
-                los.append(lo)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "sig_hi": pd.Series(his, dtype="int64"),
-                    "sig_lo": pd.Series(los, dtype="int64"),
-                }
-            )
+    def sign(meta: dict, px: np.ndarray) -> tuple[int, int]:
+        w, h = meta["width"], meta["height"]
+        v = px.astype(np.int64)
+        idx = np.arange(v.size, dtype=np.int64)
+        cell = 9 * ((idx // w) * 8 // h) + (idx % w) * 9 // w
+        cs = np.zeros(72, dtype=np.int64)
+        np.add.at(cs, cell, v)
+        cn = np.bincount(cell, minlength=72).astype(np.int64)
+        return _pack64(
+            cs[left_cells] * cn[right_cells] > cs[right_cells] * cn[left_cells]
+        )
 
-    return df_with_payload.mapInPandas(run, schema=AHASH_SCHEMA)
+    return _signature_stage(df_with_payload, "image_dhash_signatures", sign)
 
 
 def audio_energy_fingerprints(df_with_payload: DataFrame) -> DataFrame:
@@ -1657,45 +1495,20 @@ def audio_energy_fingerprints(df_with_payload: DataFrame) -> DataFrame:
     Requires 8-bit mono PCM (the WAV container this repo builds);
     other sample layouts raise ValueError."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for batch in batches:
-            ids, his, los = [], [], []
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                meta, samples = decode_payload(bytes(payload))
-                if meta["n_channels"] != 1 or meta["bits_per_sample"] != 8:
-                    raise ValueError(
-                        "audio_energy_fingerprints needs 8-bit mono PCM, "
-                        f"got {meta['n_channels']}ch/"
-                        f"{meta['bits_per_sample']}-bit"
-                    )
-                v = np.abs(samples.astype(np.int64) - 128)
-                n = int(v.size)
-                hi = lo = 0
-                if n:
-                    idx = np.arange(n, dtype=np.int64)
-                    span = (idx * 64) // n
-                    span_sum = np.zeros(64, dtype=np.int64)
-                    np.add.at(span_sum, span, v)
-                    span_len = np.bincount(span, minlength=64).astype(
-                        np.int64
-                    )
-                    total = int(v.sum())
-                    bits = span_sum * n > total * span_len
-                    for b in range(32):
-                        hi = (hi << 1) | int(bits[b])
-                        lo = (lo << 1) | int(bits[32 + b])
-                ids.append(int(doc_id))
-                his.append(hi)
-                los.append(lo)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "sig_hi": pd.Series(his, dtype="int64"),
-                    "sig_lo": pd.Series(los, dtype="int64"),
-                }
-            )
+    def sign(meta: dict, samples: np.ndarray) -> tuple[int, int]:
+        v = np.abs(samples.astype(np.int64) - 128)
+        n = int(v.size)
+        if not n:
+            return 0, 0
+        span = (np.arange(n, dtype=np.int64) * 64) // n
+        span_sum = np.zeros(64, dtype=np.int64)
+        np.add.at(span_sum, span, v)
+        span_len = np.bincount(span, minlength=64).astype(np.int64)
+        return _pack64(span_sum * n > int(v.sum()) * span_len)
 
-    return df_with_payload.mapInPandas(run, schema=AHASH_SCHEMA)
+    return _signature_stage(
+        df_with_payload, "audio_energy_fingerprints", sign, pcm8=True
+    )
 
 
 N_SPECTRAL_FRAMES = 3
@@ -1750,12 +1563,7 @@ def spectral_signature_py(samples: "np.ndarray") -> tuple[int, int]:
     for f in range(N_SPECTRAL_FRAMES):
         np.add.at(e[f], band, spec[f])
     d = e[:, :-1] - e[:, 1:]  # frequency difference, 32 per frame
-    bits = (d[1:] - d[:-1]) > 0  # time difference, 2 x 32
-    hi = lo = 0
-    for b in range(32):
-        hi = (hi << 1) | int(bits[0, b])
-        lo = (lo << 1) | int(bits[1, b])
-    return hi, lo
+    return _pack64((d[1:] - d[:-1]) > 0)  # time difference, 2 x 32
 
 
 def audio_spectral_fingerprints(df_with_payload: DataFrame) -> DataFrame:
@@ -1774,28 +1582,9 @@ def audio_spectral_fingerprints(df_with_payload: DataFrame) -> DataFrame:
     here cancel frame-constant gain exactly (the dHash playbook
     applied to audio; tests/test_multimodal_real.py proves a faded
     pair the envelope misses and this hash links)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for batch in batches:
-            ids, his, los = [], [], []
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                meta, samples = decode_payload(bytes(payload))
-                if meta["n_channels"] != 1 or meta["bits_per_sample"] != 8:
-                    raise ValueError(
-                        "audio_spectral_fingerprints needs 8-bit mono "
-                        f"PCM, got {meta['n_channels']}ch/"
-                        f"{meta['bits_per_sample']}-bit"
-                    )
-                hi, lo = spectral_signature_py(samples)
-                ids.append(int(doc_id))
-                his.append(hi)
-                los.append(lo)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "sig_hi": pd.Series(his, dtype="int64"),
-                    "sig_lo": pd.Series(los, dtype="int64"),
-                }
-            )
-
-    return df_with_payload.mapInPandas(run, schema=AHASH_SCHEMA)
+    return _signature_stage(
+        df_with_payload,
+        "audio_spectral_fingerprints",
+        lambda _meta, samples: spectral_signature_py(samples),
+        pcm8=True,
+    )

@@ -29,7 +29,7 @@ string math stays inside whole-stage codegen):
   ``~user`` collapse, and ``a%2fb`` / ``a%2Fb`` collapse without
   decoding the reserved ``/``;
 - registrable domain via LONGEST-SUFFIX-WINS evaluation against a
-  broadcast PUBLIC-SUFFIX rule table (``suffix_rules``): ONE
+  broadcast PUBLIC-SUFFIX rule table (``_rules_by_tld``): ONE
   broadcast hash join on the host's TLD brings every rule sharing
   that TLD as an array (the fact side never shuffles) and the
   prevailing rule is picked PSL-style by expressions: a matching
@@ -101,18 +101,6 @@ def _parse_rule(rule: str) -> tuple[str, int, int, int, bool, int]:
     match_k = body.count(".") + 1
     ps = match_k - 1 if exc else match_k
     return (body, match_k, match_k, ps, exc, match_k)
-
-
-def suffix_rules(spark) -> DataFrame:
-    """The parsed rule table, one row per rule — tiny and broadcast
-    at every use site (the production PSL is ~9k rows: still a
-    broadcast dim)."""
-    rows = [_parse_rule(r) for r in PUBLIC_SUFFIX_RULES]
-    return spark.createDataFrame(
-        rows,
-        "match_text string, match_k int, rule_labels int, "
-        "ps_labels int, is_exception boolean, min_host_labels int",
-    )
 
 
 def _rules_by_tld() -> list[tuple[str, list]]:

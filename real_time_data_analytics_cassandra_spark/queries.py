@@ -2441,9 +2441,33 @@ def media_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_query_confs(spark)
     docs = table(spark, sf_dir, "documents")
     out = mm_op.decode_media_real(
-        mm_op.attach_wav_payload(docs, "doc_id", "text")
+        mm_op.attach_payload(docs, "doc_id", "text", "wav")
     )
     return out.orderBy("doc_id")
+
+
+def _png_geometry(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
+    """The readout the five media_png*_decode queries share: each
+    document wrapped in the ``fmt`` PNG container
+    (operators/multimodal.py::attach_payload), really decoded, and
+    reported as plane geometry — (doc_id, format, n_channels,
+    bits_per_sample, width, height, n_pixels) ordered by doc_id.  The
+    geometry is SQL-derivable from the text length; the compressed
+    byte length is not."""
+    ensure_query_confs(spark)
+    docs = table(spark, sf_dir, "documents")
+    out = mm_op.decode_media_real(
+        mm_op.attach_payload(docs, "doc_id", "text", fmt)
+    )
+    return out.select(
+        "doc_id",
+        "format",
+        "n_channels",
+        "bits_per_sample",
+        "width",
+        "height",
+        (F.col("width") * F.col("height")).cast("long").alias("n_pixels"),
+    ).orderBy("doc_id")
 
 
 def media_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2459,20 +2483,7 @@ def media_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel count are SQL-derivable from the text length; the
     compressed byte length is inherently not, so the query reports
     plane geometry, not container size."""
-    ensure_query_confs(spark)
-    docs = table(spark, sf_dir, "documents")
-    out = mm_op.decode_media_real(
-        mm_op.attach_png_payload(docs, "doc_id", "text")
-    )
-    return out.select(
-        "doc_id",
-        "format",
-        "n_channels",
-        "bits_per_sample",
-        "width",
-        "height",
-        (F.col("width") * F.col("height")).cast("long").alias("n_pixels"),
-    ).orderBy("doc_id")
+    return _png_geometry(spark, sf_dir, "png")
 
 
 def media_png_adam7_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2484,20 +2495,7 @@ def media_png_adam7_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the spec pass table (round-trip bit-exactness gated in
     tests/test_multimodal_real.py's mode matrix).  Same deterministic
     geometry, so the SAME SQL oracle text as the sequential twin."""
-    ensure_query_confs(spark)
-    docs = table(spark, sf_dir, "documents")
-    out = mm_op.decode_media_real(
-        mm_op.attach_png_adam7_payload(docs, "doc_id", "text")
-    )
-    return out.select(
-        "doc_id",
-        "format",
-        "n_channels",
-        "bits_per_sample",
-        "width",
-        "height",
-        (F.col("width") * F.col("height")).cast("long").alias("n_pixels"),
-    ).orderBy("doc_id")
+    return _png_geometry(spark, sf_dir, "png_adam7")
 
 
 def media_png_palette_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2511,20 +2509,7 @@ def media_png_palette_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     RGB (n_channels 3, bits 8) and the geometry is deterministic —
     width fixed 64, height = ceil(2·byte_len / 64) (min 1; each byte
     is two 4-bit pixels) — all SQL-derivable from the text length."""
-    ensure_query_confs(spark)
-    docs = table(spark, sf_dir, "documents")
-    out = mm_op.decode_media_real(
-        mm_op.attach_png_palette_payload(docs, "doc_id", "text")
-    )
-    return out.select(
-        "doc_id",
-        "format",
-        "n_channels",
-        "bits_per_sample",
-        "width",
-        "height",
-        (F.col("width") * F.col("height")).cast("long").alias("n_pixels"),
-    ).orderBy("doc_id")
+    return _png_geometry(spark, sf_dir, "png_palette")
 
 
 def media_png_rgba_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2537,20 +2522,7 @@ def media_png_rgba_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     was proven only by test-side encoders.  Full oracle: width fixed
     64, height = ceil(byte_len / 256) (min 1; four bytes per pixel),
     n_channels 4, bits 8 — all SQL-derivable from the text length."""
-    ensure_query_confs(spark)
-    docs = table(spark, sf_dir, "documents")
-    out = mm_op.decode_media_real(
-        mm_op.attach_png_rgba_payload(docs, "doc_id", "text")
-    )
-    return out.select(
-        "doc_id",
-        "format",
-        "n_channels",
-        "bits_per_sample",
-        "width",
-        "height",
-        (F.col("width") * F.col("height")).cast("long").alias("n_pixels"),
-    ).orderBy("doc_id")
+    return _png_geometry(spark, sf_dir, "png_rgba")
 
 
 def media_png_gray16_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2562,20 +2534,7 @@ def media_png_gray16_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     = ceil(byte_len / 128) (min 1; two bytes per sample, 64 samples
     per row), n_channels 1, bits 16 — all SQL-derivable from the
     text length."""
-    ensure_query_confs(spark)
-    docs = table(spark, sf_dir, "documents")
-    out = mm_op.decode_media_real(
-        mm_op.attach_png_gray16_payload(docs, "doc_id", "text")
-    )
-    return out.select(
-        "doc_id",
-        "format",
-        "n_channels",
-        "bits_per_sample",
-        "width",
-        "height",
-        (F.col("width") * F.col("height")).cast("long").alias("n_pixels"),
-    ).orderBy("doc_id")
+    return _png_geometry(spark, sf_dir, "png_gray16")
 
 
 def image_ahash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2598,11 +2557,9 @@ def image_ahash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash aggregate on the 64-bit key, one equi-join back — identical
     envelope to dedup_exact; no pair surface at all."""
     ensure_query_confs(spark)
-    from real_time_data_analytics_cassandra_spark.catalog import spread
-
     docs = table(spark, sf_dir, "documents")
     sig = mm_op.image_ahash_signatures(
-        mm_op.attach_png_payload(spread(docs), "doc_id", "text")
+        mm_op.attach_payload(docs, "doc_id", "text", "png")
     )
     return mm_op.image_ahash_clusters(sig).orderBy("doc_id")
 
@@ -2613,7 +2570,7 @@ def image_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     of 16 bits cover Hamming <= 3 losslessly) applied to the 64-bit
     average hashes of the REALLY-decoded PNG planes, after exact
     signature collapse (operators/multimodal.py::
-    image_ahash_near_pairs).  One row per linked cluster pair:
+    signature_near_pairs).  One row per linked cluster pair:
     canonical doc_ids, exact Hamming distance, both cluster sizes —
     the dedup decision table a multimodal curation pipeline consumes.
 
@@ -2629,15 +2586,13 @@ def image_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     first; everything past the Arrow signature stage is integer
     equi-joins inside codegen."""
     ensure_query_confs(spark)
-    from real_time_data_analytics_cassandra_spark.catalog import spread
-
     docs = table(spark, sf_dir, "documents")
     sig = mm_op.image_ahash_signatures(
-        mm_op.attach_png_payload(spread(docs), "doc_id", "text")
+        mm_op.attach_payload(docs, "doc_id", "text", "png")
     )
-    return mm_op.image_ahash_near_pairs(sig, max_hamming=3).orderBy(
-        "doc_a", "doc_b"
-    )
+    return mm_op.signature_near_pairs(
+        sig, n_bands=4, max_hamming=3
+    ).orderBy("doc_a", "doc_b")
 
 
 def image_dhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2665,11 +2620,9 @@ def image_dhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass, exact collapse before the band join, integer equi-joins
     over DISTINCT signatures only."""
     ensure_query_confs(spark)
-    from real_time_data_analytics_cassandra_spark.catalog import spread
-
     docs = table(spark, sf_dir, "documents")
     sig = mm_op.image_dhash_signatures(
-        mm_op.attach_png_payload(spread(docs), "doc_id", "text")
+        mm_op.attach_payload(docs, "doc_id", "text", "png")
     )
     return mm_op.signature_near_pairs(
         sig, n_bands=4, max_hamming=3
@@ -2710,14 +2663,23 @@ def incremental_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_a", "doc_b")
 
 
-def build_image_pair_index_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per input, fixture_cache.build_once) the
-    stream-maintained image near-pair
-    state: the documents replay arrives as 4 micro-batches, each
-    folded through incremental_signature_pairs_fold (band-index
-    probes + cluster merge).  Kept separate from the gated query so
-    bench.py can pre-build it — the fold is the write-once half; the
-    measured path is the maintained table's read."""
+def _build_pair_index_fixture(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    signatures,
+    fmt: str,
+    n_bands: int,
+    max_hamming: int,
+) -> str:
+    """Build (once per input, fixture_cache.build_once, keyed
+    ``(name, 1)``) a stream-maintained near-pair state: the documents
+    replay arrives as 4 micro-batches, each wrapped in the ``fmt``
+    container, reduced by the ``signatures`` stage and folded through
+    incremental_signature_pairs_fold (band-index probes + cluster
+    merge) at ``n_bands`` bands.  Kept separate from the gated
+    queries so bench.py can pre-build it — the fold is the write-once
+    half; the measured path is the maintained table's read."""
     from real_time_data_analytics_cassandra_spark.sources.streams import (
         sharded_table_stream,
     )
@@ -2733,8 +2695,8 @@ def build_image_pair_index_fixture(spark: SparkSession, sf_dir: str) -> str:
         def _fold(batch: DataFrame, batch_id: int) -> None:
             if batch.isEmpty():
                 return
-            sig = mm_op.image_ahash_signatures(
-                mm_op.attach_png_payload(batch, "doc_id", "text")
+            sig = signatures(
+                mm_op.attach_payload(batch, "doc_id", "text", fmt)
             )
             mm_op.incremental_signature_pairs_fold(
                 sig,
@@ -2742,14 +2704,20 @@ def build_image_pair_index_fixture(spark: SparkSession, sf_dir: str) -> str:
                 f"{idx}/bands",
                 f"{idx}/pairs",
                 batch_id,
-                n_bands=4,
-                max_hamming=3,
+                n_bands=n_bands,
+                max_hamming=max_hamming,
             )
 
         start_available_now(stream, _fold, f"{idx}/ckpt").awaitTermination()
 
-    return build_once(
-        fixture_path("imgpair_idx", 1, sf_dir, ["documents"]), _build
+    return build_once(fixture_path(name, 1, sf_dir, ["documents"]), _build)
+
+
+def build_image_pair_index_fixture(spark: SparkSession, sf_dir: str) -> str:
+    """The stream-maintained image near-pair state: PNG decode ->
+    aHash signatures at 4 bands of 16 bits (Hamming <= 3)."""
+    return _build_pair_index_fixture(
+        spark, sf_dir, "imgpair_idx", mm_op.image_ahash_signatures, "png", 4, 3
     )
 
 
@@ -2931,7 +2899,6 @@ def image_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTINCT signatures (collapse first — template corpora cannot
     inflate it); each round is one join + one min-regroup against a
     checkpointed leaf."""
-    from real_time_data_analytics_cassandra_spark.catalog import spread
     from real_time_data_analytics_cassandra_spark.operators import (
         graph as graph_op,
     )
@@ -2939,9 +2906,9 @@ def image_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_query_confs(spark)
     docs = table(spark, sf_dir, "documents")
     sig = mm_op.image_ahash_signatures(
-        mm_op.attach_png_payload(spread(docs), "doc_id", "text")
+        mm_op.attach_payload(docs, "doc_id", "text", "png")
     ).localCheckpoint(eager=True)
-    pairs = mm_op.image_ahash_near_pairs(sig, max_hamming=3).select(
+    pairs = mm_op.signature_near_pairs(sig, n_bands=4, max_hamming=3).select(
         "doc_a", "doc_b"
     )
     comp = graph_op.connected_components(pairs, "doc_a", "doc_b")
@@ -2978,41 +2945,16 @@ def incremental_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def build_audio_pair_index_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """build_image_pair_index_fixture's audio twin: 4 replay batches,
-    RIFF decode -> energy fingerprints, folded through the shared
-    band-index/pair/cluster maintenance at 8x8-bit bands."""
-    from real_time_data_analytics_cassandra_spark.sources.streams import (
-        sharded_table_stream,
-    )
-    from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
-        start_available_now,
-    )
-
-    ensure_query_confs(spark)
-
-    def _build(idx: str) -> None:
-        stream = sharded_table_stream(spark, sf_dir, "documents", n_shards=4)
-
-        def _fold(batch: DataFrame, batch_id: int) -> None:
-            if batch.isEmpty():
-                return
-            sig = mm_op.audio_energy_fingerprints(
-                mm_op.attach_wav_payload(batch, "doc_id", "text")
-            )
-            mm_op.incremental_signature_pairs_fold(
-                sig,
-                f"{idx}/clusters",
-                f"{idx}/bands",
-                f"{idx}/pairs",
-                batch_id,
-                n_bands=8,
-                max_hamming=7,
-            )
-
-        start_available_now(stream, _fold, f"{idx}/ckpt").awaitTermination()
-
-    return build_once(
-        fixture_path("audpair_idx", 1, sf_dir, ["documents"]), _build
+    """build_image_pair_index_fixture's audio twin: RIFF decode ->
+    energy fingerprints at 8 bands of 8 bits (Hamming <= 7)."""
+    return _build_pair_index_fixture(
+        spark,
+        sf_dir,
+        "audpair_idx",
+        mm_op.audio_energy_fingerprints,
+        "wav",
+        8,
+        7,
     )
 
 
@@ -3039,11 +2981,9 @@ def audio_fingerprint_near_dup(
     decode pass, exact signature collapse first, integer band
     equi-joins over DISTINCT fingerprints only."""
     ensure_query_confs(spark)
-    from real_time_data_analytics_cassandra_spark.catalog import spread
-
     docs = table(spark, sf_dir, "documents")
     sig = mm_op.audio_energy_fingerprints(
-        mm_op.attach_wav_payload(spread(docs), "doc_id", "text")
+        mm_op.attach_payload(docs, "doc_id", "text", "wav")
     )
     return mm_op.signature_near_pairs(
         sig, n_bands=8, max_hamming=7
@@ -3074,11 +3014,9 @@ def audio_spectral_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse first, integer band equi-joins over DISTINCT
     fingerprints only."""
     ensure_query_confs(spark)
-    from real_time_data_analytics_cassandra_spark.catalog import spread
-
     docs = table(spark, sf_dir, "documents")
     sig = mm_op.audio_spectral_fingerprints(
-        mm_op.attach_wav_payload(spread(docs), "doc_id", "text")
+        mm_op.attach_payload(docs, "doc_id", "text", "wav")
     )
     return mm_op.signature_near_pairs(
         sig, n_bands=8, max_hamming=7
@@ -3104,7 +3042,7 @@ def media_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_query_confs(spark)
     docs = table(spark, sf_dir, "documents")
     out = mm_op.decode_media_real(
-        mm_op.attach_ppm_payload(docs, "doc_id", "text")
+        mm_op.attach_payload(docs, "doc_id", "text", "ppm")
     )
     return out.select(
         "doc_id",
@@ -3708,19 +3646,23 @@ def streaming_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_query_confs(spark)
-    tmp = tempfile.mkdtemp(prefix="rtdac_ckpt_streaming_new_vs_returning_")
-    path, ckpt = f"{tmp}/firsts", f"{tmp}/ckpt"
-    stream = bounded_event_stream(spark, sf_dir).select(
-        "user_id",
-        F.floor(F.unix_timestamp("ts") / 86400).cast("long").alias("day"),
-        F.pmod(F.col("user_id"), F.lit(8)).cast("int").alias("bucket"),
-    )
-    min_foreach_batch(
-        stream, path, ["user_id"], "day", "bucket", ckpt
-    ).awaitTermination()
-    firsts = spark.read.parquet(path).select(
-        "user_id", F.col("day").alias("first_day")
-    )
+    # the first-seen table is read once, eagerly, so the scratch dir
+    # can go when the drain is done
+    with tempfile.TemporaryDirectory(
+        prefix="rtdac_ckpt_streaming_new_vs_returning_",
+        ignore_cleanup_errors=True,
+    ) as tmp:
+        path, ckpt = f"{tmp}/firsts", f"{tmp}/ckpt"
+        stream = bounded_event_stream(spark, sf_dir).select(
+            "user_id",
+            F.floor(F.unix_timestamp("ts") / 86400).cast("long").alias("day"),
+            F.pmod(F.col("user_id"), F.lit(8)).cast("int").alias("bucket"),
+        )
+        min_foreach_batch(
+            stream, path, ["user_id"], "day", "bucket", ckpt
+        ).awaitTermination()
+        firsts = spark.read.parquet(path).localCheckpoint(eager=True)
+    firsts = firsts.select("user_id", F.col("day").alias("first_day"))
     events = table(spark, sf_dir, "events")
     user_days = events.select(
         "user_id",
@@ -5971,42 +5913,47 @@ def streaming_benford_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_query_confs(spark)
-    tmp = tempfile.mkdtemp(prefix="rtdac_ckpt_streaming_benford_drift_")
-    path, ckpt = f"{tmp}/counters", f"{tmp}/ckpt"
+    # the counter table is read once, eagerly, so the scratch dir can
+    # go when the drain is done
+    with tempfile.TemporaryDirectory(
+        prefix="rtdac_ckpt_streaming_benford_drift_", ignore_cleanup_errors=True
+    ) as tmp:
+        path = f"{tmp}/counters"
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        deltas = (
-            batch.select(
-                "event_type",
-                F.expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)")
-                .alias("cents"),
+        def fold(batch: DataFrame, batch_id: int) -> None:
+            if batch.isEmpty():
+                return
+            deltas = (
+                batch.select(
+                    "event_type",
+                    F.expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)")
+                    .alias("cents"),
+                )
+                .filter(F.col("cents") > 0)
+                .select(
+                    "event_type",
+                    F.substring(F.col("cents").cast("string"), 1, 1)
+                    .cast("long")
+                    .alias("digit"),
+                )
+                .groupBy("event_type", "digit")
+                .agg(F.count(F.lit(1)).cast("long").alias("n"))
             )
-            .filter(F.col("cents") > 0)
-            .select(
-                "event_type",
-                F.substring(F.col("cents").cast("string"), 1, 1)
-                .cast("long")
-                .alias("digit"),
+            merge_add(
+                batch.sparkSession,
+                deltas,
+                path,
+                keys=["digit"],
+                count_col="n",
+                partition_col="event_type",
+                batch_id=batch_id,
             )
-            .groupBy("event_type", "digit")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        )
-        merge_add(
-            batch.sparkSession,
-            deltas,
-            path,
-            keys=["digit"],
-            count_col="n",
-            partition_col="event_type",
-            batch_id=batch_id,
-        )
 
-    start_available_now(
-        bounded_event_stream(spark, sf_dir), fold, ckpt
-    ).awaitTermination()
-    counts = spark.read.parquet(path).groupBy("event_type", "digit").agg(
+        start_available_now(
+            bounded_event_stream(spark, sf_dir), fold, f"{tmp}/ckpt"
+        ).awaitTermination()
+        counters = spark.read.parquet(path).localCheckpoint(eager=True)
+    counts = counters.groupBy("event_type", "digit").agg(
         F.sum("n").cast("long").alias("n_obs")
     )
     types = counts.select("event_type").distinct()
@@ -6736,45 +6683,51 @@ def streaming_hourly_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_query_confs(spark)
-    tmp = tempfile.mkdtemp(prefix="rtdac_ckpt_streaming_hourly_cusum_")
-    path, ckpt = f"{tmp}/counters", f"{tmp}/ckpt"
+    # the counter table is read once, eagerly, so the scratch dir can
+    # go when the drain is done
+    with tempfile.TemporaryDirectory(
+        prefix="rtdac_ckpt_streaming_hourly_cusum_", ignore_cleanup_errors=True
+    ) as tmp:
+        path = f"{tmp}/counters"
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        deltas = (
-            batch.groupBy(
-                "event_type",
-                F.floor(F.unix_timestamp("ts") / 3600)
-                .cast("long")
-                .alias("h"),
+        def fold(batch: DataFrame, batch_id: int) -> None:
+            if batch.isEmpty():
+                return
+            deltas = (
+                batch.groupBy(
+                    "event_type",
+                    F.floor(F.unix_timestamp("ts") / 3600)
+                    .cast("long")
+                    .alias("h"),
+                )
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.sum(
+                        (F.col("value").cast("decimal(12,2)") * 100).cast(
+                            "long"
+                        )
+                    ).alias("cents"),
+                )
+                .selectExpr(
+                    "event_type",
+                    "h",
+                    "stack(2, 'n', n, 'cents', cents) AS (metric, val)",
+                )
             )
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    (F.col("value").cast("decimal(12,2)") * 100).cast("long")
-                ).alias("cents"),
+            merge_add(
+                batch.sparkSession,
+                deltas,
+                path,
+                keys=["h", "metric"],
+                count_col="val",
+                partition_col="event_type",
+                batch_id=batch_id,
             )
-            .selectExpr(
-                "event_type",
-                "h",
-                "stack(2, 'n', n, 'cents', cents) AS (metric, val)",
-            )
-        )
-        merge_add(
-            batch.sparkSession,
-            deltas,
-            path,
-            keys=["h", "metric"],
-            count_col="val",
-            partition_col="event_type",
-            batch_id=batch_id,
-        )
 
-    start_available_now(
-        bounded_event_stream(spark, sf_dir), fold, ckpt
-    ).awaitTermination()
-    counters = spark.read.parquet(path)
+        start_available_now(
+            bounded_event_stream(spark, sf_dir), fold, f"{tmp}/ckpt"
+        ).awaitTermination()
+        counters = spark.read.parquet(path).localCheckpoint(eager=True)
     hourly = (
         counters.groupBy("event_type", "h")
         .pivot("metric", ["n", "cents"])
@@ -11167,7 +11120,7 @@ def streaming_image_signature_clusters(
         # not each re-run the Arrow decode
         sig = (
             mm_op.image_ahash_signatures(
-                mm_op.attach_png_payload(batch, "doc_id", "text")
+                mm_op.attach_payload(batch, "doc_id", "text", "png")
             )
             .withColumn("sig_part", F.col("sig_hi").bitwiseAND(F.lit(3)))
             .withColumn("one", F.lit(1).cast("long"))
@@ -11421,16 +11374,22 @@ def streaming_kmv_distinct_per_type(
 
     ensure_query_confs(spark)
     k = 256
-    tmp = tempfile.mkdtemp(prefix="rtdac_ckpt_streaming_kmv_distinct_per_type_")
-    path, ckpt = f"{tmp}/sketch", f"{tmp}/ckpt"
-    stream = bounded_event_stream(spark, sf_dir).select(
-        "event_type", "user_id"
-    )
-    kmv_foreach_batch(stream, path, ["event_type"], "user_id", ckpt, k=k)\
-        .awaitTermination()
+    # the sketch table is read once, eagerly, so the scratch dir can go
+    # when the drain is done
+    with tempfile.TemporaryDirectory(
+        prefix="rtdac_ckpt_streaming_kmv_distinct_per_type_",
+        ignore_cleanup_errors=True,
+    ) as tmp:
+        path, ckpt = f"{tmp}/sketch", f"{tmp}/ckpt"
+        stream = bounded_event_stream(spark, sf_dir).select(
+            "event_type", "user_id"
+        )
+        kmv_foreach_batch(
+            stream, path, ["event_type"], "user_id", ckpt, k=k
+        ).awaitTermination()
+        sketch = spark.read.parquet(path).localCheckpoint(eager=True)
     sk = (
-        spark.read.parquet(path)
-        .groupBy("event_type")
+        sketch.groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.max("h").alias("hm"))
     )
     return sk.select(

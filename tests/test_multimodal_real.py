@@ -28,19 +28,24 @@ def test_wav_samples_round_trip_bit_exactly():
     assert len(payload) == 44 + len(data) + 1  # RIFF pad byte
 
 
-def test_wav_16bit_and_extra_chunks():
-    """A 16-bit stereo WAV with a LIST chunk between fmt and data —
-    the chunk walker must skip unknown chunks and honor block
-    alignment."""
-    pcm = np.arange(-500, 500, dtype="<i2")  # 1000 samples = 500 frames
+def _wav_16bit_stereo(pcm: np.ndarray) -> bytes:
+    """A 16-bit stereo WAV holding ``pcm``, with a LIST chunk between
+    fmt and data."""
     info = b"INFOIART" + struct.pack("<I", 4) + b"spk\x00"
-    body = (
+    return (
         struct.pack("<4sI4s", b"RIFF", 0, b"WAVE")
         + struct.pack("<4sIHHIIHH", b"fmt ", 16, 1, 2, 16000, 64000, 4, 16)
         + struct.pack("<4sI", b"LIST", len(info)) + info
         + struct.pack("<4sI", b"data", pcm.nbytes) + pcm.tobytes()
     )
-    meta, samples = mm.decode_payload(body)
+
+
+def test_wav_16bit_and_extra_chunks():
+    """A 16-bit stereo WAV with a LIST chunk between fmt and data —
+    the chunk walker must skip unknown chunks and honor block
+    alignment."""
+    pcm = np.arange(-500, 500, dtype="<i2")  # 1000 samples = 500 frames
+    meta, samples = mm.decode_payload(_wav_16bit_stereo(pcm))
     assert meta["n_channels"] == 2 and meta["bits_per_sample"] == 16
     assert meta["n_samples"] == 500
     assert np.array_equal(samples, pcm)
@@ -68,6 +73,28 @@ def test_absent_codecs_still_raise():
         mm.decode_payload(body)
 
 
+def test_signature_stages_reject_other_layouts(spark):
+    """The shared signature stage keeps each hash's layout guard: the
+    image hashes refuse a 3-channel PPM plane and the audio
+    fingerprints refuse 16-bit stereo PCM, naming the layout they
+    need instead of hashing interleaved or wide samples."""
+    ppm = spark.createDataFrame(
+        [(1, mm._ppm_container(b"rgb" * 40))], mm.PAYLOAD_SCHEMA
+    )
+    wav16 = spark.createDataFrame(
+        [(1, _wav_16bit_stereo(np.arange(-500, 500, dtype="<i2")))],
+        mm.PAYLOAD_SCHEMA,
+    )
+    for stage, payloads, need in (
+        (mm.image_ahash_signatures, ppm, "needs a single-channel plane"),
+        (mm.image_dhash_signatures, ppm, "needs a single-channel plane"),
+        (mm.audio_energy_fingerprints, wav16, "needs 8-bit mono PCM"),
+        (mm.audio_spectral_fingerprints, wav16, "needs 8-bit mono PCM"),
+    ):
+        with pytest.raises(Exception, match=f"{stage.__name__} {need}"):
+            stage(payloads).collect()
+
+
 @pytest.mark.slow
 def test_real_decode_through_arrow_path(spark):
     """End-to-end through mapInPandas: genuine WAV containers built
@@ -78,7 +105,7 @@ def test_real_decode_through_arrow_path(spark):
     out = {
         r["doc_id"]: r
         for r in mm.decode_media_real(
-            mm.attach_wav_payload(df, "doc_id", "text")
+            mm.attach_payload(df, "doc_id", "text", "wav")
         ).collect()
     }
     assert out[1]["n_samples"] == 11 and out[1]["byte_len"] == 44 + 11 + 1
@@ -235,7 +262,7 @@ def test_png_decode_through_arrow_path(spark):
     out = {
         r["doc_id"]: r
         for r in mm.decode_media_real(
-            mm.attach_png_payload(df, "doc_id", "text")
+            mm.attach_payload(df, "doc_id", "text", "png")
         ).collect()
     }
     assert (out[1]["width"], out[1]["height"]) == (64, 1)
@@ -257,7 +284,7 @@ def test_ppm_container_round_trips_through_arrow_path(spark):
     out = {
         r["doc_id"]: r
         for r in mm.decode_media_real(
-            mm.attach_ppm_payload(df, "doc_id", "text")
+            mm.attach_payload(df, "doc_id", "text", "ppm")
         ).collect()
     }
     assert (out[1]["width"], out[1]["height"]) == (32, 1)
@@ -631,7 +658,7 @@ def test_image_ahash_signature_matches_pure_python(spark):
     sig = {
         r["doc_id"]: (r["sig_hi"], r["sig_lo"])
         for r in mm.image_ahash_signatures(
-            mm.attach_png_payload(df, "doc_id", "text")
+            mm.attach_payload(df, "doc_id", "text", "png")
         ).collect()
     }
     for doc_id, text in rows:
@@ -713,7 +740,7 @@ def test_audio_fingerprint_matches_pure_python(spark):
     sig = {
         r["doc_id"]: (r["sig_hi"], r["sig_lo"])
         for r in mm.audio_energy_fingerprints(
-            mm.attach_wav_payload(df, "doc_id", "text")
+            mm.attach_payload(df, "doc_id", "text", "wav")
         ).collect()
     }
     for doc_id, text in rows:
@@ -810,7 +837,7 @@ def test_image_dhash_signature_matches_pure_python(spark):
     sig = {
         r["doc_id"]: (r["sig_hi"], r["sig_lo"])
         for r in mm.image_dhash_signatures(
-            mm.attach_png_payload(df, "doc_id", "text")
+            mm.attach_payload(df, "doc_id", "text", "png")
         ).collect()
     }
     for doc_id, text in rows:
@@ -885,7 +912,7 @@ def test_dhash_links_brightness_ramp_that_ahash_misses(spark):
     }
     assert dclu[1] == (1, 2) and dclu[2] == (1, 2), dclu
     asig = mm.image_ahash_signatures(payloads)
-    assert mm.image_ahash_near_pairs(asig, max_hamming=3).count() == 0
+    assert mm.signature_near_pairs(asig, n_bands=4, max_hamming=3).count() == 0
     aclu = {
         r["doc_id"]: r["cluster_size"]
         for r in mm.image_ahash_clusters(asig).collect()
@@ -976,7 +1003,7 @@ def test_audio_spectral_matches_shared_recompute(spark):
     sig = {
         r["doc_id"]: (r["sig_hi"], r["sig_lo"])
         for r in mm.audio_spectral_fingerprints(
-            mm.attach_wav_payload(df, "doc_id", "text")
+            mm.attach_payload(df, "doc_id", "text", "wav")
         ).collect()
     }
     for doc_id, text in rows:

@@ -576,7 +576,7 @@ def test_streaming_image_clusters_match_batch_collapse(spark):
 
     docs = table(spark, SF_SMOKE, "documents")
     sig = mm.image_ahash_signatures(
-        mm.attach_png_payload(docs, "doc_id", "text")
+        mm.attach_payload(docs, "doc_id", "text", "png")
     )
     want = {
         (r["sig_hi"], r["sig_lo"]): (r["canon_id"], r["cluster_size"])
@@ -807,14 +807,23 @@ def test_streaming_events_queries_read_nanosecond_ts(spark, tmp_path, monkeypatc
 def test_memory_sink_queries_delete_their_checkpoint(spark, tmp_path, monkeypatch):
     """A memory-sink streaming query keeps its rows in the driver, so
     it deletes its ``rtdac_ckpt_`` checkpoint once the stream has
-    drained — and the rows it returns still match the oracle."""
+    drained; a fold-into-table query reads its scratch table once,
+    eagerly, and deletes the dir too — and the rows each returns
+    still match the oracle."""
     from real_time_data_analytics_cassandra_spark import queries as q
     from tools.oracle_check import duck, first_mismatch
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     con = duck(SF_SMOKE)
     registry, oracle = q.queries(), q.oracle_sql()
-    for name in ("streaming_hourly_type_counts", "streaming_observed_quality"):
+    for name in (
+        "streaming_hourly_type_counts",
+        "streaming_observed_quality",
+        "streaming_new_vs_returning",
+        "streaming_benford_drift",
+        "streaming_hourly_cusum",
+        "streaming_kmv_distinct_per_type",
+    ):
         got = registry[name](spark, SF_SMOKE).toPandas()
         assert len(got) > 0, name
         assert first_mismatch(got, con.sql(oracle[name]).df()) is None, name

@@ -1,22 +1,28 @@
-"""No package module imports a name that its scope never uses.
+"""No package module imports a name that its scope never uses, and
+no package module defines a top-level name that nothing refers to.
 
-There is no linter in the toolchain, so this is the stdlib-``ast``
-form of the unused-import rule: for every import statement in a
-package module (``__init__.py`` files, which re-export, and
-``from __future__`` are skipped), the bound name must be read
-somewhere in the scope that imports it — the module for a top-level
-import, the function for a local one (uses inside nested functions
-and lambdas count)."""
+There is no linter in the toolchain, so these are stdlib-``ast``
+forms of two rules:
+
+- unused imports: for every import statement in a package module
+  (``__init__.py`` files, which re-export, and ``from __future__`` are
+  skipped), the bound name must be read somewhere in the scope that
+  imports it — the module for a top-level import, the function for a
+  local one (uses inside nested functions and lambdas count);
+- unreferred definitions: every module-level function, class or
+  assigned name of a package module (``__init__.py`` and dunders
+  skipped) must be referred to somewhere in the package, ``tools/``,
+  ``tests/``, ``perfbench/``, ``bench.py`` or ``__spark_entry__.py``
+  — as a loaded name, an attribute, an imported name, or an
+  identifier string literal (registry keys, ``getattr`` targets)."""
 
 from __future__ import annotations
 
 import ast
 import pathlib
 
-PKG = (
-    pathlib.Path(__file__).resolve().parent.parent
-    / "real_time_data_analytics_cassandra_spark"
-)
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+PKG = ROOT / "real_time_data_analytics_cassandra_spark"
 
 
 def _unused_imports(tree: ast.AST) -> list[tuple[str, int]]:
@@ -80,3 +86,88 @@ def test_package_modules_use_every_import():
         for nm, ln in _unused_imports(ast.parse(p.read_text()))
     ]
     assert bad == []
+
+
+def _defined_names(tree: ast.Module) -> list[tuple[str, int]]:
+    """Module-level functions, classes and assigned names, dunders
+    skipped."""
+    found: list[tuple[str, int]] = []
+    for node in tree.body:
+        if isinstance(
+            node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        ):
+            found.append((node.name, node.lineno))
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = (
+                node.targets if isinstance(node, ast.Assign) else [node.target]
+            )
+            found.extend(
+                (n.id, node.lineno)
+                for t in targets
+                for n in ast.walk(t)
+                if isinstance(n, ast.Name)
+            )
+    return [
+        (nm, ln)
+        for nm, ln in found
+        if not (nm.startswith("__") and nm.endswith("__"))
+    ]
+
+
+def _referred_names(tree: ast.AST) -> set[str]:
+    """Every name a module refers to: loaded names, attributes,
+    imported names and identifier string literals."""
+    refs: set[str] = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+            refs.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            refs.add(n.attr)
+        elif isinstance(n, ast.alias):
+            refs.update(n.name.split("."))
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            if n.value.isidentifier():
+                refs.add(n.value)
+    return refs
+
+
+def test_unreferred_name_scan_counts_every_reference_kind():
+    defs = ast.parse(
+        "A = 1\n"
+        "B, C = 2, 3\n"
+        "__all__ = []\n"
+        "def f(): return A\n"
+        "def g(): pass\n"
+        "class K: pass\n"
+        "def h(): pass\n"
+        "def unused(): pass\n"
+    )
+    refs = _referred_names(
+        ast.parse("import m.h\nfrom m import g as gg\nm.K\nx = ['B']\nf()\n")
+    ) | _referred_names(defs)
+    assert sorted(nm for nm, _ in _defined_names(defs) if nm not in refs) == [
+        "C",
+        "unused",
+    ]
+
+
+def test_package_modules_define_no_unreferred_names():
+    sources = [
+        *PKG.rglob("*.py"),
+        *(ROOT / "tools").rglob("*.py"),
+        *(ROOT / "tests").rglob("*.py"),
+        *(ROOT / "perfbench").rglob("*.py"),
+        ROOT / "bench.py",
+        ROOT / "__spark_entry__.py",
+    ]
+    refs: set[str] = set()
+    for p in sources:
+        refs |= _referred_names(ast.parse(p.read_text()))
+    dead = [
+        f"{p.relative_to(ROOT)}:{ln}: {nm}"
+        for p in sorted(PKG.rglob("*.py"))
+        if p.name != "__init__.py"
+        for nm, ln in _defined_names(ast.parse(p.read_text()))
+        if nm not in refs
+    ]
+    assert dead == []

@@ -327,7 +327,7 @@ def main() -> None:
     spark_sigs = {
         r["doc_id"]: (r["sig_hi"], r["sig_lo"])
         for r in _mm.audio_spectral_fingerprints(
-            _mm.attach_wav_payload(docs, "doc_id", "text")
+            _mm.attach_payload(docs, "doc_id", "text", "wav")
         ).collect()
     }
     pair_rows = q.audio_spectral_near_dup(spark, SF).collect()
