@@ -25,19 +25,28 @@ components).  With the checkpoint every iteration's plan is O(1) —
 one join + one aggregate over two materialized inputs — so the loop
 is genuinely O(iterations) at any scale.
 
+Each iteration shape runs ONE way: the three PageRank forms differ
+only in the edge weights and teleport flags they hand to
+``_pagerank_rounds``, the one integer rank loop; ``bfs_hops`` and
+``multi_source_bfs_hops`` differ only in the state keys they hand to
+``_frontier_hops``, the one frontier loop.  Edge lists are normalized
+one way each (``_undirected``: least/greatest, ``_bidirected``: both
+orientations), and ``degrees`` is the one (id, deg) frame — the
+co-purchase queries build theirs with it too.
+
 Checkpoint EAGERNESS is per-loop, settled empirically in r12:
 
 - Loops whose every round ends in a DRIVER PROBE (the convergence
   count/isEmpty in connected_components, star contraction, k_core,
-  core_decomposition, bfs_hops) use LAZY checkpoints
+  core_decomposition and ``_frontier_hops``) use LAZY checkpoints
   (``eager=False``): the probe action materializes the round's frame
   anyway, so the eager form's dedicated materialization job per
   round was a pure extra barrier — r12 measured 20-45% wall-clock
   cuts from folding it into the probe.
-- FIXED-ITERATION loops with no mid-loop action (the pagerank
-  family) and frames referenced from MULTIPLE branches of one final
-  job (triangle orientation, CN adjacency, Bellman-Ford's improved
-  set) keep EAGER checkpoints: with a lazy leaf, sibling stages of
+- FIXED-ITERATION loops with no mid-loop action
+  (``_pagerank_rounds``) and frames referenced from MULTIPLE branches
+  of one final job (triangle orientation, CN adjacency, Bellman-Ford's
+  improved set) keep EAGER checkpoints: with a lazy leaf, sibling stages of
   the one big job each recompute the un-materialized subtree before
   the persist catches (r12 measured pagerank_weighted 3.7x SLOWER
   lazy), so the dedicated job is the cheaper trade there.
@@ -56,8 +65,45 @@ that plain DataFrame ops suffice.)
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """(a, b) with a < b: each undirected simple edge ONCE, whatever
+    its input orientation — self-loops and duplicates dropped."""
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("a"),
+            F.greatest(F.col(src), F.col(dst)).alias("b"),
+        )
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _bidirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """(a, b): each undirected simple edge in BOTH orientations —
+    self-loops and duplicates dropped."""
+    return (
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def degrees(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
+    """(id, deg bigint): the number of edge rows each vertex is an
+    endpoint of — its degree when ``edges`` holds every undirected
+    edge once, as :func:`_undirected` output and the co-purchase pair
+    table do.  No dedup here: callers pass an edge SET."""
+    return (
+        edges.select(F.col(src).alias("id"))
+        .unionAll(edges.select(F.col(dst).alias("id")))
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
+    )
 
 
 def connected_components(
@@ -151,50 +197,10 @@ def pagerank(
     truncated per iteration exactly like :func:`connected_components`,
     so plan cost is O(1) per round and the loop is O(iterations).
     """
-    from pyspark.sql import Window
-
-    base = (unit * (damp_den - damp_num)) // damp_den
-    # (u, v, outdeg) in ONE pass: the out-degree is a count window
-    # over the same u-partitioning the distinct already produced — no
-    # separate groupBy + join, and only this frame materializes.
-    w = Window.partitionBy("u")
-    ewd = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .distinct()
-        .withColumn("outdeg", F.count(F.lit(1)).over(w))
-        .localCheckpoint(eager=True)
+    ewd = _unit_weight_edges(edges, src, dst)
+    return _pagerank_rounds(
+        ewd, _every_source(ewd), iterations, unit, damp_num, damp_den
     )
-    ranks = (
-        ewd.select(F.col("u").alias("id"))
-        .distinct()
-        .withColumn("r", F.lit(unit).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    for i in range(iterations):
-        contribs = (
-            ewd.join(ranks, ewd.u == ranks.id)
-            .select(F.col("v").alias("id"), F.expr("r div outdeg").alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            ranks.select("id")
-            .join(contribs, "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(base).cast("long")
-                    + F.expr(f"({damp_num} * coalesce(s, 0L)) div {damp_den}")
-                ).alias("r"),
-            )
-        )
-        # checkpoint every SECOND round (and the last): lineage stays
-        # bounded at <= 2 rounds of joins while paying half the
-        # materialization cost — the checkpoint write, not the plan,
-        # dominates each iteration once lineage is truncated
-        if i % 2 == 1 or i == iterations - 1:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select("id", F.col("r").alias("rank_micro"))
 
 
 def pagerank_weighted(
@@ -237,51 +243,22 @@ def pagerank_weighted(
     materialized once, each iteration is two hash-partitioned passes
     with lineage truncated every second round, plan cost O(1) per
     round."""
-    from pyspark.sql import Window
-
-    base = (unit * (damp_den - damp_num)) // damp_den
     # (u, v, w, wout) in ONE pass: the out-weight is a sum window
     # over the same u-partitioning — no separate groupBy + join
-    win = Window.partitionBy("u")
     ewd = (
         edges.select(
             F.col(src).alias("u"),
             F.col(dst).alias("v"),
             F.col(weight).cast("long").alias("w"),
         )
-        .withColumn("wout", F.sum("w").over(win).cast("long"))
+        .withColumn(
+            "wout", F.sum("w").over(Window.partitionBy("u")).cast("long")
+        )
         .localCheckpoint(eager=True)
     )
-    ranks = (
-        ewd.select(F.col("u").alias("id"))
-        .distinct()
-        .withColumn("r", F.lit(unit).cast("long"))
-        .localCheckpoint(eager=True)
+    return _pagerank_rounds(
+        ewd, _every_source(ewd), iterations, unit, damp_num, damp_den
     )
-    for i in range(iterations):
-        contribs = (
-            ewd.join(ranks, ewd.u == ranks.id)
-            .select(
-                F.col("v").alias("id"),
-                F.expr("(r * w) div wout").alias("c"),
-            )
-            .groupBy("id")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            ranks.select("id")
-            .join(contribs, "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(base).cast("long")
-                    + F.expr(f"({damp_num} * coalesce(s, 0L)) div {damp_den}")
-                ).alias("r"),
-            )
-        )
-        if i % 2 == 1 or i == iterations - 1:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select("id", F.col("r").alias("rank_micro"))
 
 
 def pagerank_personalized(
@@ -319,29 +296,59 @@ def pagerank_personalized(
     rides the checkpointed node frame (one extra tiny column), each
     iteration is the same two hash-partitioned passes with lineage
     truncated every second round, O(1) plan per round."""
-    from pyspark.sql import Window
-
-    base = (unit * (damp_den - damp_num)) // damp_den
-    w = Window.partitionBy("u")
-    ewd = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .distinct()
-        .withColumn("outdeg", F.count(F.lit(1)).over(w))
-        .localCheckpoint(eager=True)
-    )
-    seed_col = seeds.columns[0]
+    ewd = _unit_weight_edges(edges, src, dst)
     seed_ids = seeds.select(
-        F.col(seed_col).alias("id"), F.lit(1).alias("is_seed")
+        F.col(seeds.columns[0]).alias("id"), F.lit(1).alias("is_seed")
     ).distinct()
     nodes = (
         ewd.select(F.col("u").alias("id"))
         .distinct()
         .join(seed_ids, "id", "left")
-        .select(
-            "id", F.coalesce(F.col("is_seed"), F.lit(0)).alias("t")
-        )
+        .select("id", F.coalesce(F.col("is_seed"), F.lit(0)).alias("t"))
+    )
+    return _pagerank_rounds(ewd, nodes, iterations, unit, damp_num, damp_den)
+
+
+def _unit_weight_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """(u, v, w ≡ 1, wout = outdeg) over the DISTINCT directed edges,
+    checkpointed, in ONE pass: the out-degree is a count window over
+    the same u-partitioning the distinct already produced — no
+    separate groupBy + join, and only this frame materializes."""
+    return (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .distinct()
+        .withColumn("w", F.lit(1))
+        .withColumn("wout", F.count(F.lit(1)).over(Window.partitionBy("u")))
         .localCheckpoint(eager=True)
     )
+
+
+def _every_source(ewd: DataFrame) -> DataFrame:
+    """(id, t ≡ 1): every edge source teleports — uniform PageRank's
+    node frame."""
+    return (
+        ewd.select(F.col("u").alias("id")).distinct().withColumn("t", F.lit(1))
+    )
+
+
+def _pagerank_rounds(
+    ewd: DataFrame,
+    nodes: DataFrame,
+    iterations: int,
+    unit: int,
+    damp_num: int,
+    damp_den: int,
+) -> DataFrame:
+    """The integer rank loop every PageRank form runs: ``ewd`` is the
+    checkpointed (u, v, w, wout) edge list and ``nodes`` the (id, t)
+    node frame, t the 0/1 teleport flag.  Initial rank is ``t*unit``;
+    per edge u->v, u contributes ``(r_u * w) div wout_u``; the update
+    is ``t*base + (damp_num * coalesce(s, 0)) div damp_den`` with
+    ``base = (unit*(damp_den-damp_num)) div damp_den``.  w ≡ 1 makes
+    wout the out-degree (:func:`pagerank`), t ≡ 1 makes the teleport
+    uniform — both reductions are exact.  Output: (id, rank_micro)."""
+    base = (unit * (damp_den - damp_num)) // damp_den
+    nodes = nodes.localCheckpoint(eager=True)
     ranks = nodes.select(
         "id", (F.col("t") * F.lit(unit)).cast("long").alias("r")
     )
@@ -349,23 +356,22 @@ def pagerank_personalized(
         contribs = (
             ewd.join(ranks, ewd.u == ranks.id)
             .select(
-                F.col("v").alias("id"), F.expr("r div outdeg").alias("c")
+                F.col("v").alias("id"), F.expr("(r * w) div wout").alias("c")
             )
             .groupBy("id")
             .agg(F.sum("c").alias("s"))
         )
-        ranks = (
-            nodes.join(contribs, "id", "left")
-            .select(
-                "id",
-                (
-                    (F.col("t") * F.lit(base)).cast("long")
-                    + F.expr(
-                        f"({damp_num} * coalesce(s, 0L)) div {damp_den}"
-                    )
-                ).alias("r"),
-            )
+        ranks = nodes.join(contribs, "id", "left").select(
+            "id",
+            (
+                (F.col("t") * F.lit(base)).cast("long")
+                + F.expr(f"({damp_num} * coalesce(s, 0L)) div {damp_den}")
+            ).alias("r"),
         )
+        # checkpoint every SECOND round (and the last): lineage stays
+        # bounded at <= 2 rounds of joins while paying half the
+        # materialization cost — the checkpoint write, not the plan,
+        # dominates each iteration once lineage is truncated
         if i % 2 == 1 or i == iterations - 1:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks.select("id", F.col("r").alias("rank_micro"))
@@ -414,20 +420,8 @@ def triangle_counts(
     is reproducible under any partitioning and ANSI-SQL expressible
     for oracle comparison.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        e.select(F.col("a").alias("id"))
-        .unionAll(e.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    e = _undirected(edges, src, dst)
+    deg = degrees(e, "a", "b")
     # No broadcast hint: ``deg`` has one row per vertex of the INPUT
     # graph, so its size is unbounded.  AQE broadcasts it when its
     # runtime size is under the threshold and shuffles otherwise.
@@ -533,12 +527,7 @@ def common_neighbor_counts(
     capped adjacency on the center key (hash join, AQE-sized; the
     per-center fan is ≤ hub_cap rows), one count aggregate keyed on
     the pair.  No broadcast hints: the adjacency is unbounded."""
-    bidir = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    bidir = _bidirected(edges, src, dst)
     deg = bidir.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     adj = bidir.join(
         deg.filter(F.col("deg") <= hub_cap).select("a"), "a"
@@ -582,34 +571,8 @@ def bfs_hops(
     frontier count (the loop's natural control variable) is the only
     driver-side state.  Cost: O(min(diameter, max_hops)) rounds of
     two frontier-sized hash joins."""
-    bidir = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    src_col = sources.columns[0]
-    frontier = (
-        sources.select(F.col(src_col).alias("id"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    dist = frontier.withColumn("hops", F.lit(0).cast("long"))
-    for k in range(1, max_hops + 1):
-        frontier = (
-            bidir.join(frontier, bidir.a == frontier.id)
-            .select(F.col("b").alias("id"))
-            .distinct()
-            .join(dist.select("id"), "id", "left_anti")
-            .localCheckpoint(eager=False)
-        )
-        if frontier.isEmpty():
-            break
-        dist = dist.unionByName(
-            frontier.withColumn("hops", F.lit(k).cast("long"))
-        ).localCheckpoint(eager=False)
-    return dist
+    frontier = sources.select(F.col(sources.columns[0]).alias("id")).distinct()
+    return _frontier_hops(edges, src, dst, frontier, ["id"], max_hops)
 
 
 def multi_source_bfs_hops(
@@ -638,34 +601,46 @@ def multi_source_bfs_hops(
     ``localCheckpoint`` keeping every round's plan O(1); state is
     bounded by s x |reached ball|, and the frontier shrinks as each
     seed's ball saturates."""
-    bidir = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    seed_col = seeds.columns[0]
     frontier = (
-        seeds.select(F.col(seed_col).alias("seed"))
+        seeds.select(F.col(seeds.columns[0]).alias("seed"))
         .distinct()
         .withColumn("id", F.col("seed"))
-        .localCheckpoint(eager=True)
     )
+    return _frontier_hops(edges, src, dst, frontier, ["seed", "id"], max_hops)
+
+
+def _frontier_hops(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    frontier: DataFrame,
+    keys: list[str],
+    max_hops: int,
+) -> DataFrame:
+    """The synchronous frontier loop both BFS forms run over the
+    undirected graph.  ``frontier`` is the hop-0 state keyed by
+    ``keys`` (the vertex column ``id`` last; earlier keys, such as a
+    seed, ride along unchanged).  Each round joins last round's
+    frontier to the edges, anti-joins the settled (keys) set and stops
+    when nothing new is reached or at ``max_hops``.  Output: keys +
+    hops.  Every round ends in the ``isEmpty`` probe, so checkpoints
+    are lazy."""
+    bidir = _bidirected(edges, src, dst).localCheckpoint(eager=False)
+    frontier = frontier.localCheckpoint(eager=False)
     dist = frontier.withColumn("hops", F.lit(0).cast("long"))
     for k in range(1, max_hops + 1):
         frontier = (
             bidir.join(frontier, bidir.a == frontier.id)
-            .select("seed", F.col("b").alias("id"))
+            .select(*keys[:-1], F.col("b").alias("id"))
             .distinct()
-            .join(dist.select("seed", "id"), ["seed", "id"], "left_anti")
-            .localCheckpoint(eager=True)
+            .join(dist.select(*keys), keys, "left_anti")
+            .localCheckpoint(eager=False)
         )
         if frontier.isEmpty():
             break
         dist = dist.unionByName(
             frontier.withColumn("hops", F.lit(k).cast("long"))
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint(eager=False)
     return dist
 
 
@@ -793,24 +768,10 @@ def k_core(
     PEELS, and the degree check runs once more after the final peel,
     so a graph needing exactly ``max_rounds`` peels converges (an
     unrolled oracle with N rounds pairs with ``max_rounds=N``)."""
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _undirected(edges, src, dst).localCheckpoint(eager=False)
     peels = 0
     while True:
-        deg = (
-            e.select(F.col("a").alias("id"))
-            .unionAll(e.select(F.col("b").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .localCheckpoint(eager=False)
-        )
+        deg = degrees(e, "a", "b").localCheckpoint(eager=False)
         bad = deg.filter(F.col("deg") < k)
         if bad.isEmpty():
             return deg.select("id", F.col("deg").cast("long").alias("core_deg"))
@@ -867,14 +828,7 @@ def core_decomposition(
     every intermediate round reproducible in unrolled SQL, and
     post-fixpoint rounds are no-ops, so an oracle unrolled to AT
     LEAST the convergence depth matches bit-for-bit."""
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    e = _undirected(edges, src, dst)
     dir_e = (
         e.select(F.col("a").alias("id"), F.col("b").alias("nb"))
         .unionAll(e.select(F.col("b").alias("id"), F.col("a").alias("nb")))
@@ -885,8 +839,6 @@ def core_decomposition(
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
         .localCheckpoint(eager=False)
     )
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("id").orderBy(F.desc("c"))
     for _ in range(max_rounds):
         nb = dir_e.join(

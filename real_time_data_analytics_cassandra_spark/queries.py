@@ -50,6 +50,9 @@ from real_time_data_analytics_cassandra_spark.operators import (
     enrich as enrich_op,
 )
 from real_time_data_analytics_cassandra_spark.operators import (
+    graph as graph_op,
+)
+from real_time_data_analytics_cassandra_spark.operators import (
     index as index_op,
 )
 from real_time_data_analytics_cassandra_spark.operators import (
@@ -1749,8 +1752,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation (operators/graph.py) — the iterative-algorithm
     surface, still oracle-gated (DuckDB recursive CTE computes the
     same min-label components)."""
-    from real_time_data_analytics_cassandra_spark.operators import graph as graph_op
-
     ensure_query_confs(spark)
     docs = table(spark, sf_dir, "documents")
     pairs = dedup_op.ngram_jaccard_pairs(
@@ -1767,10 +1768,6 @@ def build_cluster_index_fixture(spark: SparkSession, sf_dir: str) -> str:
     as one append batch.  Kept separate from the gated query so
     bench.py can pre-build it — build + append are the write-once
     half; the measured path is the index read."""
-    from real_time_data_analytics_cassandra_spark.operators import (
-        graph as graph_op,
-    )
-
     ensure_query_confs(spark)
 
     def _build(idx_dir: str) -> None:
@@ -2899,10 +2896,6 @@ def image_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTINCT signatures (collapse first — template corpora cannot
     inflate it); each round is one join + one min-regroup against a
     checkpointed leaf."""
-    from real_time_data_analytics_cassandra_spark.operators import (
-        graph as graph_op,
-    )
-
     ensure_query_confs(spark)
     docs = table(spark, sf_dir, "documents")
     sig = mm_op.image_ahash_signatures(
@@ -5139,10 +5132,6 @@ def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
     the cluster size.  The canonical 'which copy survives' step after
     near-dup detection in a training-data pipeline."""
     from pyspark.sql import Window
-
-    from real_time_data_analytics_cassandra_spark.operators import (
-        graph as graph_op,
-    )
 
     ensure_query_confs(spark)
     docs = table(spark, sf_dir, "documents")
@@ -9383,6 +9372,42 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _copurchase_edges(
+    spark: SparkSession, sf_dir: str, *cols: str
+) -> DataFrame:
+    """The co-purchase graph in BOTH orientations, (u, v, *cols): each
+    undirected pair is stored once (u < v) in the write-once fixture
+    and symmetrized by a union of swapped columns — distinct by
+    construction, the same edge set as the oracles'."""
+    half = _copurchase_pairs(spark, sf_dir).select("u", "v", *cols)
+    return half.unionByName(
+        half.select(F.col("v").alias("u"), F.col("u").alias("v"), *cols)
+    )
+
+
+def _hub(deg: DataFrame) -> DataFrame:
+    """The hub of an (id, deg) frame as a 1-row (id) frame: highest
+    degree, ties to the lowest key — a TakeOrdered(1)."""
+    return deg.orderBy(F.desc("deg"), F.asc("id")).limit(1).select("id")
+
+
+def _seed_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(seed, id, hops) within 8 hops of each of 8 seeds of the repeat
+    co-purchase graph (n_orders >= 2), the seeds an ORDER BY
+    (md5(id), id) LIMIT 8 over its vertices — one multi-source
+    frontier loop (operators/graph.py::multi_source_bfs_hops) that
+    copurchase_harmonic_centrality and copurchase_seed_eccentricity
+    aggregate two ways."""
+    edges = _copurchase_pairs(spark, sf_dir).filter(F.col("n_orders") >= 2)
+    seeds = (
+        graph_op.degrees(edges)
+        .orderBy(F.md5(F.col("id").cast("string")), F.asc("id"))
+        .limit(8)
+        .select("id")
+    )
+    return graph_op.multi_source_bfs_hops(edges, seeds, "u", "v", max_hops=8)
+
+
 def part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket affinity: the top-20 part pairs co-occurring in
     the same order, with support and lift — the association-rule
@@ -9459,17 +9484,9 @@ def part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-partitioned passes over it with lineage truncated per round.
     """
     ensure_query_confs(spark)
-    from real_time_data_analytics_cassandra_spark.operators.graph import pagerank
-
-    # each undirected pair stored ONCE (u < v) in the shared
-    # write-once materialization, then symmetrized by a union of
-    # swapped columns — distinct-by-construction, same edge set as
-    # the oracle
-    half = _copurchase_pairs(spark, sf_dir).select("u", "v")
-    edges = half.unionByName(
-        half.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    ranks = graph_op.pagerank(
+        _copurchase_edges(spark, sf_dir), "u", "v", iterations=4
     )
-    ranks = pagerank(edges, "u", "v", iterations=4)
     return (
         ranks.select(
             F.col("id").alias("p_partkey"),
@@ -9502,20 +9519,13 @@ def part_pagerank_personalized(
     the checkpointed node frame; 4 fixed iterations of two
     hash-partitioned passes, lineage truncated every second round."""
     ensure_query_confs(spark)
-    from real_time_data_analytics_cassandra_spark.operators.graph import (
-        pagerank_personalized,
+    edges = _copurchase_edges(spark, sf_dir)
+    hub = _hub(
+        edges.groupBy(F.col("u").alias("id")).agg(
+            F.count(F.lit(1)).alias("deg")
+        )
     )
-
-    half = _copurchase_pairs(spark, sf_dir).select("u", "v")
-    edges = half.unionByName(
-        half.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    deg = (
-        edges.groupBy(F.col("u").alias("id"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    hub = deg.orderBy(F.desc("deg"), F.asc("id")).limit(1).select("id")
-    ranks = pagerank_personalized(edges, hub, "u", "v", iterations=4)
+    ranks = graph_op.pagerank_personalized(edges, hub, "u", "v", iterations=4)
     return (
         ranks.filter(F.col("rank_micro") > 0)
         .select(
@@ -9547,17 +9557,13 @@ def part_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the checkpointed edge list with lineage truncated per round.
     """
     ensure_query_confs(spark)
-    from real_time_data_analytics_cassandra_spark.operators.graph import (
-        pagerank_weighted,
+    ranks = graph_op.pagerank_weighted(
+        _copurchase_edges(spark, sf_dir, "n_orders"),
+        "u",
+        "v",
+        "n_orders",
+        iterations=4,
     )
-
-    half = _copurchase_pairs(spark, sf_dir).select("u", "v", "n_orders")
-    edges = half.unionByName(
-        half.select(
-            F.col("v").alias("u"), F.col("u").alias("v"), F.col("n_orders")
-        )
-    )
-    ranks = pagerank_weighted(edges, "u", "v", "n_orders", iterations=4)
     return (
         ranks.select(
             F.col("id").alias("p_partkey"),
@@ -9592,12 +9598,8 @@ def part_triangle_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     it when small).  Edges come from the shared write-once pair
     materialization.  Top-100 by TakeOrdered."""
     ensure_query_confs(spark)
-    from real_time_data_analytics_cassandra_spark.operators.graph import (
-        triangle_counts,
-    )
-
     edges = _copurchase_pairs(spark, sf_dir).select("u", "v")
-    tc = triangle_counts(edges, "u", "v")
+    tc = graph_op.triangle_counts(edges, "u", "v")
     return (
         tc.select(
             F.col("id").alias("p_partkey"),
@@ -9629,16 +9631,12 @@ def part_copurchase_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines).  Oracle: recursive-CTE min-label closure over
     the identical edge set."""
     ensure_query_confs(spark)
-    from real_time_data_analytics_cassandra_spark.operators.graph import (
-        connected_components_star,
-    )
-
     edges = (
         _copurchase_pairs(spark, sf_dir)
         .filter(F.col("n_orders") >= 3)
         .select(F.col("u").alias("id_a"), F.col("v").alias("id_b"))
     )
-    comp = connected_components_star(edges)
+    comp = graph_op.connected_components_star(edges)
     return (
         comp.groupBy("component")
         .agg(
@@ -9755,13 +9753,7 @@ def copurchase_degree_histogram(
     Scale shape: one degree aggregate, one 40-arm CASE projection,
     one map-side-combined bucket count."""
     ensure_query_confs(spark)
-    pairs = _copurchase_pairs(spark, sf_dir)
-    deg = (
-        pairs.select(F.col("u").alias("id"))
-        .unionAll(pairs.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
+    deg = graph_op.degrees(_copurchase_pairs(spark, sf_dir))
     return (
         deg.select(F.expr(_LOG2_LADDER_SQL).cast("long").alias("bucket"))
         .groupBy("bucket")
@@ -9784,13 +9776,9 @@ def part_copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     compute the identical fixpoint.  Output: (p_partkey, core_deg),
     degree inside the core."""
     ensure_query_confs(spark)
-    from real_time_data_analytics_cassandra_spark.operators.graph import (
-        k_core,
-    )
-
     edges = _copurchase_pairs(spark, sf_dir).filter(F.col("n_orders") >= 2)
     return (
-        k_core(edges, 2, "u", "v", max_rounds=10)
+        graph_op.k_core(edges, 2, "u", "v", max_rounds=10)
         .select(F.col("id").alias("p_partkey"), "core_deg")
         .orderBy("p_partkey")
     )
@@ -9813,13 +9801,9 @@ def part_copurchase_coreness(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.1), and post-fixpoint rounds are no-ops, so both engines
     land on the identical vector.  Output: (p_partkey, coreness)."""
     ensure_query_confs(spark)
-    from real_time_data_analytics_cassandra_spark.operators.graph import (
-        core_decomposition,
-    )
-
     edges = _copurchase_pairs(spark, sf_dir).filter(F.col("n_orders") >= 2)
     return (
-        core_decomposition(edges, "u", "v", max_rounds=64)
+        graph_op.core_decomposition(edges, "u", "v", max_rounds=64)
         .select(F.col("id").alias("p_partkey"), "coreness")
         .orderBy("p_partkey")
     )
@@ -9855,23 +9839,14 @@ def copurchase_link_prediction(
     Pure integer counts, one deterministic TakeOrdered(20) under the
     total order (cn DESC, u, v)."""
     ensure_query_confs(spark)
-    from real_time_data_analytics_cassandra_spark.operators.graph import (
-        common_neighbor_counts,
-    )
-
     edges = _copurchase_pairs(spark, sf_dir).filter(
         F.col("n_orders") >= 2
     )
-    cn = common_neighbor_counts(
+    cn = graph_op.common_neighbor_counts(
         edges, "u", "v", hub_cap=_LINKPRED_HUB_CAP
     )
     cand = cn.join(edges.select("u", "v"), ["u", "v"], "left_anti")
-    deg = (
-        edges.select(F.col("u").alias("id"))
-        .unionAll(edges.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
+    deg = graph_op.degrees(edges)
     return (
         cand.join(
             deg.select(F.col("id").alias("u"), F.col("deg").alias("deg_u")),
@@ -9917,21 +9892,11 @@ def copurchase_hub_hop_histogram(
     not the reached set; the hub pick is a TakeOrdered(1) over the
     degree aggregate; the histogram is enum-bounded (≤ 14 rows)."""
     ensure_query_confs(spark)
-    from real_time_data_analytics_cassandra_spark.operators.graph import (
-        bfs_hops,
-    )
-
     edges = _copurchase_pairs(spark, sf_dir).filter(
         F.col("n_orders") >= 2
     )
-    deg = (
-        edges.select(F.col("u").alias("id"))
-        .unionAll(edges.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    ).localCheckpoint(eager=False)
-    hub = deg.orderBy(F.desc("deg"), F.asc("id")).limit(1).select("id")
-    dist = bfs_hops(edges, hub, "u", "v", max_hops=12)
+    deg = graph_op.degrees(edges).localCheckpoint(eager=False)
+    dist = graph_op.bfs_hops(edges, _hub(deg), "u", "v", max_hops=12)
     reached = dist.groupBy("hops").agg(
         F.count(F.lit(1)).cast("long").alias("n_parts")
     )
@@ -9971,24 +9936,15 @@ def copurchase_cheapest_paths(
     per-round work tracks the improving wave, never the reached set.
     The hub pick is a TakeOrdered(1) over the degree aggregate."""
     ensure_query_confs(spark)
-    from real_time_data_analytics_cassandra_spark.operators.graph import (
-        bellman_ford_bounded,
-    )
-
     pairs = _copurchase_pairs(spark, sf_dir).filter(
         F.col("n_orders") >= 2
     )
     edges = pairs.select(
         "u", "v", F.expr("1000000 div n_orders").alias("w")
     )
-    deg = (
-        edges.select(F.col("u").alias("id"))
-        .unionAll(edges.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
+    dist = graph_op.bellman_ford_bounded(
+        edges, _hub(graph_op.degrees(edges)), "u", "v", "w", rounds=6
     )
-    hub = deg.orderBy(F.desc("deg"), F.asc("id")).limit(1).select("id")
-    dist = bellman_ford_bounded(edges, hub, "u", "v", "w", rounds=6)
     return dist.orderBy("id")
 
 
@@ -10021,27 +9977,9 @@ def copurchase_harmonic_centrality(
     BFS (O(V·E)); the sample bounds work at s·E while the md5 order
     keeps it reproducible."""
     ensure_query_confs(spark)
-    from real_time_data_analytics_cassandra_spark.operators.graph import (
-        multi_source_bfs_hops,
-    )
-
-    edges = _copurchase_pairs(spark, sf_dir).filter(
-        F.col("n_orders") >= 2
-    )
-    deg = (
-        edges.select(F.col("u").alias("id"))
-        .unionAll(edges.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    seeds = (
-        deg.orderBy(F.md5(F.col("id").cast("string")), F.asc("id"))
-        .limit(8)
-        .select("id")
-    )
-    dist = multi_source_bfs_hops(edges, seeds, "u", "v", max_hops=8)
     return (
-        dist.filter(F.col("hops") >= 1)
+        _seed_hops(spark, sf_dir)
+        .filter(F.col("hops") >= 1)
         .groupBy("id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_seeds"),
@@ -10131,27 +10069,9 @@ def copurchase_seed_eccentricity(
     multi_source_bfs_hops — two (seed, id)-keyed joins per round,
     O(1) plans), then an 8-row aggregate."""
     ensure_query_confs(spark)
-    from real_time_data_analytics_cassandra_spark.operators.graph import (
-        multi_source_bfs_hops,
-    )
-
-    edges = _copurchase_pairs(spark, sf_dir).filter(
-        F.col("n_orders") >= 2
-    )
-    deg = (
-        edges.select(F.col("u").alias("id"))
-        .unionAll(edges.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    seeds = (
-        deg.orderBy(F.md5(F.col("id").cast("string")), F.asc("id"))
-        .limit(8)
-        .select("id")
-    )
-    dist = multi_source_bfs_hops(edges, seeds, "u", "v", max_hops=8)
     return (
-        dist.groupBy("seed")
+        _seed_hops(spark, sf_dir)
+        .groupBy("seed")
         .agg(
             F.max("hops").cast("long").alias("ecc_lb"),
             (F.count(F.lit(1)) - 1).cast("long").alias("n_reached"),

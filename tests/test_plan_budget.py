@@ -224,3 +224,51 @@ def test_exchange_budget_holds(spark, name):
         f"{name}: {n} exchanges > pinned {BUDGETS[name]} — a shuffle "
         f"crept in:\n{explain_str(df)[:2000]}"
     )
+
+
+# query -> max Spark jobs for one forced run (driver-side build plus
+# the noop-sink force), measured at sf0.001.  Job count is
+# deterministic where wall time is not; the graph family pays one
+# barrier per loop round, so a change to a loop's checkpoint cadence
+# shows here first.  Ceilings, like BUDGETS: lower a pin when a change
+# cuts jobs.
+JOB_BUDGETS = {
+    "part_pagerank": 24,
+    "part_pagerank_weighted": 23,
+    "part_pagerank_personalized": 26,
+    "copurchase_hub_hop_histogram": 27,
+    # lazy per-round checkpoints: the isEmpty probe that ends each
+    # BFS round materializes the round's frame, no job of its own
+    "copurchase_harmonic_centrality": 25,
+    "copurchase_seed_eccentricity": 25,
+    "copurchase_cheapest_paths": 40,
+    "part_triangle_clustering": 13,
+    "part_copurchase_kcore": 7,
+    "part_copurchase_coreness": 130,
+    "copurchase_link_prediction": 11,
+    "copurchase_degree_histogram": 6,
+}
+
+
+@pytest.mark.parametrize("name", sorted(JOB_BUDGETS))
+def test_job_budget_holds(spark, name):
+    # the shared pair fixture is built once per input, outside the
+    # counted group, so a cold fixture cache does not count against
+    # whichever query runs first
+    q.build_copurchase_pairs_fixture(spark, SF_SMOKE)
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    group = f"job-budget-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        q.queries()[name](spark, SF_SMOKE).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n <= JOB_BUDGETS[name], (
+        f"{name}: {n} jobs > pinned {JOB_BUDGETS[name]} — a barrier "
+        "crept in"
+    )

@@ -20,11 +20,10 @@ import math
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import force  # noqa: E402
+from bench import force, time_query  # noqa: E402
 from real_time_data_analytics_cassandra_spark import queries as q  # noqa: E402
 from real_time_data_analytics_cassandra_spark.session import get_spark  # noqa: E402
 
@@ -168,12 +167,9 @@ def main() -> None:
         times = {}
         points = list(SFS) + ([(sf1_dir, 1.0)] if name in SF1_QUERIES else [])
         for sf_dir, sf in points:
-            samples = []
-            for _ in range(N):
-                t0 = time.monotonic()
-                force(registry[name](spark, sf_dir))
-                samples.append(time.monotonic() - t0)
-            times[sf] = statistics.median(samples)
+            times[sf] = statistics.median(
+                time_query(spark, registry, name, sf_dir) for _ in range(N)
+            )
         slope = math.log(times[0.1] / times[0.01]) / math.log(10)
         slope1 = (
             math.log(times[1.0] / times[0.1]) / math.log(10)
