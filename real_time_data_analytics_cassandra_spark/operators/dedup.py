@@ -116,6 +116,25 @@ def _permute(h, i: int):
     return (h * F.lit(a) + F.lit(b)) % F.lit(_MINHASH_P)
 
 
+def _band_pairs(
+    banded: DataFrame, id_col: str, a: str = "id_a", b: str = "id_b"
+) -> DataFrame:
+    """Candidate generation of every banded near-dup operator (MinHash,
+    SimHash, SRP, 64-bit media signatures): ``banded`` holds one
+    (``id_col``, band, band_key) row per band of each item; two items
+    sharing any (band, band_key) become one distinct (``a`` < ``b``)
+    pair.  The quadratic surface is sum(bucket^2) per band, never all
+    pairs; each caller verifies the candidates its own way."""
+    left = banded.select(F.col(id_col).alias(a), "band", "band_key")
+    right = banded.select(F.col(id_col).alias(b), "band", "band_key")
+    return (
+        left.join(right, ["band", "band_key"])
+        .filter(F.col(a) < F.col(b))
+        .select(a, b)
+        .distinct()
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -170,16 +189,11 @@ def minhash_lsh_pairs(
         )
         for bi in range(bands)
     ]
-    banded = sig.select(
-        "id", F.posexplode(F.array(*band_keys)).alias("band", "band_key")
-    )
-    left = banded.select(F.col("id").alias("id_a"), "band", "band_key")
-    right = banded.select(F.col("id").alias("id_b"), "band", "band_key")
-    cand = (
-        left.join(right, ["band", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    cand = _band_pairs(
+        sig.select(
+            "id", F.posexplode(F.array(*band_keys)).alias("band", "band_key")
+        ),
+        "id",
     )
     # verify candidates with exact Jaccard over the SAME cached
     # shingle relation (intersection join + per-doc sizes)
@@ -273,15 +287,11 @@ def simhash_near_pairs(
         )
         for ci in range(chunks)
     ]
-    banded = sig.select(
-        "id", F.posexplode(F.array(*chunk_keys)).alias("chunk", "chunk_key")
-    )
-    cand = (
-        banded.select(F.col("id").alias("id_a"), "chunk", "chunk_key")
-        .join(banded.select(F.col("id").alias("id_b"), "chunk", "chunk_key"), ["chunk", "chunk_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    cand = _band_pairs(
+        sig.select(
+            "id", F.posexplode(F.array(*chunk_keys)).alias("band", "band_key")
+        ),
+        "id",
     )
     verified = (
         cand.join(sig.select(F.col("id").alias("id_a"), F.col("simhash").alias("sig_a")), "id_a")

@@ -38,18 +38,22 @@ Checkpoint EAGERNESS is per-loop, settled empirically in r12:
 
 - Loops whose every round ends in a DRIVER PROBE (the convergence
   count/isEmpty in connected_components, star contraction, k_core,
-  core_decomposition and ``_frontier_hops``) use LAZY checkpoints
-  (``eager=False``): the probe action materializes the round's frame
-  anyway, so the eager form's dedicated materialization job per
-  round was a pure extra barrier — r12 measured 20-45% wall-clock
-  cuts from folding it into the probe.
+  core_decomposition, ``_frontier_hops`` and ``bellman_ford_bounded``)
+  use LAZY checkpoints (``eager=False``): the probe action
+  materializes the round's frame anyway, so the eager form's
+  dedicated materialization job per round was a pure extra barrier —
+  r12 measured 20-45% wall-clock cuts from folding it into the probe,
+  and Bellman-Ford's improved set, although it feeds both the next
+  frontier and the settled table, is materialized by its own isEmpty
+  probe before either reads it (copurchase_cheapest_paths: 40 -> 31
+  jobs at sf0.001, 64 -> 50 at sf0.01).
 - FIXED-ITERATION loops with no mid-loop action
   (``_pagerank_rounds``) and frames referenced from MULTIPLE branches
-  of one final job (triangle orientation, CN adjacency, Bellman-Ford's
-  improved set) keep EAGER checkpoints: with a lazy leaf, sibling stages of
-  the one big job each recompute the un-materialized subtree before
-  the persist catches (r12 measured pagerank_weighted 3.7x SLOWER
-  lazy), so the dedicated job is the cheaper trade there.
+  of one final job (triangle orientation, CN adjacency) keep EAGER
+  checkpoints: with a lazy leaf, sibling stages of the one big job
+  each recompute the un-materialized subtree before the persist
+  catches (r12 measured pagerank_weighted 3.7x SLOWER lazy), so the
+  dedicated job is the cheaper trade there.
 - The read-modify-write index operators (``cluster_index_append``)
   keep EAGER checkpoints for correctness, not speed: materialization
   must complete BEFORE the subsequent snapshot upsert rewrites what
@@ -694,14 +698,14 @@ def bellman_ford_bounded(
         # parallel edges keep only the cheapest — same relaxed result
         .groupBy("a", "b")
         .agg(F.min("w").alias("w"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     src_col = sources.columns[0]
     dist = (
         sources.select(F.col(src_col).alias("id"))
         .distinct()
         .withColumn("cost", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     frontier = dist
     for _ in range(rounds):
@@ -725,14 +729,14 @@ def bellman_ford_bounded(
                 | (F.col("cost") < F.col("old_cost"))
             )
             .select("id", "cost")
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
         if improved.isEmpty():
             break
         dist = (
             dist.join(improved.select("id"), "id", "left_anti")
             .unionByName(improved)
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
         frontier = improved
     return dist.select("id", F.col("cost").cast("long").alias("cost"))

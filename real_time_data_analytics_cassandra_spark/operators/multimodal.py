@@ -49,6 +49,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from real_time_data_analytics_cassandra_spark.operators.dedup import _band_pairs
+
 DECODED_META_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -1114,23 +1116,11 @@ def signature_near_pairs(
         F.min("doc_id").alias("canon_id"),
         F.count(F.lit(1)).cast("long").alias("n_docs"),
     )
-    band_exprs = _band_val_exprs(n_bands)
     banded = clusters.select(
         "canon_id",
-        F.posexplode(F.array(*band_exprs)).alias("band", "band_val"),
+        F.posexplode(F.array(*_band_val_exprs(n_bands))).alias("band", "band_key"),
     )
-    cand = (
-        banded.select(F.col("canon_id").alias("doc_a"), "band", "band_val")
-        .join(
-            banded.select(
-                F.col("canon_id").alias("doc_b"), "band", "band_val"
-            ),
-            ["band", "band_val"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    cand = _band_pairs(banded, "canon_id", "doc_a", "doc_b")
     a = clusters.select(
         F.col("canon_id").alias("doc_a"),
         F.col("sig_hi").alias("hi_a"),

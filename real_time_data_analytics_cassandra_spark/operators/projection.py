@@ -7,8 +7,9 @@ clustering / ANN / near-dup over web-scale embedding tables.
 
 Both operators follow the module's training discipline
 (see similarity.kmeans_centroids): anything learned is learned
-DRIVER-SIDE on a stride-sampled, LIMIT-capped subset — a 64x64
-covariance needs a few thousand rows no matter the corpus size — and
+DRIVER-SIDE on the one bounded sample, ``similarity._train_sample``
+— a 64x64 covariance needs a few thousand rows no matter the corpus
+size — and
 the learned projection matrix ships to executors inside an
 Arrow-batched ``mapInPandas`` closure (KBs).  The corpus itself is
 touched exactly once, with no shuffle: projection is a pure map.
@@ -19,29 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _sample_matrix(corpus: DataFrame, id_col: str, vec_col: str, train_cap: int):
-    """Bounded deterministic training sample.
-
-    Sampling is keyed on a HASH of the id, not the raw id modulo a
-    stride — raw-modulo assumes dense contiguous ids and can return
-    far fewer than ``train_cap`` rows on sparse id spaces (every id
-    even, snowflake-style ids, ...).  xxhash64 spreads any id
-    distribution uniformly over the stride classes, stays
-    deterministic, and needs no ordering pass."""
-    import numpy as np
-
-    probe_n = corpus.limit(train_cap * 8).count()
-    if probe_n == 0:
-        raise ValueError("cannot fit a projection on an empty corpus")
-    stride = max(1, probe_n // train_cap)
-    sample = (
-        corpus.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(stride)) == 0)
-        .limit(train_cap)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
-        .toPandas()
-    )
-    return np.stack(sample["v"].to_numpy())
+from real_time_data_analytics_cassandra_spark.operators.similarity import (
+    _train_sample,
+)
 
 
 def pca_fit(
@@ -60,7 +41,7 @@ def pca_fit(
     """
     import numpy as np
 
-    pts = _sample_matrix(corpus, id_col, vec_col, train_cap)
+    _, pts = _train_sample(corpus, id_col, vec_col, train_cap)
     mean = pts.mean(axis=0)
     centered = pts - mean
     cov = (centered.T @ centered) / len(pts)

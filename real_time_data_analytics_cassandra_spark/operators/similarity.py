@@ -3,19 +3,41 @@
 Training-data-pipeline extension (BASELINE.json north star); the
 reference has no vector operations.
 
-Two strategies:
-- ``brute_force_topk``: exact cosine top-k.  The query set is small
-  and explicitly broadcast, so the corpus (the 100 TB side) is scanned
-  once in place with no shuffle of the embeddings themselves; ranking
-  shuffles only (query_id, candidate, sim) tuples.  Baseline + oracle.
-- ``ivf_topk``: IVF-style approximate search.  A deterministic subset
-  of vectors acts as coarse centroids; every vector is assigned to its
-  nearest centroid (broadcast centroid table), queries probe the
-  ``nprobe`` nearest centroid cells only.  This is the scale path: the
-  per-query candidate set shrinks from |corpus| to ~nprobe/|cells|.
+Top-k search, each returning (q_vec_id, n_vec_id, sim, rank) with
+EXACT 6-dp cosines so the variants compare directly:
+- ``brute_force_topk``: exact cosine over the whole corpus, queries
+  broadcast, ranked by the two-phase ``bounded_topk_per_key``.
+  Baseline + oracle.
+- ``ivf_topk``: probe the ``nprobe`` nearest coarse cells (stride
+  centroids, ``kmeans_centroids`` or ``kmeans_refine``).
+- ``pq_topk`` / ``ivfpq_topk``: product-quantized candidate scoring
+  (ADC) over codes, then an exact rerank of the shortlist;
+  ``ann_index_build`` / ``ann_index_append`` / ``ann_index_probe``
+  persist the IVF-PQ model and codes table and probe it.
+- ``mmr_topk``: MMR re-selection of the exact shortlist.
 
-All vector math is JVM-side higher-order functions (functions/
-vectors.py) — no Python UDF in the scan.
+Near-duplicate pairs: exact all-pairs (``cosine_near_dup_pairs``,
+the blocked-GEMM ``cosine_all_pairs_blocked``), cell-pruned
+(``cosine_near_dup_cells``), SRP-LSH banding (``srp_near_dup_pairs``)
+and SemDeDup's greedy per-cell keep (``semantic_dedup``).
+
+Every search splits into candidate generation and exact
+verification, and each part exists once:
+- ``_train_sample``: the bounded training sample (probe count, one
+  empty-corpus error) behind every driver-side fit here and in
+  projection.py;
+- ``_lloyd`` + ``_train_books``: k-means and per-subspace PQ
+  codebooks; ``_centroid_frame`` publishes centroids;
+- ``_collect_vectors``, ``_unit`` and ``_pq_encode``: the driver-side
+  query/centroid matrix, clamped unit rows and the PQ encoder;
+- ``_with_norm`` + ``_exact_cos``: the norm-once exact cosine column;
+  ``_exact_rerank``: the shortlist -> exact cosine -> top-k stage;
+- ``_self_pairs``: the diagonal block of the sequential-fold GEMM;
+- ``dedup._band_pairs``: the band-collision self-join of every
+  banded near-dup operator.
+
+Scans run JVM-side higher-order functions (functions/vectors.py) or
+Arrow-batched numpy; no per-row Python UDF.
 """
 
 from __future__ import annotations
@@ -28,6 +50,7 @@ from real_time_data_analytics_cassandra_spark.functions.vectors import (
     dot_expr,
     norm_expr,
 )
+from real_time_data_analytics_cassandra_spark.operators.dedup import _band_pairs
 from real_time_data_analytics_cassandra_spark.operators.topk import (
     bounded_topk_per_key,
 )
@@ -36,6 +59,48 @@ from real_time_data_analytics_cassandra_spark.operators.topk import (
 # coarse centers must equal kmeans_centroids' output bit for bit, so
 # both read this one default.
 KMEANS_MAX_ITER = 10
+
+
+def _with_norm(df: DataFrame, id_col: str, vec_col: str, side: str, *keep):
+    """(``side``_vec_id, ``side``_emb, ``side``_norm, *keep): the norm
+    is computed ONCE per row before a join — the join replicates every
+    row per partner, so an inline cosine would re-fold both norms per
+    pair (3x the interpreted-lambda work)."""
+    return df.select(
+        F.col(id_col).alias(f"{side}_vec_id"),
+        F.col(vec_col).alias(f"{side}_emb"),
+        norm_expr(vec_col).alias(f"{side}_norm"),
+        *keep,
+    )
+
+
+def _exact_cos(q: str = "q", n: str = "n"):
+    """The exact cosine column of every top-k here: the JVM fold of
+    ``{q}_emb . {n}_emb`` over the precomputed norms, rounded to 6 dp
+    so it can key a deterministic rank."""
+    return F.round(
+        dot_expr(f"{q}_emb", f"{n}_emb") / (F.col(f"{q}_norm") * F.col(f"{n}_norm")),
+        6,
+    )
+
+
+def _unit(mat):
+    """Row-wise unit vectors; the 1e-12 clamp keeps a zero row zero."""
+    import numpy as np
+
+    return mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+
+
+def _collect_vectors(df: DataFrame, id_col: str, vec_col: str):
+    """Driver-side (ids int64, float64 matrix) of a small, explicitly
+    bounded vector frame: a query set or a centroid table."""
+    import numpy as np
+
+    rows = df.select(
+        F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
+    ).collect()
+    ids = np.array([r["__id"] for r in rows], dtype=np.int64)
+    return ids, np.stack([np.asarray(r["__vec"], dtype=np.float64) for r in rows])
 
 
 def brute_force_topk(
@@ -51,26 +116,11 @@ def brute_force_topk(
     used (with the neighbour id) as the ranking key so results are
     deterministic under float summation.
     """
-    q = queries.select(
-        F.col(id_col).alias("q_vec_id"),
-        F.col(vec_col).alias("q_emb"),
-        norm_expr(vec_col).alias("q_norm"),
-    )
-    # norms are computed ONCE per corpus row before the join (the join
-    # replicates every corpus row per query, so an inline cosine would
-    # re-fold both norms per pair — 3x the interpreted-lambda work)
-    c = corpus.select(
-        F.col(id_col).alias("n_vec_id"),
-        F.col(vec_col).alias("n_emb"),
-        norm_expr(vec_col).alias("n_norm"),
-    )
+    q = _with_norm(queries, id_col, vec_col, "q")
     scored = (
-        c.join(F.broadcast(q), F.col("n_vec_id") != F.col("q_vec_id"))
-        .withColumn(
-            "sim",
-            F.round(dot_expr("q_emb", "n_emb") / (F.col("q_norm") * F.col("n_norm")), 6),
-        )
-        .select("q_vec_id", "n_vec_id", "sim")
+        _with_norm(corpus, id_col, vec_col, "n")
+        .join(F.broadcast(q), F.col("n_vec_id") != F.col("q_vec_id"))
+        .select("q_vec_id", "n_vec_id", _exact_cos().alias("sim"))
     )
     # two-phase rank: with a handful of query keys, a single
     # per-query window funnels the full |corpus| x |queries| scored
@@ -134,6 +184,18 @@ def _seq_norms(mat):
     return np.sqrt(acc)
 
 
+def _self_pairs(ids, mat, slack: float):
+    """Pairs (a < b) within one block whose sequential-fold cosine is
+    >= ``slack``: (ids_a, ids_b, raw sims) — the diagonal block of the
+    blocked GEMM and every cell of the cell-pruned form."""
+    import numpy as np
+
+    norms = _seq_norms(mat)
+    sims = _seq_dots(mat, mat) / (norms[:, None] * norms[None, :])
+    ia, ib = np.nonzero((ids[:, None] < ids[None, :]) & (sims >= slack))
+    return ids[ia], ids[ib], sims[ia, ib]
+
+
 def cosine_all_pairs_blocked(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -187,7 +249,6 @@ def cosine_all_pairs_blocked(
         import pandas as pd
 
         i, j = int(key[0]), int(key[1])
-        seq_dots, seq_norms = _seq_dots, _seq_norms
 
         def block(which):
             sub = pdf[pdf["blk"] == which]
@@ -195,19 +256,12 @@ def cosine_all_pairs_blocked(
             return sub["vid"].to_numpy(), mat
 
         if i == j:
-            ids, mat = block(i)
-            sims = seq_dots(mat, mat)
-            norms = seq_norms(mat)
-            sims = sims / (norms[:, None] * norms[None, :])
-            ia, ib = np.nonzero(
-                (ids[:, None] < ids[None, :]) & (sims >= slack)
-            )
-            out_a, out_b, out_s = ids[ia], ids[ib], sims[ia, ib]
+            out_a, out_b, out_s = _self_pairs(*block(i), slack)
         else:
             ids_a, mat_a = block(i)
             ids_b, mat_b = block(j)
-            sims = seq_dots(mat_a, mat_b)
-            sims = sims / (seq_norms(mat_a)[:, None] * seq_norms(mat_b)[None, :])
+            sims = _seq_dots(mat_a, mat_b)
+            sims = sims / (_seq_norms(mat_a)[:, None] * _seq_norms(mat_b)[None, :])
             ia, ib = np.nonzero(sims >= slack)
             lo = np.minimum(ids_a[ia], ids_b[ib])
             hi = np.maximum(ids_a[ia], ids_b[ib])
@@ -247,14 +301,9 @@ def assign_to_centroids(
     GEMM stays vectorized).  Ties on cell similarity break toward the
     lower cell id (lexsort), matching the former window ordering.
     """
-    cent_rows = centroids.select(
-        F.col(id_col).alias("cell"), F.col(vec_col).alias("c_emb")
-    ).collect()
-
     import numpy as np
 
-    cell_ids = np.array([r["cell"] for r in cent_rows], dtype=np.int64)
-    cent_mat = np.stack([np.asarray(r["c_emb"], dtype=np.float64) for r in cent_rows])
+    cell_ids, cent_mat = _collect_vectors(centroids, id_col, vec_col)
     cent_unit = cent_mat / np.linalg.norm(cent_mat, axis=1, keepdims=True)
     n_probe = min(probes, len(cell_ids))
 
@@ -321,15 +370,9 @@ def cosine_near_dup_cells(
         import numpy as np
         import pandas as pd
 
-        ids = pdf["vid"].to_numpy()
         mat = np.stack(pdf["emb"].to_numpy()).astype(np.float64)
-        sims = _seq_dots(mat, mat)
-        norms = _seq_norms(mat)
-        sims = sims / (norms[:, None] * norms[None, :])
-        ia, ib = np.nonzero((ids[:, None] < ids[None, :]) & (sims >= slack))
-        return pd.DataFrame(
-            {"id_a": ids[ia], "id_b": ids[ib], "raw_sim": sims[ia, ib]}
-        )
+        a, b, s = _self_pairs(pdf["vid"].to_numpy(), mat, slack)
+        return pd.DataFrame({"id_a": a, "id_b": b, "raw_sim": s})
 
     raw = (
         assigned.select(
@@ -373,14 +416,19 @@ def kmeans_centroids(
     corpus row — (id, embedding) with synthetic ids — so it drops
     into the same assignment/probe code as stride centroids.
     """
-    centers, _, _ = _kmeans_train(
+    centers, _ = _kmeans_train(
         corpus, id_col, vec_col, n_cells, seed, max_iter, train_cap
     )
-    sc_df = corpus.sparkSession.createDataFrame(
+    return _centroid_frame(corpus.sparkSession, centers, id_col, vec_col)
+
+
+def _centroid_frame(spark, centers, id_col: str, vec_col: str) -> DataFrame:
+    """Centroid rows (id 0..k-1, ``array<float>`` vector) shaped like
+    a corpus row, so they drop into the assignment/probe code."""
+    return spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
         [id_col, "c"],
-    )
-    return sc_df.select(id_col, F.col("c").cast("array<float>").alias(vec_col))
+    ).select(id_col, F.col("c").cast("array<float>").alias(vec_col))
 
 
 def _kmeans_train(
@@ -393,37 +441,35 @@ def _kmeans_train(
     train_cap: int,
 ):
     """The trainer behind :func:`kmeans_centroids`, also returning the
-    density probe count and the training sample so a caller that needs
-    BOTH the coarse centroids and a training matrix (_ivfpq_train)
-    reuses one probe job + one sample fetch instead of paying each
-    twice (r13, guide §1.2/§5 — two fewer driver-side jobs per IVF-PQ
-    query).  Returns (centers ndarray, probe_n, pts)."""
+    training sample so _ivfpq_train trains its residual codebooks on
+    the same fetch (one probe job + one sample collect per IVF-PQ fit,
+    not two of each).  Returns (centers ndarray, pts)."""
+    import numpy as np
+
+    probe_n, pts = _train_sample(corpus, id_col, vec_col, train_cap)
+    if n_cells is None:
+        n_cells = max(2, min(256, probe_n // 50))
+    rs = np.random.RandomState(seed)
+    return _lloyd(pts, n_cells, rs, max_iter), pts
+
+
+def _train_sample(corpus: DataFrame, id_col: str, vec_col: str, train_cap: int):
+    """The bounded deterministic training sample of every driver-side
+    fit (coarse quantizer, PQ codebooks, IVF-PQ residuals, PCA):
+    returns (probe_n, pts).
+
+    The probe counts a LIMIT-bounded prefix wide enough for both the
+    stride (``train_cap * 8``) and the default cell density (256 cells
+    x 50 vectors), so one probe serves both.  Sampling is keyed on a
+    HASH of the id, not the raw id modulo a stride — raw modulo assumes
+    dense contiguous ids and can return far fewer than ``train_cap``
+    rows on sparse id spaces (every id even, snowflake-style ids);
+    xxhash64 spreads any id distribution uniformly across the stride
+    classes while staying deterministic.  Raises on an empty corpus
+    instead of a cryptic numpy stack error."""
     import numpy as np
 
     probe_n = corpus.limit(max(256 * 50, train_cap * 8)).count()
-    if n_cells is None:
-        n_cells = max(2, min(256, probe_n // 50))
-    pts = _train_sample(corpus, id_col, vec_col, train_cap, probe_n)
-
-    rs = np.random.RandomState(seed)
-    centers = _lloyd(pts, n_cells, rs, max_iter)
-    return centers, probe_n, pts
-
-
-def _train_sample(
-    corpus: DataFrame, id_col: str, vec_col: str, train_cap: int, probe_n: int
-):
-    """Bounded deterministic training sample, shared by every
-    driver-side trainer here (coarse quantizer, PQ codebooks, IVF-PQ
-    residuals).  Sampling is keyed on a HASH of the id, not the raw id
-    modulo a stride — raw modulo assumes dense contiguous ids and can
-    return far fewer than ``train_cap`` rows on sparse id spaces
-    (every id even, snowflake-style ids); xxhash64 spreads any id
-    distribution uniformly across the stride classes while staying
-    deterministic.  Raises on an empty corpus instead of a cryptic
-    numpy stack error."""
-    import numpy as np
-
     if probe_n == 0:
         raise ValueError("cannot train on an empty corpus")
     stride = max(1, probe_n // train_cap)
@@ -433,7 +479,7 @@ def _train_sample(
         .select(F.col(vec_col).cast("array<double>").alias("v"))
         .toPandas()
     )
-    return np.stack(sample["v"].to_numpy())
+    return probe_n, np.stack(sample["v"].to_numpy())
 
 
 def _lloyd(pts, k: int, rs, max_iter: int = KMEANS_MAX_ITER):
@@ -462,6 +508,39 @@ def _lloyd(pts, k: int, rs, max_iter: int = KMEANS_MAX_ITER):
     return centers
 
 
+def _train_books(pts, m: int, n_codes: int, seed: int, max_iter: int):
+    """One ``n_codes``-entry ``_lloyd`` codebook per contiguous
+    subspace of ``pts`` (one seeded stream across the subspaces):
+    returns (m, n_codes, d/m) float64."""
+    import numpy as np
+
+    d = pts.shape[1]
+    if d % m:
+        raise ValueError(f"dim {d} not divisible by m={m}")
+    d_sub = d // m
+    rs = np.random.RandomState(seed)
+    return np.stack(
+        [
+            _lloyd(pts[:, s * d_sub : (s + 1) * d_sub].copy(), n_codes, rs, max_iter)
+            for s in range(m)
+        ]
+    )
+
+
+def _pq_encode(x, books, book_sq):
+    """PQ codes of the rows of ``x``: per subspace the argmin of
+    ||x_s - c||^2 = ||c||^2 - 2 x_s.c (``book_sq`` = the (m, n_codes)
+    ||c||^2 table).  Returns (n, m) int64."""
+    import numpy as np
+
+    m, _, d_sub = books.shape
+    codes = np.empty((len(x), m), dtype=np.int64)
+    for s in range(m):
+        dots = x[:, s * d_sub : (s + 1) * d_sub] @ books[s].T
+        codes[:, s] = (book_sq[s][None, :] - 2.0 * dots).argmin(axis=1)
+    return codes
+
+
 def pq_train_codebooks(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -483,23 +562,8 @@ def pq_train_codebooks(
     normalized BEFORE splitting so the sum of per-subspace inner
     products approximates full cosine directly.
     """
-    import numpy as np
-
-    probe_n = corpus.limit(train_cap * 8).count()
-    pts = _train_sample(corpus, id_col, vec_col, train_cap, probe_n)
-    pts = pts / np.maximum(np.linalg.norm(pts, axis=1, keepdims=True), 1e-12)
-    d = pts.shape[1]
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    d_sub = d // m
-    rs = np.random.RandomState(seed)
-    books = np.stack(
-        [
-            _lloyd(pts[:, s * d_sub : (s + 1) * d_sub].copy(), n_codes, rs, max_iter)
-            for s in range(m)
-        ]
-    )
-    return books
+    _, pts = _train_sample(corpus, id_col, vec_col, train_cap)
+    return _train_books(_unit(pts), m, n_codes, seed, max_iter)
 
 
 def pq_topk(
@@ -545,14 +609,9 @@ def pq_topk(
     books = pq_train_codebooks(
         corpus, id_col, vec_col, m=m, n_codes=n_codes, seed=seed, train_cap=train_cap
     )
-    q_rows = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    ).collect()
-    q_ids = np.array([r["qid"] for r in q_rows], dtype=np.int64)
-    q_mat = np.stack([np.asarray(r["qv"], dtype=np.float64) for r in q_rows])
-    q_unit = q_mat / np.maximum(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12)
-    d = q_mat.shape[1]
-    d_sub = d // m
+    q_ids, q_mat = _collect_vectors(queries, id_col, vec_col)
+    q_unit = _unit(q_mat)
+    d_sub = q_mat.shape[1] // m
     # ADC tables: (nq, m, n_codes)
     adc = np.stack(
         [
@@ -561,7 +620,7 @@ def pq_topk(
         ],
         axis=1,
     )
-    book_sq = np.stack([(books[s] ** 2).sum(axis=1) for s in range(m)])  # (m, n_codes)
+    book_sq = (books**2).sum(axis=2)  # (m, n_codes)
     depth = rerank_depth
 
     def score(batches):
@@ -571,13 +630,8 @@ def pq_topk(
             if not len(pdf):
                 continue
             ids = pdf["__id"].to_numpy()
-            mat = np.stack(pdf["__vec"].to_numpy()).astype(np.float64)
-            mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            # encode: per subspace argmin ||x_sub - c||^2 = argmin (||c||^2 - 2 x.c)
-            codes = np.empty((len(ids), m), dtype=np.int64)
-            for s in range(m):
-                dots = mat[:, s * d_sub : (s + 1) * d_sub] @ books[s].T
-                codes[:, s] = (book_sq[s][None, :] - 2.0 * dots).argmin(axis=1)
+            mat = _unit(np.stack(pdf["__vec"].to_numpy()).astype(np.float64))
+            codes = _pq_encode(mat, books, book_sq)
             # ADC gather: approx[q, x] = sum_s adc[q, s, codes[x, s]]
             approx = np.zeros((len(q_ids), len(ids)))
             for s in range(m):
@@ -604,35 +658,39 @@ def pq_topk(
         corpus.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec"))
         .mapInPandas(score, "q_vec_id long, cand_id long, approx_sim double")
     )
-    wq = Window.partitionBy("q_vec_id").orderBy(
-        F.desc("approx_sim"), F.asc("cand_id")
+    return _exact_rerank(
+        cand, [F.desc("approx_sim"), F.asc("cand_id")],
+        corpus, queries, id_col, vec_col, depth, k,
     )
+
+
+def _exact_rerank(
+    cand: DataFrame,
+    approx_order: list,
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    depth: int,
+    k: int,
+) -> DataFrame:
+    """The exact stage of both PQ searches: a global window keeps each
+    query's top-``depth`` (q_vec_id, cand_id) rows of ``cand`` by
+    ``approx_order`` (candidate ids only on the shuffle), the shortlist
+    broadcast-joins back to the corpus for the exact cosine, and the
+    top ``k`` by (sim desc, id) are returned — so returned sims are
+    exact and comparable across every ANN variant."""
+    wq = Window.partitionBy("q_vec_id").orderBy(*approx_order)
     shortlist = (
         cand.withColumn("__rn", F.row_number().over(wq))
         .filter(F.col("__rn") <= depth)
         .select("q_vec_id", "cand_id")
     )
-    qdf = queries.select(
-        F.col(id_col).alias("q_vec_id"),
-        F.col(vec_col).alias("q_emb"),
-        norm_expr(vec_col).alias("q_norm"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("n_vec_id"),
-        F.col(vec_col).alias("n_emb"),
-        norm_expr(vec_col).alias("n_norm"),
-    )
     exact = (
-        c.join(
-            F.broadcast(shortlist), F.col("n_vec_id") == F.col("cand_id")
-        )
-        .join(F.broadcast(qdf), ["q_vec_id"])
-        .withColumn(
-            "sim",
-            F.round(
-                dot_expr("q_emb", "n_emb") / (F.col("q_norm") * F.col("n_norm")), 6
-            ),
-        )
+        _with_norm(corpus, id_col, vec_col, "n")
+        .join(F.broadcast(shortlist), F.col("n_vec_id") == F.col("cand_id"))
+        .join(F.broadcast(_with_norm(queries, id_col, vec_col, "q")), ["q_vec_id"])
+        .withColumn("sim", _exact_cos())
     )
     w = Window.partitionBy("q_vec_id").orderBy(F.desc("sim"), F.asc("n_vec_id"))
     return (
@@ -663,11 +721,7 @@ def ivf_topk(
         centroids = corpus.filter((F.col(id_col) % centroid_stride) == 0)
     assigned = assign_to_centroids(corpus, centroids, id_col, vec_col)
 
-    q = queries.select(
-        F.col(id_col).alias("q_vec_id"),
-        F.col(vec_col).alias("q_emb"),
-        norm_expr(vec_col).alias("q_norm"),
-    )
+    q = _with_norm(queries, id_col, vec_col, "q")
     cent = centroids.select(F.col(id_col).alias("cell"), F.col(vec_col).alias("c_emb"))
     qcells = q.join(F.broadcast(cent)).withColumn("c_sim", cosine_expr("q_emb", "c_emb"))
     wq = Window.partitionBy("q_vec_id").orderBy(F.desc("c_sim"), F.asc("cell"))
@@ -677,18 +731,17 @@ def ivf_topk(
         .select("q_vec_id", "q_emb", "q_norm", "cell")
     )
 
-    cand = assigned.withColumn("v_norm", norm_expr(vec_col)).join(
-        F.broadcast(probes), ["cell"]
-    ).filter(F.col(id_col) != F.col("q_vec_id"))
-    scored = cand.withColumn(
-        "sim",
-        F.round(dot_expr("q_emb", vec_col) / (F.col("q_norm") * F.col("v_norm")), 6),
+    cand = (
+        _with_norm(assigned, id_col, vec_col, "n", "cell")
+        .join(F.broadcast(probes), ["cell"])
+        .filter(F.col("n_vec_id") != F.col("q_vec_id"))
     )
-    w = Window.partitionBy("q_vec_id").orderBy(F.desc("sim"), F.asc(id_col))
+    w = Window.partitionBy("q_vec_id").orderBy(F.desc("sim"), F.asc("n_vec_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        cand.withColumn("sim", _exact_cos())
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("q_vec_id", F.col(id_col).alias("n_vec_id"), "sim", "rank")
+        .select("q_vec_id", "n_vec_id", "sim", "rank")
     )
 
 
@@ -727,8 +780,8 @@ def ivfpq_topk(
        nprobe cells, precomputed driver-side on the tiny centroid
        table) with per-(query, cell) ADC tables of residual-L2
        partial distances — a numpy gather+sum per batch;
-    4. per-cell top-``rerank_depth`` candidates → global window →
-       exact JVM-fold cosine rerank (pq_topk's pattern), so returned
+    4. per-cell top-``rerank_depth`` candidates → ``_exact_rerank``
+       (global window, exact JVM-fold cosine, top k), so returned
        sims are exact and comparable across all ANN variants.
     """
     cent_unit, cell_ids, books = _ivfpq_train(
@@ -755,44 +808,18 @@ def _ivfpq_train(
     (cent_unit (C, d), cell_ids (C,), books (m, n_codes, d/m))."""
     import numpy as np
 
-    centers, _probe_n, _pts = _kmeans_train(
+    centers, pts = _kmeans_train(
         corpus, id_col, vec_col, n_cells, seed, KMEANS_MAX_ITER, train_cap
     )
     cell_ids = np.arange(len(centers), dtype=np.int64)
     # float32 round-trip kept: kmeans_centroids publishes centroids as
     # array<float>, and r12's collect re-widened those f32 values —
     # the PQ model must train against bit-identical cell centers
-    cent = centers.astype(np.float32).astype(np.float64)
-    cent_unit = cent / np.maximum(np.linalg.norm(cent, axis=1, keepdims=True), 1e-12)
-
-    if train_cap * 8 >= 256 * 50:
-        # the residual-codebook sample is the SAME plan _kmeans_train
-        # already fetched (identical probe window -> identical stride
-        # and limit) — reuse it instead of re-running the probe count
-        # + sample collect (r13: two fewer driver jobs per query)
-        pts = _pts
-    else:  # pragma: no cover - callers use train_cap >= 1600
-        probe_n = corpus.limit(train_cap * 8).count()
-        pts = _train_sample(corpus, id_col, vec_col, train_cap, probe_n)
-    pts = pts / np.maximum(np.linalg.norm(pts, axis=1, keepdims=True), 1e-12)
-    d = pts.shape[1]
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    d_sub = d // m
-    near = (pts @ cent_unit.T).argmax(axis=1)
-    residuals = pts - cent_unit[near]
-    rs = np.random.RandomState(seed)
-    books = np.stack(
-        [
-            _lloyd(
-                residuals[:, s * d_sub : (s + 1) * d_sub].copy(),
-                n_codes,
-                rs,
-                KMEANS_MAX_ITER,
-            )
-            for s in range(m)
-        ]
-    )
+    cent_unit = _unit(centers.astype(np.float32).astype(np.float64))
+    # residual codebooks train on the coarse quantizer's own sample
+    pts = _unit(pts)
+    residuals = pts - cent_unit[(pts @ cent_unit.T).argmax(axis=1)]
+    books = _train_books(residuals, m, n_codes, seed, KMEANS_MAX_ITER)
     return cent_unit, cell_ids, books
 
 
@@ -810,9 +837,7 @@ def _ivfpq_encode(
     ships codes, never embeddings."""
     import numpy as np
 
-    m = books.shape[0]
-    d_sub = books.shape[2]
-    book_sq = np.stack([(books[s] ** 2).sum(axis=1) for s in range(m)])
+    book_sq = (books**2).sum(axis=2)
 
     def encode(batches):
         import pandas as pd
@@ -820,16 +845,10 @@ def _ivfpq_encode(
         for pdf in batches:
             if not len(pdf):
                 continue
-            mat = np.stack(pdf["__vec"].to_numpy()).astype(np.float64)
-            mat = mat / np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
-            )
+            mat = _unit(np.stack(pdf["__vec"].to_numpy()).astype(np.float64))
             cells = (mat @ cent_unit.T).argmax(axis=1)
             res = mat - cent_unit[cells]
-            codes = np.empty((len(mat), m), dtype=np.int32)
-            for s in range(m):
-                dots = res[:, s * d_sub : (s + 1) * d_sub] @ books[s].T
-                codes[:, s] = (book_sq[s][None, :] - 2.0 * dots).argmin(axis=1)
+            codes = _pq_encode(res, books, book_sq).astype(np.int32)
             yield pd.DataFrame(
                 {
                     "vid": pdf["__id"].to_numpy(),
@@ -865,12 +884,8 @@ def _ivfpq_probe(
     d_sub = books.shape[2]
 
     # --- query-side: probed cells + per-(query, cell) ADC tables ---
-    q_rows = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    ).collect()
-    q_ids = np.array([r["qid"] for r in q_rows], dtype=np.int64)
-    q_mat = np.stack([np.asarray(r["qv"], dtype=np.float64) for r in q_rows])
-    q_unit = q_mat / np.maximum(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12)
+    q_ids, q_mat = _collect_vectors(queries, id_col, vec_col)
+    q_unit = _unit(q_mat)
     q_cell_sims = q_unit @ cent_unit.T
     order = np.lexsort(
         (np.broadcast_to(cell_ids, q_cell_sims.shape), -q_cell_sims), axis=1
@@ -927,37 +942,9 @@ def _ivfpq_probe(
     cand = encoded.groupBy("cell").applyInPandas(
         score_cell, "q_vec_id long, cand_id long, approx_dist double"
     )
-    wq = Window.partitionBy("q_vec_id").orderBy(F.asc("approx_dist"), F.asc("cand_id"))
-    shortlist = (
-        cand.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= depth)
-        .select("q_vec_id", "cand_id")
-    )
-    qdf = queries.select(
-        F.col(id_col).alias("q_vec_id"),
-        F.col(vec_col).alias("q_emb"),
-        norm_expr(vec_col).alias("q_norm"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("n_vec_id"),
-        F.col(vec_col).alias("n_emb"),
-        norm_expr(vec_col).alias("n_norm"),
-    )
-    exact = (
-        c.join(F.broadcast(shortlist), F.col("n_vec_id") == F.col("cand_id"))
-        .join(F.broadcast(qdf), ["q_vec_id"])
-        .withColumn(
-            "sim",
-            F.round(
-                dot_expr("q_emb", "n_emb") / (F.col("q_norm") * F.col("n_norm")), 6
-            ),
-        )
-    )
-    w = Window.partitionBy("q_vec_id").orderBy(F.desc("sim"), F.asc("n_vec_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_vec_id", "n_vec_id", "sim", "rank")
+    return _exact_rerank(
+        cand, [F.asc("approx_dist"), F.asc("cand_id")],
+        corpus, queries, id_col, vec_col, depth, k,
     )
 
 
@@ -1332,17 +1319,7 @@ def srp_near_dup_pairs(
     sigs = srp_band_signatures(
         corpus, id_col, vec_col, n_bits=n_bits, n_bands=n_bands, seed=seed
     )
-    cands = (
-        sigs.alias("l")
-        .join(
-            sigs.alias("r"),
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-    )
+    cands = _band_pairs(sigs.withColumnRenamed("band_idx", "band"), "id")
     a = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("emb_a"))
     b = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("emb_b"))
     return (
@@ -1396,10 +1373,7 @@ def mmr_topk(
 
         ids = pdf["n_vec_id"].to_numpy()
         rel = pdf["sim"].to_numpy().astype(np.float64)
-        mat = np.stack(pdf["n_emb"].to_numpy()).astype(np.float64)
-        mat = mat / np.maximum(
-            np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
-        )
+        mat = _unit(np.stack(pdf["n_emb"].to_numpy()).astype(np.float64))
         sims = mat @ mat.T
         chosen: list = []
         scores: list = []
@@ -1459,13 +1433,9 @@ def kmeans_refine(
     """
     import numpy as np
 
-    rows = sorted(
-        (r[0], np.array(r[1], dtype=np.float64))
-        for r in centroids.select(id_col, vec_col).collect()
-    )
-    cents = np.stack([v for _, v in rows])
+    ids, cents = _collect_vectors(centroids, id_col, vec_col)
+    cents = cents[np.argsort(ids, kind="stable")]
     k, d = cents.shape
-    spark = corpus.sparkSession
     inertias = []
     for _ in range(iterations):
         c = cents  # close over this iteration's matrix
@@ -1532,8 +1502,4 @@ def kmeans_refine(
         new[nz] = sums[nz] / counts[nz, None]
         cents = new
         inertias.append(inertia)
-    out_df = spark.createDataFrame(
-        [(i, [float(x) for x in cents[i]]) for i in range(k)],
-        [id_col, "c"],
-    ).select(id_col, F.col("c").cast("array<float>").alias(vec_col))
-    return out_df, inertias
+    return _centroid_frame(corpus.sparkSession, cents, id_col, vec_col), inertias

@@ -2191,7 +2191,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mining fleet runs the same predicate through the IVF/PQ
     probes.  Fully oracle-exact."""
     from real_time_data_analytics_cassandra_spark.functions.vectors import (
-        dot_expr,
         norm_expr,
     )
 
@@ -2216,9 +2215,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         "anchor_label",
         "neg_id",
         "neg_label",
-        F.round(
-            dot_expr("a_emb", "n_emb") / (F.col("a_norm") * F.col("n_norm")), 6
-        ).alias("sim"),
+        sim_op._exact_cos("a", "n").alias("sim"),
     )
     # two-phase rank (operators/topk.py::bounded_topk_per_key): 5
     # anchor keys ranking the full scored corpus would funnel every

@@ -230,7 +230,8 @@ def test_exchange_budget_holds(spark, name):
 # the noop-sink force), measured at sf0.001.  Job count is
 # deterministic where wall time is not; the graph family pays one
 # barrier per loop round, so a change to a loop's checkpoint cadence
-# shows here first.  Ceilings, like BUDGETS: lower a pin when a change
+# shows here first, and the vector family's driver-side fits show a
+# new collect or probe here.  Ceilings, like BUDGETS: lower a pin when a change
 # cuts jobs.
 JOB_BUDGETS = {
     "part_pagerank": 24,
@@ -241,12 +242,36 @@ JOB_BUDGETS = {
     # BFS round materializes the round's frame, no job of its own
     "copurchase_harmonic_centrality": 25,
     "copurchase_seed_eccentricity": 25,
-    "copurchase_cheapest_paths": 40,
+    # lazy per-round checkpoints, like the BFS loop: each round's
+    # isEmpty probe materializes the improved set (40 jobs eager)
+    "copurchase_cheapest_paths": 31,
     "part_triangle_clustering": 13,
     "part_copurchase_kcore": 7,
     "part_copurchase_coreness": 130,
     "copurchase_link_prediction": 11,
     "copurchase_degree_histogram": 6,
+    # vector family: driver-side training (probe count + sample
+    # collect), query-matrix and centroid collects, Arrow stages
+    "knn_bruteforce": 5,
+    "hard_negative_mining": 7,
+    "mmr_diverse_neighbors": 8,
+    "ann_ivf": 7,
+    "ann_ivf_kmeans": 10,
+    "ann_ivf_kmeans_refined": 15,
+    "ann_pq": 10,
+    "ann_ivfpq": 11,
+    "embedding_near_dup": 3,
+    "embedding_near_dup_cells": 8,
+    "semantic_dedup": 9,
+    "embedding_pca_norms": 5,
+    # banded near-dup family (dedup._band_pairs candidates)
+    "srp_near_dup": 8,
+    "minhash_lsh": 18,
+    "simhash_near_dup": 11,
+    "image_phash_near_dup": 10,
+    "image_dhash_near_dup": 10,
+    "audio_fingerprint_near_dup": 10,
+    "audio_spectral_near_dup": 10,
 }
 
 

@@ -7,10 +7,12 @@ non-SQL-expressible projection operators.
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from real_time_data_analytics_cassandra_spark.catalog import table
 from real_time_data_analytics_cassandra_spark.operators import projection as proj
+from real_time_data_analytics_cassandra_spark.operators import similarity as sim
 from tests.conftest import SF_SMOKE
 
 
@@ -81,3 +83,13 @@ def test_pca_registry_query_rows_and_determinism(spark):
     assert a == b
     assert len(a) == table(spark, SF_SMOKE, "embeddings").count()
     assert all(v >= 0 for v in a.values())
+
+
+def test_every_trainer_rejects_an_empty_corpus(spark):
+    """PCA, coarse k-means and PQ codebooks all fit on the one bounded
+    sampler (similarity._train_sample), so an empty embeddings frame
+    raises its one error in each instead of a numpy stack error."""
+    empty = table(spark, SF_SMOKE, "embeddings").limit(0)
+    for fit in (proj.pca_fit, sim.kmeans_centroids, sim.pq_train_codebooks):
+        with pytest.raises(ValueError, match="^cannot train on an empty corpus$"):
+            fit(empty)
