@@ -645,12 +645,13 @@ def incremental_near_dups(
     """
     from pyspark.sql import Window
 
-    # one shingle pass per side (r13, guide §1.2 — the
-    # ngram_jaccard_pairs pattern): each side feeds BOTH its size
-    # aggregate and the intersection join; uncached, the explode ran
-    # twice per side (the history side is corpus-scale)
-    sh_new = shingle_sets(new_docs, id_col, text_col, n).cache()
-    sh_hist = shingle_sets(history, id_col, text_col, n).cache()
+    # one shingle pass per side: each side feeds BOTH its size
+    # aggregate and the intersection join; without a materialization
+    # the explode ran twice per side (the history side is corpus-
+    # scale).  Lazy local checkpoints, not caches, so the blocks are
+    # freed with the result (see _first_owner_fold)
+    sh_new = shingle_sets(new_docs, id_col, text_col, n).localCheckpoint(eager=False)
+    sh_hist = shingle_sets(history, id_col, text_col, n).localCheckpoint(eager=False)
     size_new = sh_new.groupBy("id").agg(F.count(F.lit(1)).alias("n_new"))
     size_hist = sh_hist.groupBy("id").agg(F.count(F.lit(1)).alias("n_hist"))
     inter = (

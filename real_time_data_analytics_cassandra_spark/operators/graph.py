@@ -825,7 +825,9 @@ def core_decomposition(
     shuffle on the neighbor key), one PARTITIONED rank window (per
     vertex — never global), one aggregate; ``localCheckpoint``
     truncates lineage so the plan stays O(1) per round.  Convergence
-    is an EXACT join-based no-change check, and round-budget
+    is an EXACT no-change check: labels are integers that never
+    increase, so a round whose label sum equals the previous round's
+    changed no label; one aggregate per round, no join.  Round-budget
     exhaustion RAISES like the other iterative operators here.
 
     Oracle-compatible by construction: the synchronous update makes
@@ -844,6 +846,11 @@ def core_decomposition(
         .localCheckpoint(eager=False)
     )
     w = Window.partitionBy("id").orderBy(F.desc("c"))
+
+    def label_sum(df: DataFrame):
+        return df.agg(F.sum("c")).first()[0]
+
+    total = label_sum(labels)
     for _ in range(max_rounds):
         nb = dir_e.join(
             labels.select(F.col("id").alias("nb"), "c"), "nb"
@@ -854,16 +861,14 @@ def core_decomposition(
             .agg(F.max(F.least(F.col("c"), F.col("rn"))).alias("c"))
             .localCheckpoint(eager=False)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.c") != F.col("o.c"))
-        )
-        if changed.isEmpty():
+        # integer labels never increase, so an unchanged sum is exactly
+        # "no label changed"
+        new_total = label_sum(new_labels)
+        if new_total == total:
             return new_labels.select(
                 "id", F.col("c").cast("long").alias("coreness")
             )
-        labels = new_labels
+        labels, total = new_labels, new_total
     raise RuntimeError(
         f"core_decomposition: h-index iteration did not reach a "
         f"fixpoint within max_rounds={max_rounds}; raise max_rounds "

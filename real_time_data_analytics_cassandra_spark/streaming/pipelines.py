@@ -13,8 +13,10 @@ Spark-first restatement:
 - upsert view -> dropDuplicates within the watermark, or the batch
                  argmax view (operators/latest.py) for accept-late-
                  forever semantics (documented difference, ST3);
-- fan-out     -> one foreachBatch writing N sinks per micro-batch
-                 (ST7), replacing the per-event multi-table batch.
+- fan-out     -> one foreachBatch appending each micro-batch to the
+                 event log in one job (ST7); the five tables the
+                 reference writes per event are answered at read
+                 time by the registry queries behind ``AnalyticsApi``.
 
 Every transformation here is also correct in batch mode — the same
 DataFrame expressions run over a bounded source; tests assert
@@ -385,95 +387,42 @@ def signup_purchase_interval_join(
     )
 
 
-def cache_micro_batch(batch: DataFrame) -> DataFrame:
-    """Persist a micro-batch for the multicast's three writes, as ONE
-    partition when its estimated size (the optimized plan's
-    ``sizeInBytes``) fits in one
-    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` — the size AQE
-    would coalesce the deltas' shuffles down to anyway.  A one-partition
-    child already satisfies the window's and the groupBy's required
-    distribution, so neither plans an Exchange.  A bigger batch (a
-    backlog drained after downtime) keeps its partitioning and plan."""
+def _one_file_if_small(batch: DataFrame) -> DataFrame:
+    """``batch`` as ONE partition when its estimated size (the optimized
+    plan's ``sizeInBytes``) fits in one
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, so a small
+    micro-batch appends one file rather than one per scan split and
+    the event log every read lists stays small.  A bigger batch (a
+    backlog drained after downtime) keeps its partitioning."""
     spark = batch.sparkSession
     advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
     )
     if batch._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() <= advisory:
-        batch = batch.coalesce(1)
-    return batch.persist()
-
-
-def multicast_deltas(batch: DataFrame) -> dict[str, DataFrame]:
-    """The per-batch delta views, keyed by output directory name:
-    the latest row per user (readers union + re-argmax, or a MERGE
-    target applies it as an upsert) and the bucket counts (readers sum
-    by bucket)."""
-    from real_time_data_analytics_cassandra_spark.operators.counts import (
-        multi_granularity_counts,
-    )
-    from real_time_data_analytics_cassandra_spark.operators.latest import latest_per_key
-
-    return {
-        "latest_delta": latest_per_key(batch, ["user_id"], "ts", ["event_id"]),
-        "bucket_count_delta": multi_granularity_counts(batch, "ts"),
-    }
+        return batch.coalesce(1)
+    return batch
 
 
 def multicast_foreach_batch(events: DataFrame, out_dir: str, checkpoint_dir: str):
-    """Fan-out multicast (SURVEY.md ST7): each micro-batch is appended
-    to the raw ``event_log`` (the system of record all views derive
-    from) and to the two :func:`multicast_deltas` — the replacement
-    for the reference's per-event multi-table writes
-    (cassandra_subscriber.py:121-180).
+    """The write path (SURVEY.md ST7): each micro-batch is appended to
+    ``{out_dir}/event_log``, the system of record, as one Spark job.
+    The reference's five tables (cassandra_subscriber.py:121-180) are
+    not written here: they are answered at read time by the registry
+    queries behind ``AnalyticsApi`` over the event log.
 
-    The three appends are separate writes, not one transaction.  The
-    checkpoint commits a batch only after all three succeed, so a
-    batch that fails is re-run and appends again the views it had
-    already written.
-
-    The batch is cached by :func:`cache_micro_batch`, so the source is
-    scanned once and ``numInputRows`` counts each row once; a batch
-    that fits one advisory partition runs as 3 single-task jobs and no
-    shuffle.  Once the ``event_log`` write has filled the cache, the
-    two deltas are written concurrently on a per-batch pool.  Each task
-    is wrapped in ``inheritable_thread_target``: a plain thread's JVM
-    side lacks the stream thread's local properties (query id, batch
-    id, SQL execution id, job tags), so its jobs would not belong to
-    the micro-batch.  Both writes finish before the cache is dropped,
-    and the first error is re-raised so a failed batch is never
-    committed.
+    The checkpoint commits a batch only after its append succeeds, so
+    a batch that fails after appending is re-run and appends again
+    (at-least-once into the log; a clean restart is exactly-once).  The
+    source is scanned once per batch, so ``numInputRows`` counts each
+    row once.
 
     Returns the started StreamingQuery (caller awaits termination).
     """
-    from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
+    def append(batch: DataFrame, batch_id: int) -> None:
+        _one_file_if_small(batch).write.mode("append").parquet(f"{out_dir}/event_log")
 
-    def append(df: DataFrame, path: str) -> None:
-        df.write.mode("append").parquet(path)
-
-    def write_views(batch: DataFrame, batch_id: int) -> None:
-        cached = cache_micro_batch(batch)
-        try:
-            append(cached, f"{out_dir}/event_log")
-            deltas = multicast_deltas(cached)
-            with ThreadPoolExecutor(len(deltas)) as pool:
-                # one wrapper per task: each clones the local properties
-                # for itself, so the two SQL executions do not share one
-                futures = [
-                    pool.submit(
-                        inheritable_thread_target(cached.sparkSession)(append),
-                        df,
-                        f"{out_dir}/{name}",
-                    )
-                    for name, df in deltas.items()
-                ]
-            for fut in futures:
-                fut.result()
-        finally:
-            cached.unpersist()
-
-    return start_available_now(events, write_views, checkpoint_dir)
+    return start_available_now(events, append, checkpoint_dir)
 
 
 def user_stats_stream_tws(events: DataFrame) -> DataFrame:

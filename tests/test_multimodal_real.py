@@ -78,13 +78,15 @@ def test_signature_stages_reject_other_layouts(spark):
     image hashes refuse a 3-channel PPM plane and the audio
     fingerprints refuse 16-bit stereo PCM, naming the layout they
     need instead of hashing interleaved or wide samples."""
+    # one partition each: exactly one task runs and raises, so no
+    # sibling task's cancellation error is reported ahead of the guard's
     ppm = spark.createDataFrame(
         [(1, mm._ppm_container(b"rgb" * 40))], mm.PAYLOAD_SCHEMA
-    )
+    ).coalesce(1)
     wav16 = spark.createDataFrame(
         [(1, _wav_16bit_stereo(np.arange(-500, 500, dtype="<i2")))],
         mm.PAYLOAD_SCHEMA,
-    )
+    ).coalesce(1)
     for stage, payloads, need in (
         (mm.image_ahash_signatures, ppm, "needs a single-channel plane"),
         (mm.image_dhash_signatures, ppm, "needs a single-channel plane"),

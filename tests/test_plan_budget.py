@@ -247,7 +247,8 @@ JOB_BUDGETS = {
     "copurchase_cheapest_paths": 31,
     "part_triangle_clustering": 13,
     "part_copurchase_kcore": 7,
-    "part_copurchase_coreness": 130,
+    # one label-sum aggregate probes each h-index round
+    "part_copurchase_coreness": 92,
     "copurchase_link_prediction": 11,
     "copurchase_degree_histogram": 6,
     # vector family: driver-side training (probe count + sample
@@ -297,3 +298,15 @@ def test_job_budget_holds(spark, name):
         f"{name}: {n} jobs > pinned {JOB_BUDGETS[name]} — a barrier "
         "crept in"
     )
+
+
+def test_incremental_ingest_dedup_leaves_no_cached_relation(spark):
+    """``dedup.incremental_near_dups`` materializes each side's shingle
+    pass as a lazy local checkpoint, not a cached relation, so a forced
+    run leaves nothing in the session's CacheManager (the checkpoint
+    blocks go with the result)."""
+    spark.catalog.clearCache()
+    q.queries()["incremental_ingest_dedup"](spark, SF_SMOKE).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -332,18 +332,10 @@ def test_multicast_restart_is_exactly_once(spark):
 
 
 def test_multicast_foreach_batch_writes_all_views(spark):
-    """Over several micro-batches the views are exact: the event log is
-    the events multiset, the latest row per user re-taken over the
-    deltas is the batch latest_per_key, and the bucket deltas sum to
-    the batch counts.  Checked on both sides of the one-partition rule
-    (cache_micro_batch): at the default advisory size every batch is
-    cached as one partition, at 1 byte none is."""
-    from pyspark.sql import functions as F
-
-    from real_time_data_analytics_cassandra_spark.operators.counts import (
-        multi_granularity_counts,
-    )
-
+    """Over several micro-batches the event log is exactly the events
+    multiset and every row is counted once by ``numInputRows``.
+    Checked on both sides of the one-file rule: at the default advisory
+    size every batch is coalesced to one partition, at 1 byte none is."""
     events = table(spark, SF_SMOKE, "events")
     n_events = events.count()
     key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
@@ -361,60 +353,35 @@ def test_multicast_foreach_batch_writes_all_views(spark):
 
                 log = spark.read.parquet(f"{out}/event_log")
                 assert _rows(log.select(*events.columns)) == _rows(events)
-
-                deltas = spark.read.parquet(f"{out}/latest_delta")
-                latest = latest_per_key(deltas, ["user_id"], "ts", ["event_id"])
-                want = latest_per_key(events, ["user_id"], "ts", ["event_id"])
-                assert _rows(latest.select(*events.columns)) == _rows(want)
-
-                buckets = (
-                    spark.read.parquet(f"{out}/bucket_count_delta")
-                    .groupBy("time_bucket")
-                    .agg(F.sum("product_count").alias("product_count"))
-                )
-                assert _rows(buckets) == _rows(multi_granularity_counts(events, "ts"))
         finally:
             spark.conf.set(key, saved)
 
 
-def test_multicast_small_batch_plans_no_exchange(spark):
-    """A micro-batch that fits one advisory partition is cached as one
-    partition, so neither delta plans an Exchange; the source is still
-    scanned once, so the multicast's numInputRows is the rows landed."""
-    from real_time_data_analytics_cassandra_spark.plans.checks import operator_count
-    from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
-        cache_micro_batch,
-        multicast_deltas,
-    )
+def test_multicast_small_batch_is_one_job_one_file(spark):
+    """A drain whose batch fits one advisory partition appends exactly
+    one parquet file to the event log in exactly one Spark job, and its
+    ``numInputRows`` is the rows landed — on a second drain too."""
+    import os
 
-    exchanges = []
-
-    def plan_deltas(batch, batch_id):
-        cached = cache_micro_batch(batch)
-        try:
-            exchanges.extend(
-                operator_count(df, "Exchange") for df in multicast_deltas(cached).values()
-            )
-        finally:
-            cached.unpersist()
-
+    sc = spark.sparkContext
+    events = table(spark, SF_SMOKE, "events")
+    n_events = events.count()
     with tempfile.TemporaryDirectory() as base:
-        src = f"{base}/landing"
-        events = table(spark, SF_SMOKE, "events")
-        events.write.parquet(src)
-        stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-        (
-            stream.writeStream.foreachBatch(plan_deltas)
-            .option("checkpointLocation", f"{base}/plan_ckpt")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        assert exchanges == [0, 0]
-
-        query = multicast_foreach_batch(stream, f"{base}/out", f"{base}/ckpt")
-        query.awaitTermination()
-        assert query.lastProgress.numInputRows == events.count()
+        src, log = f"{base}/landing", f"{base}/out/event_log"
+        for drain in range(2):
+            events.write.mode("append").parquet(src)
+            stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+            files = set(os.listdir(log)) if drain else set()
+            query = multicast_foreach_batch(stream, f"{base}/out", f"{base}/ckpt")
+            query.awaitTermination()
+            # the stream thread runs every micro-batch job in the job
+            # group of its run id; wait until the status store has them
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs = sc.statusTracker().getJobIdsForGroup(str(query.runId))
+            added = {f for f in os.listdir(log) if f.startswith("part-")} - files
+            assert len(jobs) == 1, (drain, jobs)
+            assert len(added) == 1 and added.pop().endswith(".parquet"), (drain, added)
+            assert query.lastProgress.numInputRows == n_events
 
 
 def _has_protobuf() -> bool:
