@@ -82,7 +82,7 @@ def ngram_jaccard_pairs(
     docs (vs a full cross join); for web-scale corpora prefer
     ``minhash_lsh_pairs`` which bounds it further via banding.
     """
-    sh = shingle_sets(df, id_col, text_col, n).cache()
+    sh = shingle_sets(df, id_col, text_col, n).localCheckpoint(eager=False)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
     a = sh.select(F.col("id").alias("id_a"), "shingle")
     b = sh.select(F.col("id").alias("id_b"), "shingle")
@@ -162,11 +162,11 @@ def minhash_lsh_pairs(
     # you throw away": the previous shape ran shingle_sets twice — a
     # second full corpus scan + regex split + explode — purely to
     # re-derive the identical (id, shingle) relation for the verify
-    # joins).  The cached relation materializes during the signature
-    # aggregate and the verify side reads it back; at 100 TB the cache
-    # spills to local disk (MEMORY_AND_DISK) which is still strictly
-    # cheaper than re-reading and re-shingling the corpus.
-    sh = shingle_sets(spread(df), id_col, text_col, n).cache()
+    # joins).  The lazily checkpointed relation materializes during the
+    # signature aggregate and the verify side reads it back; at 100 TB
+    # its blocks spill to local disk (MEMORY_AND_DISK), which is still
+    # strictly cheaper than re-reading and re-shingling the corpus.
+    sh = shingle_sets(spread(df), id_col, text_col, n).localCheckpoint(eager=False)
     hashed = sh.withColumn(
         "h",
         F.conv(F.substring(F.md5(F.col("shingle")), 1, 8), 16, 10).cast(
@@ -195,7 +195,7 @@ def minhash_lsh_pairs(
         ),
         "id",
     )
-    # verify candidates with exact Jaccard over the SAME cached
+    # verify candidates with exact Jaccard over the SAME checkpointed
     # shingle relation (intersection join + per-doc sizes)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
     inter = (
@@ -278,7 +278,7 @@ def simhash_near_pairs(
     """
     assert bits % chunks == 0
     w = bits // chunks
-    sig = simhash_bits(df, id_col, text_col, bits).cache()
+    sig = simhash_bits(df, id_col, text_col, bits).localCheckpoint(eager=False)
     # all chunk keys in one pass (see minhash_lsh_pairs)
     chunk_keys = [
         F.concat_ws(
@@ -960,7 +960,7 @@ def _ppjoin_candidates(
     ``threshold``; ``positional=False`` keeps only the prefix+length
     rules (exists for the candidate-volume regression test)."""
     return _ppjoin_candidates_ranked(
-        _ranked_shingle_sets(sh).cache(), threshold, positional
+        _ranked_shingle_sets(sh).localCheckpoint(eager=False), threshold, positional
     )
 
 
@@ -1075,7 +1075,7 @@ def ngram_jaccard_prefix_pairs(
     flight, not candidate-count x shingles.
     """
     sh = shingle_sets(df, id_col, text_col, n)
-    ranked = _ranked_shingle_sets(sh).cache()
+    ranked = _ranked_shingle_sets(sh).localCheckpoint(eager=False)
     cand = _ppjoin_candidates_ranked(ranked, threshold)
     return (
         cand.join(
@@ -1258,10 +1258,10 @@ def _containment_candidates(
     positional: bool = True,
 ) -> DataFrame:
     """Candidate pairs from a raw (id, shingle) relation — test /
-    standalone entry; ``containment_prefix_pairs`` reuses its cached
-    ranked relation instead."""
+    standalone entry; ``containment_prefix_pairs`` reuses its
+    checkpointed ranked relation instead."""
     return _containment_candidates_ranked(
-        _ranked_shingle_sets(sh).cache(), threshold, positional
+        _ranked_shingle_sets(sh).localCheckpoint(eager=False), threshold, positional
     )
 
 
@@ -1282,7 +1282,7 @@ def containment_prefix_pairs(
     as one array_intersect per candidate row instead of re-counting
     through the exploded-shingle shuffle."""
     sh = shingle_sets(df, id_col, text_col, n)
-    ranked = _ranked_shingle_sets(sh).cache()
+    ranked = _ranked_shingle_sets(sh).localCheckpoint(eager=False)
     cand = _containment_candidates_ranked(ranked, threshold)
     # normalize the (small, large) role pair back to the id-ordered
     # output contract before verification

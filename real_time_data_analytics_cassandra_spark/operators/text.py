@@ -149,7 +149,7 @@ def tfidf_top_terms(
     tf = (
         tok.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .cache()
+        .localCheckpoint(eager=False)
     )
     docfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -210,7 +210,7 @@ def bm25_topk(
     dl = df.select(
         F.col(id_col).alias("doc_id"),
         F.size(tokens(F.col(text_col))).cast("bigint").alias("dl"),
-    ).cache()
+    ).localCheckpoint(eager=False)
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
     )
@@ -222,7 +222,7 @@ def bm25_topk(
         tok.filter(F.col("term").isin(*query_terms))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .cache()
+        .localCheckpoint(eager=False)
     )
     dfreq = m.groupBy("term").agg(F.count(F.lit(1)).alias("dfreq"))
     return bm25_rank(m, dl, dfreq, stats, k1=k1, b=b, top_k=top_k)
@@ -704,16 +704,16 @@ def bm25_per_query_topk(
         F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("term"),
     )
     # ONE corpus tokenize per relation (guide §1.2, the minhash shared-
-    # pass pattern): without the caches this query's plan re-derived
+    # pass pattern): without the checkpoints this query's plan re-derived
     # the corpus tokenize ~5x — dl for the stats broadcast and again
     # for the contrib join, the postings explode for dfreq and again
     # for contrib.  dl is narrow (id, bigint) and m is pruned to the
-    # query terms before it ever aggregates, so both cached relations
+    # query terms before it ever aggregates, so both checkpointed relations
     # are small fractions of the corpus bytes.
     dl = df.select(
         F.col(id_col).alias("doc_id"),
         F.size(tokens(F.col(text_col))).cast("bigint").alias("dl"),
-    ).cache()
+    ).localCheckpoint(eager=False)
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
     )
@@ -725,7 +725,7 @@ def bm25_per_query_topk(
         tok.join(F.broadcast(qterms.select("term").distinct()), "term")
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .cache()
+        .localCheckpoint(eager=False)
     )
     dfreq = m.groupBy("term").agg(F.count(F.lit(1)).alias("dfreq"))
     contrib = (

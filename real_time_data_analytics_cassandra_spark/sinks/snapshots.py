@@ -35,7 +35,9 @@ from __future__ import annotations
 
 import json
 import os
+import time
 import uuid
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -60,6 +62,19 @@ def snapshot_versions(path: str) -> list[int]:
         if name.startswith("v") and name.endswith(".json"):
             out.append(int(name[1:-5]))
     return sorted(out)
+
+
+def _resolve(path: str, version: int | None = None) -> tuple[int, dict]:
+    """``(version, manifest)`` of ``version`` (default: the latest
+    committed); raises ``ValueError`` for an empty table or a version
+    that is not committed."""
+    versions = snapshot_versions(path)
+    if not versions:
+        raise ValueError(f"no committed snapshots at {path}")
+    v = versions[-1] if version is None else version
+    if v not in versions:
+        raise ValueError(f"version {v} not in {versions}")
+    return v, _load_manifest(path, v)
 
 
 def _load_manifest(path: str, version: int) -> dict:
@@ -97,6 +112,11 @@ def _rebase(manifest: dict, fn) -> dict:
     return m
 
 
+def _local_path(uri: str) -> str:
+    """The filesystem path of a data-file URI as Spark reports it."""
+    return urlparse(uri).path if uri.startswith("file:") else uri
+
+
 def _file_column_stats(files: list, cols: tuple) -> dict:
     """Per-file min/max for ``cols`` from parquet FOOTERS (metadata
     only — no data pages are read; the writer already computed these
@@ -117,8 +137,7 @@ def _file_column_stats(files: list, cols: tuple) -> dict:
 
     out = {}
     for f in files:
-        local = f[len("file:") :] if f.startswith("file:") else f
-        meta = pq.ParquetFile(local).metadata
+        meta = pq.ParquetFile(_local_path(f)).metadata
         idx = {meta.schema.column(i).name: i for i in range(meta.num_columns)}
         per = {}
         for c in cols:
@@ -165,11 +184,7 @@ def write_snapshot(
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unknown snapshot mode: {mode}")
-    new_files = _stage(df, path, "snap")
-    stats = _file_column_stats(new_files, tuple(stats_cols)) if stats_cols else {}
-    return _commit_files(
-        df.sparkSession, path, new_files, df.schema.json(), mode, file_stats=stats
-    )
+    return _commit(path, mode, _stage(df, path, "snap"), df.schema.json(), stats_cols)
 
 
 def _stage(df: DataFrame, path: str, prefix: str) -> list:
@@ -189,13 +204,7 @@ def read_snapshot(
     version's files — no directory walking, no exposure to
     uncommitted data, byte-stable for as long as the version is
     retained."""
-    versions = snapshot_versions(path)
-    if not versions:
-        raise ValueError(f"no committed snapshots at {path}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in {versions}")
-    manifest = _load_manifest(path, v)
+    _, manifest = _resolve(path, version)
     return _read_manifest_files(spark, manifest, manifest["files"])
 
 
@@ -265,28 +274,8 @@ def delete_from_snapshot(
 
     One equality key column per table (mixed-key tombstones would
     need per-delete join plans); a conflicting key raises."""
-    versions = snapshot_versions(path)
-    if not versions:
-        raise ValueError(f"no committed snapshots at {path}")
-    manifest = _load_manifest(path, versions[-1])
-    existing = manifest.get("delete_files", [])
-    if existing and existing[0]["key"] != key_col:
-        raise ValueError(
-            f"table already carries deletes on {existing[0]['key']!r}; "
-            f"cannot mix with {key_col!r}"
-        )
-    tomb = _stage(keys_df.select(key_col).distinct(), path, "del")
-    version = versions[-1] + 1
-    new_manifest = {
-        **manifest,
-        "version": version,
-        "parent": versions[-1],
-        "op": "delete",
-        "delete_files": existing
-        + [{"paths": tomb, "version": version, "key": key_col}],
-    }
-    _atomic_write_manifest(path, version, new_manifest)
-    return version
+    _resolve(path)  # an empty table has nothing to delete: raises
+    return _commit(path, "delete", tombstone=(keys_df, key_col))
 
 
 def upsert_into_snapshot(
@@ -306,38 +295,18 @@ def upsert_into_snapshot(
     tables without reading or rewriting a single existing file — the
     complement of `sinks/merge.py::merge_upsert` (copy-on-write,
     partition-pruned) for when even the touched partitions are too
-    big to rewrite per batch."""
-    versions = snapshot_versions(path)
-    if not versions:
+    big to rewrite per batch.  On an empty table the upsert is the
+    first append: there is nothing older to shadow."""
+    if not snapshot_versions(path):
         return write_snapshot(df, path, mode="append", stats_cols=stats_cols)
-    manifest = _load_manifest(path, versions[-1])
-    existing = manifest.get("delete_files", [])
-    if existing and existing[0]["key"] != key_col:
-        raise ValueError(
-            f"table already carries deletes on {existing[0]['key']!r}; "
-            f"cannot mix with {key_col!r}"
-        )
-    tomb = _stage(df.select(key_col).distinct(), path, "del")
-    data = _stage(df, path, "snap")
-    stats = _file_column_stats(data, tuple(stats_cols)) if stats_cols else {}
-    version = versions[-1] + 1
-    added_at = dict(manifest.get("file_added_at", {}))
-    for f in data:
-        added_at[f] = version
-    new_manifest = {
-        **manifest,
-        "version": version,
-        "parent": versions[-1],
-        "op": "upsert",
-        "schema": _merge_schema_json(manifest["schema"], df.schema.json()),
-        "files": manifest["files"] + data,
-        "file_stats": {**manifest.get("file_stats", {}), **stats},
-        "file_added_at": added_at,
-        "delete_files": existing
-        + [{"paths": tomb, "version": version, "key": key_col}],
-    }
-    _atomic_write_manifest(path, version, new_manifest)
-    return version
+    return _commit(
+        path,
+        "upsert",
+        _stage(df, path, "snap"),
+        df.schema.json(),
+        stats_cols,
+        tombstone=(df, key_col),
+    )
 
 
 def mor_upsert_foreach_batch(
@@ -395,11 +364,7 @@ def scan_snapshot(
     not order against the recorded stat's keeps the file rather than
     pruning on a meaningless cross-type comparison.
     """
-    versions = snapshot_versions(path)
-    if not versions:
-        raise ValueError(f"no committed snapshots at {path}")
-    v = versions[-1] if version is None else version
-    manifest = _load_manifest(path, v)
+    _, manifest = _resolve(path, version)
     stats = manifest.get("file_stats", {})
 
     def keep(f: str) -> bool:
@@ -462,9 +427,8 @@ def add_bloom_index(
     col: str,
     bits: int = 16384,
     k: int = 5,
-    version: int | None = None,
 ) -> int:
-    """Build a per-file Bloom filter over ``col`` for a committed
+    """Build a per-file Bloom filter over ``col`` for the latest
     version and commit it as a NEW metadata-only version (op
     ``index`` — same files, same stats, plus the index).  Point
     lookups through :func:`lookup_snapshot` then open only the files
@@ -483,11 +447,7 @@ def add_bloom_index(
     """
     from pyspark.sql import functions as F
 
-    versions = snapshot_versions(path)
-    if not versions:
-        raise ValueError(f"no committed snapshots at {path}")
-    v = versions[-1] if version is None else version
-    manifest = _load_manifest(path, v)
+    _, manifest = _resolve(path)
     if not manifest["files"]:
         words = []
     else:
@@ -513,8 +473,7 @@ def add_bloom_index(
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(manifest["schema"]))
-    bloom = manifest.get("bloom", {})
-    bloom[col] = {
+    entry = {
         "bits": bits,
         "k": k,
         # probe literals must hash EXACTLY like the stored column —
@@ -523,16 +482,7 @@ def add_bloom_index(
         "type": schema[col].dataType.simpleString(),
         "files": {f: index.get(f, {}) for f in manifest["files"]},
     }
-    new_version = versions[-1] + 1
-    new_manifest = {
-        **manifest,
-        "version": new_version,
-        "parent": v,
-        "op": "index",
-        "bloom": bloom,
-    }
-    _atomic_write_manifest(path, new_version, new_manifest)
-    return new_version
+    return _commit(path, "index", bloom=(col, entry))
 
 
 def lookup_snapshot(
@@ -551,11 +501,7 @@ def lookup_snapshot(
     negatives."""
     from pyspark.sql import functions as F
 
-    versions = snapshot_versions(path)
-    if not versions:
-        raise ValueError(f"no committed snapshots at {path}")
-    v = versions[-1] if version is None else version
-    manifest = _load_manifest(path, v)
+    _, manifest = _resolve(path, version)
     entry = manifest.get("bloom", {}).get(col)
     files = manifest["files"]
     if entry and files:
@@ -606,14 +552,12 @@ def read_snapshot_appended(
     "new rows" would double-process data.  Metadata-only commits
     (``index``) contribute no files and pass through.
     """
-    versions = snapshot_versions(path)
-    if since_version not in versions:
-        raise ValueError(f"version {since_version} not in {versions}")
-    v = versions[-1] if version is None else version
-    if v not in versions or v < since_version:
+    _, old = _resolve(path, since_version)
+    v, new = _resolve(path, version)
+    if v < since_version:
         raise ValueError(f"bad target version {v} (since={since_version})")
     # walk the commit chain (since, v]: every op must be additive
-    for mid in versions:
+    for mid in snapshot_versions(path):
         if since_version < mid <= v:
             op = _load_manifest(path, mid).get("op")
             if op not in ("append", "index"):
@@ -621,15 +565,12 @@ def read_snapshot_appended(
                     f"version {mid} is op={op!r}: the file-set delta is "
                     "not an insert set — use snapshot_diff"
                 )
-    old = set(_load_manifest(path, since_version)["files"])
-    new_manifest = _load_manifest(path, v)
-    added = [f for f in new_manifest["files"] if f not in old]
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(new_manifest["schema"]))
-    if not added:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*added)
+    old_files = set(old["files"])
+    # the added files are sequenced after every tombstone the chain
+    # carries, so the merge-on-read plan reads them as they are
+    return _read_manifest_files(
+        spark, new, [f for f in new["files"] if f not in old_files]
+    )
 
 
 def version_asof(path: str, ts: float) -> int:
@@ -666,18 +607,10 @@ def expire_snapshots(path: str, keep_last: int = 1) -> dict:
             referenced.update(d["paths"])  # tombstones are data too
     for v in drop:
         os.remove(_manifest_path(path, v))
-    from urllib.parse import urlparse
-
-    def _local(p: str) -> str:
-        return urlparse(p).path if p.startswith("file:") else p
-
-    referenced = {_local(p) for p in referenced}
-
-    def _is_referenced(p: str) -> bool:
-        return p in referenced
-
+    referenced = {_local_path(p) for p in referenced}
     deleted = 0
-    data_root = os.path.join(path, "data")
+    # walked as absolute paths: the references are absolute URIs
+    data_root = os.path.join(os.path.abspath(path), "data")
     if os.path.isdir(data_root):
         import shutil
 
@@ -689,7 +622,7 @@ def expire_snapshots(path: str, keep_last: int = 1) -> dict:
                 for name in names:
                     p = os.path.join(root, name)
                     if name.endswith(".parquet"):
-                        if _is_referenced(p):
+                        if p in referenced:
                             kept_any = True
                         else:
                             doomed.append(p)
@@ -862,23 +795,16 @@ def write_snapshot_audited(
     published (re-read, not the incoming plan), so what was audited
     IS what readers see.
     """
-    import uuid as _uuid
-
     from real_time_data_analytics_cassandra_spark.operators.expectations import (
         row_checks,
     )
 
-    commit_dir = os.path.join(path, "data", f"snap-{_uuid.uuid4().hex}")
-    df.write.mode("error").parquet(commit_dir)
-    spark = df.sparkSession
-    staged = spark.read.schema(df.schema).parquet(commit_dir)
+    files = _stage(df, path, "snap")
+    staged = df.sparkSession.read.schema(df.schema).parquet(*files)
     report = [r.asDict() for r in row_checks(staged, checks).collect()]
     if any(not r["passed"] for r in report):
         raise AuditFailed(report)
-    version = _commit_files(
-        spark, path, sorted(staged.inputFiles()), df.schema.json(), mode
-    )
-    return version, report
+    return _commit(path, mode, files, df.schema.json()), report
 
 
 def audited_snapshot_foreach_batch(
@@ -929,62 +855,73 @@ def audited_snapshot_foreach_batch(
     return start_available_now(stream, step, checkpoint)
 
 
-def _commit_files(
-    spark: SparkSession,
+def _commit(
     path: str,
-    new_files: list,
-    schema_json: str,
-    mode: str,
-    file_stats: dict | None = None,
+    op: str,
+    files: list = (),
+    schema_json: str | None = None,
+    stats_cols: tuple = (),
+    tombstone: tuple | None = None,
+    bloom: tuple | None = None,
 ) -> int:
-    """Manifest-commit already-staged files (the shared tail of
-    write_snapshot and write_snapshot_audited)."""
+    """Commit the next version on top of the latest one — the one
+    place a manifest is built.  ``files`` are this commit's staged
+    data files and ``schema_json`` their schema; ``tombstone`` is an
+    equality delete ``(keys_df, key_col)``, staged here; ``bloom`` is
+    one ``(col, entry)`` index entry.  Returns the new version.
+
+    ``overwrite`` (and a table's first commit) starts a fresh file
+    list.  Every other op carries the parent forward:
+    - files, with their recorded stats (files are immutable, so the
+      parent's stats stay valid forever);
+    - the schema as the FIELD UNION of parent and commit (parquet
+      fills absent columns with null at read), so adding a column is
+      one commit and dropping one from a batch can never erase it
+      from history; a TYPE change is refused — that needs a rewrite;
+    - the merge-on-read bookkeeping: new files are SEQUENCED at this
+      version, so earlier tombstones never apply to them, while this
+      commit's tombstone applies to every file sequenced below it;
+    - the Bloom index: its per-file words never change, and new files
+      fall back to must-scan in :func:`lookup_snapshot`."""
     versions = snapshot_versions(path)
     parent = versions[-1] if versions else None
-    files = list(new_files)
-    stats = dict(file_stats or {})
-    added_at: dict = {}
-    delete_files: list = []
-    bloom: dict = {}
-    if mode == "append" and parent is not None:
-        pm = _load_manifest(path, parent)
-        files = pm["files"] + files
-        # the parent's Bloom index stays valid across an append: its
-        # per-file words never change (files are immutable) and the
-        # new files simply fall back to must-scan via the
-        # entry['files'].get(f) is None path in lookup_snapshot —
-        # dropping it here would silently degrade every subsequent
-        # point lookup to a full-file scan
-        bloom = dict(pm.get("bloom", {}))
-        # retained files keep their recorded stats (files are
-        # immutable, so parent stats stay valid forever)
-        stats = {**pm.get("file_stats", {}), **stats}
-        # schema evolution: an append's schema is the FIELD UNION of
-        # parent and commit (parquet fills absent columns with null at
-        # read), so adding a column is one commit and dropping one
-        # from a batch can never erase it from history; a TYPE change
-        # is refused — that needs a rewrite, not an append
+    version = (parent or 0) + 1
+    pm = {} if parent is None or op == "overwrite" else _load_manifest(path, parent)
+    deletes = list(pm.get("delete_files", []))
+    if tombstone is not None:
+        keys_df, key_col = tombstone
+        # one equality key column per table: mixed-key tombstones
+        # would need per-delete join plans
+        if deletes and deletes[0]["key"] != key_col:
+            raise ValueError(
+                f"table already carries deletes on {deletes[0]['key']!r}; "
+                f"cannot mix with {key_col!r}"
+            )
+        tomb = _stage(keys_df.select(key_col).distinct(), path, "del")
+        deletes.append({"paths": tomb, "version": version, "key": key_col})
+    if schema_json is None:
+        schema_json = pm["schema"]
+    elif pm:
         schema_json = _merge_schema_json(pm["schema"], schema_json)
-        # merge-on-read bookkeeping: appended files are SEQUENCED at
-        # this commit, so earlier equality-delete commits never apply
-        # to them; the parent's delete list rides along untouched
-        added_at = dict(pm.get("file_added_at", {}))
-        delete_files = list(pm.get("delete_files", []))
-    version = (parent + 1) if parent is not None else 1
-    for f in new_files:
-        added_at[f] = version
+    stats = _file_column_stats(files, tuple(stats_cols)) if stats_cols else {}
     manifest = {
         "version": version,
         "parent": parent,
-        "op": mode,
+        "op": op,
         "schema": schema_json,
-        "files": files,
-        "file_stats": stats,
-        "file_added_at": added_at,
-        "delete_files": delete_files,
+        "files": pm.get("files", []) + list(files),
+        "file_stats": {**pm.get("file_stats", {}), **stats},
+        "file_added_at": {
+            **pm.get("file_added_at", {}),
+            **dict.fromkeys(files, version),
+        },
+        "delete_files": deletes,
     }
-    if bloom:
-        manifest["bloom"] = bloom
+    index = dict(pm.get("bloom", {}))
+    if bloom is not None:
+        index[bloom[0]] = bloom[1]
+    if index:
+        manifest["bloom"] = index
     _atomic_write_manifest(path, version, manifest)
     return version
 
@@ -1011,11 +948,10 @@ def _merge_schema_json(parent_json: str, new_json: str) -> str:
 
 
 def _atomic_write_manifest(path: str, version: int, manifest: dict) -> None:
-    import time as _time
-
     # commit wall time: METADATA ONLY (never part of query results) —
-    # it powers AS-OF resolution, retention policies, and ops readouts
-    manifest.setdefault("committed_at", _time.time())
+    # it powers AS-OF resolution, retention policies, and ops readouts;
+    # stamped here, so no commit inherits its parent's time
+    manifest = {**manifest, "committed_at": time.time()}
     mdir = os.path.join(path, _MANIFEST_DIR)
     os.makedirs(mdir, exist_ok=True)
     tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex}")
@@ -1060,10 +996,8 @@ def snapshot_health(path: str) -> dict:
     files = m["files"]
     total = 0
     for f in files:
-        local = f[len("file:") :] if f.startswith("file:") else f
-        local = local[2:] if local.startswith("//") else local
         try:
-            total += os.path.getsize(local)
+            total += os.path.getsize(_local_path(f))
         except OSError:
             pass
     deletes = m.get("delete_files", [])

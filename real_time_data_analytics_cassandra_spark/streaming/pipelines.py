@@ -126,70 +126,6 @@ def session_window_counts(
     )
 
 
-def latest_upsert_stream(events: DataFrame) -> DataFrame:
-    """True streaming upsert view of the latest event per user —
-    the reference's ``customer_latest_info`` table semantics
-    (cassandra_subscriber.py:124-144, SURVEY.md ST6) as an
-    arbitrarily-stateful operator (applyInPandasWithState).
-
-    State per key = the argmax-by-(ts, event_id) row seen so far
-    (timestamps held as int64 micros in state for Arrow stability);
-    each micro-batch emits the keys whose latest row changed
-    (update-mode semantics).  State is O(1) per key — the 100 TB
-    concern is key cardinality only, same as the reference's table.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = (
-        "user_id bigint, ts timestamp, event_id bigint, "
-        "event_type string, value double, props string"
-    )
-    state_schema = (
-        "ts_us bigint, event_id bigint, event_type string, value double, props string"
-    )
-
-    def update(key, pdfs, state):
-        import numpy as np
-        import pandas as pd
-
-        best = tuple(state.get) if state.exists else None
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            # vectorized argmax by (ts, event_id): one lexsort per
-            # Arrow batch instead of a per-row Python loop
-            ts_us = pdf["ts"].to_numpy("datetime64[us]").astype("int64")
-            ev = pdf["event_id"].to_numpy()
-            top = np.lexsort((ev, ts_us))[-1]
-            cand = (
-                int(ts_us[top]),
-                int(ev[top]),
-                pdf["event_type"].iat[top],
-                float(pdf["value"].iat[top]),
-                pdf["props"].iat[top],
-            )
-            if best is None or (cand[0], cand[1]) > (best[0], best[1]):
-                best = cand
-        if best is not None:
-            state.update(best)
-            yield pd.DataFrame(
-                [
-                    {
-                        "user_id": key[0],
-                        "ts": pd.Timestamp(best[0] * 1000),
-                        "event_id": best[1],
-                        "event_type": best[2],
-                        "value": best[3],
-                        "props": best[4],
-                    }
-                ]
-            )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
 def transition_log_stream(events: DataFrame) -> DataFrame:
     """Streaming event-type transition log: one output row per
     observed (prev_type -> next_type) step in each user's event
@@ -251,22 +187,22 @@ def transition_log_stream(events: DataFrame) -> DataFrame:
 
 
 def latest_upsert_stream_jvm(events: DataFrame) -> DataFrame:
-    """JVM fast path for the ST6 latest-row upsert: the per-key
+    """True streaming upsert view of the latest event per user — the
+    reference's ``customer_latest_info`` table semantics
+    (cassandra_subscriber.py:124-144, SURVEY.md ST6).  The per-key
     reduction "keep the argmax row by (ts, event_id)" is exactly a
     max-like aggregate, so it runs as a plain streaming groupBy with
     ``max_by(payload, struct(ts, event_id))`` — whole-stage-codegen
-    JVM execution, no Python workers, no Arrow transfer, and the
-    same O(1)-per-key state via the built-in aggregation state store.
-    Update mode emits the keys whose latest row changed, identical to
-    ``latest_upsert_stream``.
+    JVM execution, no Python workers, no Arrow transfer, and O(1)
+    state per key via the built-in aggregation state store (the
+    100 TB concern is key cardinality only, same as the reference's
+    table).  Update mode emits the keys whose latest row changed.
 
-    Use this whenever the tie-break is argmax by orderable columns
-    (always true for the reference's customer_latest_info —
-    cassandra_subscriber.py:124-144); keep the
-    applyInPandasWithState general case for per-key reductions that
-    are NOT expressible as a max-like aggregate (e.g. conditional
-    merge of partial columns).  Tests assert the two paths and the
-    batch argmax produce identical final states."""
+    A per-key reduction that is NOT expressible as a max-like
+    aggregate (e.g. conditional merge of partial columns) needs an
+    arbitrary-state operator instead — see ``transition_log_stream``
+    (applyInPandasWithState).  Tests assert the final state equals
+    the batch argmax (operators/latest.py)."""
     best = F.max_by(
         F.struct("ts", "event_id", "event_type", "value", "props"),
         F.struct("ts", "event_id"),
@@ -429,7 +365,7 @@ def user_stats_stream_tws(events: DataFrame) -> DataFrame:
     """Per-user running stats on the transformWithState API (Spark 4
     state v2: typed state variables on the RocksDB store) — the
     modern custom-stateful-operator surface, complementing
-    ``applyInPandasWithState`` (state v1, latest_upsert_stream).
+    ``applyInPandasWithState`` (state v1, transition_log_stream).
 
     State per key is one typed value-state record (n, cents, last_us)
     — O(1) per key like the v1 path, but declared through the handle
@@ -450,8 +386,8 @@ def user_stats_stream_tws(events: DataFrame) -> DataFrame:
     skips only when no protobuf can be found at all —
     tests/conftest.py::_ensure_protobuf also discovers pure-python
     copies bundled inside other locally-installed tooling and shims
-    them onto PYTHONPATH before the JVM starts, so the path runs in
-    this sandbox too; ``latest_upsert_stream`` (state v1,
+    them onto PYTHONPATH before the JVM starts, so the path runs
+    wherever such a copy exists; ``transition_log_stream`` (state v1,
     applyInPandasWithState) is the dependency-free custom-stateful
     path and stays the gated one.
     """

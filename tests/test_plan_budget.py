@@ -300,13 +300,31 @@ def test_job_budget_holds(spark, name):
     )
 
 
-def test_incremental_ingest_dedup_leaves_no_cached_relation(spark):
-    """``dedup.incremental_near_dups`` materializes each side's shingle
-    pass as a lazy local checkpoint, not a cached relation, so a forced
-    run leaves nothing in the session's CacheManager (the checkpoint
-    blocks go with the result)."""
+@pytest.mark.parametrize(
+    "name",
+    [
+        "incremental_ingest_dedup",
+        "ngram_jaccard",
+        "ngram_jaccard_prefix",
+        "minhash_lsh",
+        "simhash_near_dup",
+        "containment_near_dup",
+        "tfidf_top_terms",
+        "bm25_search",
+        "hybrid_search_rrf",
+        "nb_lang_classifier",
+        "pipeline_retention_funnel",
+        "lm_quality_buckets",
+    ],
+)
+def test_query_leaves_no_cached_relation(spark, name):
+    """Queries that reuse an intermediate relation (a shingle pass, a
+    tf table, a funnel stage, a score table) materialize it as a lazy
+    local checkpoint, not a cached relation, so a forced run leaves
+    nothing in the session's CacheManager (the checkpoint blocks go
+    with the result).  One query per operator that reuses one."""
     spark.catalog.clearCache()
-    q.queries()["incremental_ingest_dedup"](spark, SF_SMOKE).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    q.queries()[name](spark, SF_SMOKE).write.format("noop").mode(
+        "overwrite"
+    ).save()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

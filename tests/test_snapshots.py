@@ -58,7 +58,9 @@ def test_crashed_write_is_invisible(spark, tmp_path):
 
 
 def test_expire_keeps_shared_files_of_retained_versions(spark, tmp_path):
-    path = str(tmp_path / "t")
+    # a relative table path: expiry matches the files it walks against
+    # the manifests' absolute URIs
+    path = os.path.relpath(tmp_path / "t")
     snap.write_snapshot(_df(spark, 0, 5), path, mode="append")
     snap.write_snapshot(_df(spark, 5, 8), path, mode="append")
     snap.write_snapshot(_df(spark, 8, 9), path, mode="append")
@@ -669,6 +671,24 @@ def test_version_asof_resolves_by_commit_time(spark, tmp_path):
     ) == [0, 1, 2]
     with pytest.raises(ValueError, match="no version"):
         snap.version_asof(path, 0.0)
+    # delete, upsert and index commits stamp their own commit time, so
+    # none of them resolves as of a moment before it was committed
+    path = str(tmp_path / "t2")
+    w1 = snap.write_snapshot(_df(spark, 0, 6), path)
+    t_mid = time.time()
+    time.sleep(0.01)
+    snap.delete_from_snapshot(
+        spark, spark.createDataFrame([(1,)], "id long"), path, "id"
+    )
+    snap.upsert_into_snapshot(
+        spark, spark.createDataFrame([(2, 0)], "id long, v long"), path, "id"
+    )
+    snap.add_bloom_index(spark, path, "id")
+    assert snap.version_asof(path, t_mid) == w1
+    assert _ids(
+        snap.read_snapshot(spark, path, snap.version_asof(path, t_mid))
+    ) == list(range(6))
+    assert _ids(snap.read_snapshot(spark, path)) == [0, 2, 3, 4, 5]
 
 
 def test_bloom_index_survives_plain_append(spark, tmp_path):

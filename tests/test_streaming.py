@@ -19,7 +19,6 @@ from real_time_data_analytics_cassandra_spark.sources.streams import (
 )
 from real_time_data_analytics_cassandra_spark.streaming.pipelines import (
     hourly_type_counts,
-    latest_upsert_stream,
     latest_upsert_stream_jvm,
     multicast_foreach_batch,
     run_available_now,
@@ -63,35 +62,10 @@ def test_session_window_matches_manual_sessionize(spark):
     assert manual == builtin
 
 
-def test_latest_upsert_stream_matches_batch_argmax(spark):
-    """The stateful streaming upsert view (ST6) over a bounded replay
-    must equal the batch latest-per-key argmax (A5)."""
-    stream = bounded_event_stream(spark, SF_SMOKE)
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            latest_upsert_stream(stream)
-            .writeStream.format("memory")
-            .queryName("latest_upsert_test")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        streamed = spark.table("latest_upsert_test")
-        # update mode re-emits a key per micro-batch; keep the final row per key
-        final = latest_per_key(streamed, ["user_id"], "ts", ["event_id"])
-        batch = latest_per_key(
-            table(spark, SF_SMOKE, "events"), ["user_id"], "ts", ["event_id"]
-        ).select("user_id", "ts", "event_id", "event_type", "value", "props")
-        assert _rows(final.select(*batch.columns)) == _rows(batch)
-
-
 def test_latest_upsert_jvm_fast_path_matches_general_case(spark):
-    """The max_by JVM fast path and the applyInPandasWithState
-    general case must converge to the SAME final state (and to the
-    batch argmax) over the bounded replay — the fast path is a pure
-    execution-strategy swap, not a semantics change."""
+    """The max_by JVM streaming upsert must converge to the general
+    case, the batch argmax (A5), over the bounded replay — the stream
+    is an execution-strategy swap, not a semantics change."""
     batch = latest_per_key(
         table(spark, SF_SMOKE, "events"), ["user_id"], "ts", ["event_id"]
     ).select("user_id", "ts", "event_id", "event_type", "value", "props")

@@ -41,11 +41,8 @@ SCRATCH_PREFIXES = (
     "rtdac_annappend_",
     "rtdac_annfresh_",
     "rtdac_annidx_",
-    "rtdac_bloomq_",
     "rtdac_ckpt_",  # every stream checkpoint and fold-into-table scratch
     "rtdac_corrtest_",
-    "rtdac_mor_",
-    "rtdac_rangeq_",
     "rtdac_sketch_stream_",
     "rtdac_sketch_tbl_",
     "rtdac_span_stream_",
