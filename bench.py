@@ -132,10 +132,13 @@ def warm_session(spark, sf_dir: str) -> None:
 def time_query(spark, registry, name: str, sf_dir: str) -> float:
     """Seconds to force one cold run of registry[name].  The SQL cache
     is cleared first: Spark's CacheManager matches canonicalized plans,
-    so a .cache() populated by an earlier sample — of this query or of
-    another sharing the pass, as minhash_lsh and cross_source_dup_matrix
-    share one shingle pass — would serve this one warm and the timing
-    would be cache-hit time, not the query."""
+    so a relation an earlier sample left persisted would serve this one
+    warm and the timing would be cache-hit time, not the query.  The
+    package's reused intermediates are lazy local checkpoints, which
+    the CacheManager does not hold; its one ``persist``
+    (``sketches.verified_heavy_hitters``) unpersists in a ``finally``,
+    and ``clearCache()`` guards the sample should that release ever be
+    skipped."""
     spark.catalog.clearCache()
     t0 = time.monotonic()
     force(registry[name](spark, sf_dir))

@@ -6,6 +6,34 @@ hand-tuned partition counts at 100 TB), shuffle partitions sized from
 the available cores, Arrow enabled for the few pandas-UDF operators,
 and session timezone pinned to UTC so time-bucket strings are
 identical to the DuckDB oracle regardless of host timezone.
+
+The driver JVM that ``get_spark`` launches gets one option set,
+``_DRIVER_JVM_PROFILE``, as ``spark.driver.defaultJavaOptions``: that
+JVM serves the subscriber and the REST API for the life of the app,
+so its resident memory is the engine's serving footprint.
+
+- ``-XX:+UseParallelGC``: G1 moves eden across the whole committed
+  heap, so with ``-Xms`` equal to ``-Xmx`` every heap page becomes
+  resident; the parallel collector's young generation is a third of
+  the heap and old-generation pages are touched only by promotion.
+  A bench-shaped driver (``-Xms1g``, 4-core host) went from about
+  1.76 GB to about 1.22 GB peak RSS (PERFNOTES.md, "One driver-JVM
+  profile").
+- ``-XX:MetaspaceSize=256m``: the engine loads about 25k classes
+  (about 145 MB of metaspace).  From the default 21 MB threshold the
+  parallel collector runs a stop-the-world full GC each time metaspace
+  reaches its (growing) threshold; a threshold above the engine's
+  class footprint removes those.  A heap that is still growing (no
+  ``-Xms``) pays full collections of another kind, "Ergonomics", as
+  the old generation expands: 8-9 per sf0.1 micro-bench run on the
+  same host, up to 0.76 s each (PERFNOTES.md).
+
+Spark puts ``defaultJavaOptions`` in front of
+``spark.driver.extraJavaOptions``, so a caller's own options (a heap
+floor, a GC log) still apply, and a later option of the caller's
+wins.  Only the JVM this factory starts changes: a foreign session
+(the verification driver's) keeps its JVM, and cluster-mode
+executors, whose heaps may be large and suit G1, keep theirs.
 """
 
 from __future__ import annotations
@@ -38,6 +66,9 @@ _WORKER_THREAD_PIN = {
 # inherits the driver env) see the pins even without executorEnv.
 for _k, _v in _WORKER_THREAD_PIN.items():
     os.environ.setdefault(_k, _v)
+
+# The driver JVM's collector and metaspace threshold (module docstring)
+_DRIVER_JVM_PROFILE = "-XX:+UseParallelGC -XX:MetaspaceSize=256m"
 
 
 def _cpus() -> str:
@@ -78,6 +109,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * _MB))
         .config("spark.sql.files.maxPartitionBytes", str(128 * _MB))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.defaultJavaOptions", _DRIVER_JVM_PROFILE)
         .config("spark.ui.enabled", "false")
     )
     # cluster-mode path for the same pin: executorEnv reaches the

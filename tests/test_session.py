@@ -1,11 +1,13 @@
 """Session factory: the executorEnv thread pins survive a caller that
-deleted a pinned variable after import, and the core count falls back
-to the host's when ``SPARK_GRAFT_CPUS`` is unset."""
+deleted a pinned variable after import, the core count falls back
+to the host's when ``SPARK_GRAFT_CPUS`` is unset, and the driver JVM
+runs the engine's collector profile beside a caller's own options."""
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import SparkSession
 
 from real_time_data_analytics_cassandra_spark.session import get_spark
@@ -26,3 +28,31 @@ def test_get_spark_sizes_from_host_cpus_when_unset(monkeypatch):
     opts = get_spark()
     assert opts["spark.master"] == f"local[{os.cpu_count()}]"
     assert opts["spark.sql.shuffle.partitions"] == str(os.cpu_count())
+
+
+# a caller's extraJavaOptions (a heap floor here) sit beside the
+# profile, not in its place
+@pytest.mark.parametrize("extra", [None, {"spark.driver.extraJavaOptions": "-Xms1g"}])
+def test_get_spark_sets_driver_jvm_profile(monkeypatch, extra):
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: self._options)
+    opts = get_spark(extra_conf=extra)
+    assert opts["spark.driver.defaultJavaOptions"] == (
+        "-XX:+UseParallelGC -XX:MetaspaceSize=256m"
+    )
+    if extra:
+        assert opts["spark.driver.extraJavaOptions"] == "-Xms1g"
+
+
+def test_driver_jvm_runs_the_profile(spark):
+    # the fixture's JVM was launched by get_spark: its collector beans
+    # and metaspace threshold are the profile's
+    jvm = spark.sparkContext._jvm
+    mf = jvm.java.lang.management.ManagementFactory
+    assert sorted(b.getName() for b in mf.getGarbageCollectorMXBeans()) == [
+        "PS MarkSweep",
+        "PS Scavenge",
+    ]
+    hotspot = mf.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert hotspot.getVMOption("MetaspaceSize").getValue() == str(256 * 1024 * 1024)
