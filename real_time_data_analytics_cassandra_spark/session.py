@@ -7,33 +7,18 @@ the available cores, Arrow enabled for the few pandas-UDF operators,
 and session timezone pinned to UTC so time-bucket strings are
 identical to the DuckDB oracle regardless of host timezone.
 
-The driver JVM that ``get_spark`` launches gets one option set,
-``_DRIVER_JVM_PROFILE``, as ``spark.driver.defaultJavaOptions``: that
-JVM serves the subscriber and the REST API for the life of the app,
-so its resident memory is the engine's serving footprint.
-
-- ``-XX:+UseParallelGC``: G1 moves eden across the whole committed
-  heap, so with ``-Xms`` equal to ``-Xmx`` every heap page becomes
-  resident; the parallel collector's young generation is a third of
-  the heap and old-generation pages are touched only by promotion.
-  A bench-shaped driver (``-Xms1g``, 4-core host) went from about
-  1.76 GB to about 1.22 GB peak RSS (PERFNOTES.md, "One driver-JVM
-  profile").
-- ``-XX:MetaspaceSize=256m``: the engine loads about 25k classes
-  (about 145 MB of metaspace).  From the default 21 MB threshold the
-  parallel collector runs a stop-the-world full GC each time metaspace
-  reaches its (growing) threshold; a threshold above the engine's
-  class footprint removes those.  A heap that is still growing (no
-  ``-Xms``) pays full collections of another kind, "Ergonomics", as
-  the old generation expands: 8-9 per sf0.1 micro-bench run on the
-  same host, up to 0.76 s each (PERFNOTES.md).
-
-Spark puts ``defaultJavaOptions`` in front of
-``spark.driver.extraJavaOptions``, so a caller's own options (a heap
-floor, a GC log) still apply, and a later option of the caller's
-wins.  Only the JVM this factory starts changes: a foreign session
-(the verification driver's) keeps its JVM, and cluster-mode
-executors, whose heaps may be large and suit G1, keep theirs.
+A caller that fixes the driver heap (an ``-Xms`` in the
+``spark.driver.extraJavaOptions`` it passes, as a serving process
+does) gets ``-XX:NewRatio=5`` in front of those options: a young
+generation of a sixth of the heap.  Left alone, G1 grows eden to most
+of a fixed heap and moves it across the whole heap, which is then
+resident within two minutes; with a fixed young generation the
+resident heap is the young generation plus what the old generation has
+reached.  The saving shrinks as the old generation fills over a long
+run (PERFNOTES.md, "One driver-JVM profile").  The collector stays the
+JDK's.  A heap that grows, a caller's own young-generation option (it
+comes later and wins), ``spark.driver.defaultJavaOptions`` and
+executor JVMs are left as they are.
 """
 
 from __future__ import annotations
@@ -67,8 +52,9 @@ _WORKER_THREAD_PIN = {
 for _k, _v in _WORKER_THREAD_PIN.items():
     os.environ.setdefault(_k, _v)
 
-# The driver JVM's collector and metaspace threshold (module docstring)
-_DRIVER_JVM_PROFILE = "-XX:+UseParallelGC -XX:MetaspaceSize=256m"
+# The young-generation size of a driver JVM whose heap the caller
+# fixes (module docstring)
+_FIXED_HEAP_YOUNG = "-XX:NewRatio=5"
 
 
 def _cpus() -> str:
@@ -109,7 +95,6 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * _MB))
         .config("spark.sql.files.maxPartitionBytes", str(128 * _MB))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.driver.defaultJavaOptions", _DRIVER_JVM_PROFILE)
         .config("spark.ui.enabled", "false")
     )
     # cluster-mode path for the same pin: executorEnv reaches the
@@ -118,7 +103,11 @@ def get_spark(
     # falls back to its pin)
     for k, pin in _WORKER_THREAD_PIN.items():
         builder = builder.config(f"spark.executorEnv.{k}", os.environ.get(k, pin))
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    java_opts = conf.get("spark.driver.extraJavaOptions", "")
+    if any(o.startswith("-Xms") for o in java_opts.split()):
+        conf["spark.driver.extraJavaOptions"] = f"{_FIXED_HEAP_YOUNG} {java_opts}"
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

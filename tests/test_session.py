@@ -1,11 +1,15 @@
 """Session factory: the executorEnv thread pins survive a caller that
 deleted a pinned variable after import, the core count falls back
-to the host's when ``SPARK_GRAFT_CPUS`` is unset, and the driver JVM
-runs the engine's collector profile beside a caller's own options."""
+to the host's when ``SPARK_GRAFT_CPUS`` is unset, and a driver JVM
+whose heap the caller fixes gets a bounded young generation."""
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import SparkSession
@@ -30,29 +34,63 @@ def test_get_spark_sizes_from_host_cpus_when_unset(monkeypatch):
     assert opts["spark.sql.shuffle.partitions"] == str(os.cpu_count())
 
 
-# a caller's extraJavaOptions (a heap floor here) sit beside the
-# profile, not in its place
-@pytest.mark.parametrize("extra", [None, {"spark.driver.extraJavaOptions": "-Xms1g"}])
-def test_get_spark_sets_driver_jvm_profile(monkeypatch, extra):
+# a caller that fixes the heap gets the young-generation ratio in front
+# of its own options; any other caller's options pass through as given
+@pytest.mark.parametrize(
+    "java_opts, want",
+    [
+        (None, None),
+        ("-Xlog:gc", "-Xlog:gc"),
+        ("-Xms1g", "-XX:NewRatio=5 -Xms1g"),
+    ],
+)
+def test_get_spark_bounds_young_gen_of_fixed_heap_driver(monkeypatch, java_opts, want):
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: self._options)
+    extra = {"spark.driver.extraJavaOptions": java_opts} if java_opts else None
     opts = get_spark(extra_conf=extra)
-    assert opts["spark.driver.defaultJavaOptions"] == (
-        "-XX:+UseParallelGC -XX:MetaspaceSize=256m"
-    )
-    if extra:
-        assert opts["spark.driver.extraJavaOptions"] == "-Xms1g"
+    assert opts.get("spark.driver.extraJavaOptions") == want
+    assert "spark.driver.defaultJavaOptions" not in opts
 
 
-def test_driver_jvm_runs_the_profile(spark):
-    # the fixture's JVM was launched by get_spark: its collector beans
-    # and metaspace threshold are the profile's
+def _new_ratio(spark) -> list[str]:
+    """The driver JVM's NewRatio value and where it was set."""
     jvm = spark.sparkContext._jvm
-    mf = jvm.java.lang.management.ManagementFactory
-    assert sorted(b.getName() for b in mf.getGarbageCollectorMXBeans()) == [
-        "PS MarkSweep",
-        "PS Scavenge",
-    ]
-    hotspot = mf.getPlatformMXBean(
+    hotspot = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
         jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
     )
-    assert hotspot.getVMOption("MetaspaceSize").getValue() == str(256 * 1024 * 1024)
+    opt = hotspot.getVMOption("NewRatio")
+    return [opt.getValue(), opt.getOrigin().toString()]
+
+
+_FIXED_HEAP_PROBE = """
+import json
+from real_time_data_analytics_cassandra_spark.session import get_spark
+from tests.test_session import _new_ratio
+s = get_spark(master="local[1]", extra_conf={
+    "spark.driver.memory": "512m",
+    "spark.driver.extraJavaOptions": "-Xms512m",
+    "spark.ui.showConsoleProgress": "false",
+})
+print(json.dumps(_new_ratio(s)))
+s.stop()
+"""
+
+
+def test_driver_jvm_young_gen_follows_the_heap(spark):
+    # the fixture's heap grows (no -Xms): the JVM's own default
+    assert _new_ratio(spark)[1] == "DEFAULT"
+    # a fixed heap gets the ratio; one JVM per Python process, so it
+    # is launched from a child
+    root = Path(__file__).resolve().parent.parent
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (str(root), env.get("PYTHONPATH")) if p)
+    out = subprocess.run(
+        [sys.executable, "-c", _FIXED_HEAP_PROBE],
+        cwd=root,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert json.loads(out.stdout.strip().splitlines()[-1]) == ["5", "VM_CREATION"]
